@@ -478,90 +478,6 @@ GROUP BY id
 """
 
 
-def connected_components(
-    nodes: DataFrame, edges: DataFrame, max_iter: int = 16
-) -> DataFrame:
-    """Connected components by min-label propagation with pointer jumping.
-
-    ``nodes`` has column ``id``; ``edges`` has ``src``/``dst`` (undirected
-    — both directions are added here). Each round every node takes the
-    min of its own label and its neighbors' labels, then compresses one
-    indirection: label <- label(label). Plain propagation alone moves the
-    component minimum ONE hop per round — a chain longer than max_iter
-    hops would come back silently mislabeled (transitive near-dup chains
-    are exactly how such paths arise). The jump step collapses label
-    chains geometrically, so convergence is O(log n) rounds for any
-    topology, and 16 rounds cover any component that fits in storage.
-    If the loop still exits unconverged, this RAISES instead of
-    returning wrong labels. The convergence probe is a
-    ``limit(1).count()`` action per round — the only driver-side data is
-    that single number.
-
-    Scale: each round is one shuffle (groupBy ``src``) plus two key
-    joins; ``localCheckpoint`` truncates lineage so plans stay flat
-    across rounds. Near-dup graphs have tiny diameters (dup clusters are
-    near-cliques), so rounds ~ 2-3 in practice; the same O(log n) bound
-    is what the large-star/small-star formulation (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond") provides."""
-    # lazy checkpoints: lineage still truncates, materialization rides
-    # the first action that needs the data (r18 — one job per round)
-    sym = edges.select("src", "dst").union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
-    labels = nodes.select("id", F.col("id").alias("label")).localCheckpoint(
-        eager=False
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr = (
-            sym.join(labels, sym["dst"] == labels["id"])
-            .groupBy("src")
-            .agg(F.min("label").alias("nbr_label"))
-        )
-        propagated = (
-            labels.join(nbr, labels["id"] == nbr["src"], "left")
-            .select(
-                labels["id"],
-                F.least(
-                    labels["label"], F.coalesce(nbr["nbr_label"], labels["label"])
-                ).alias("label"),
-            )
-        )
-        # pointer jump: labels are node ids, so label(label) is defined;
-        # one extra key join halves remaining chain length every round.
-        parent = propagated.select(
-            F.col("id").alias("_pid"), F.col("label").alias("_plabel")
-        )
-        new_labels = (
-            propagated.join(parent, propagated["label"] == parent["_pid"], "left")
-            .select(
-                propagated["id"],
-                F.least(
-                    propagated["label"],
-                    F.coalesce(F.col("_plabel"), propagated["label"]),
-                ).alias("label"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds — "
-            "labels would be silently wrong; raise max_iter"
-        )
-    return labels
-
-
 def large_star_small_star(
     nodes: DataFrame, edges: DataFrame, max_iter: int = 16
 ) -> DataFrame:
@@ -591,8 +507,8 @@ def large_star_small_star(
     with a bit-identical fixpoint (the min value attached is the same
     number either way). Lineage is truncated per round with
     localCheckpoint so plans stay flat. If the loop exits unconverged
-    this RAISES rather than returning wrong labels (the
-    connected_components posture). Returns (id, label)."""
+    this RAISES rather than returning wrong labels. Returns
+    (id, label)."""
     # Lazy checkpoints throughout (r18, guide §1.2/§5): localCheckpoint
     # still truncates lineage, but with eager=False the materialization
     # rides the convergence count() that immediately follows — ONE
@@ -682,7 +598,7 @@ def x2e_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = x2c_ngram_jaccard(spark, sf_dir).select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     )
-    labels = connected_components(nodes, pairs)
+    labels = large_star_small_star(nodes, pairs)
     return labels.select(
         F.col("id").cast("long").alias("doc_id"),
         F.col("label").cast("long").alias("cluster_id"),
@@ -692,11 +608,11 @@ def x2e_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # X2e2 — GLOBAL transitive-closure clusters via large-star/small-star ----------
 #
-# x2e resolves a 40-doc candidate graph with per-node label propagation;
-# x2e2 is the shape a 100 TB corpus needs: the edge set itself is
-# rewritten by the large-star/small-star operators, so no per-node
-# neighbor list or reachable set is ever materialized and convergence is
-# O(log n) EDGE-set rounds regardless of topology. The edge law here is
+# x2e closes a 40-doc candidate graph; x2e2 runs the same
+# large-star/small-star closure at the shape a 100 TB corpus needs: the
+# edge set itself is rewritten, so no per-node neighbor list or
+# reachable set is ever materialized and convergence is O(log n)
+# EDGE-set rounds regardless of topology. The edge law here is
 # a shared-evidence graph — two documents are linked when they share at
 # least _X2E2_MIN_SHARED distinct 3-token shingles — built by the same
 # inverted-index join every x2 candidate generator uses (gram -> doc
@@ -4149,10 +4065,7 @@ def knn_graph_from_cells(cells: DataFrame) -> DataFrame:
     # one score per unordered pair: the dot's k-th term a[k]*b[k] is
     # an IEEE product (commutative bit-for-bit), summed in the same
     # index order either way, so cos(a,b) == cos(b,a) exactly — the
-    # exploded reverse edge reuses it. HOF fold, not the flat codegen
-    # form: the r19 interleaved A/B read HOF faster on every fixture
-    # shape including this pair volume (each plan rebuild pays the
-    # flat form's expression compile; see dot_flat's docstring)
+    # exploded reverse edge reuses it
     cos = dot(F.col("a_emb"), F.col("b_emb")) / (
         F.col("a_nrm") * F.col("b_nrm")
     )
@@ -4198,8 +4111,9 @@ def knn_graph_from_cells(cells: DataFrame) -> DataFrame:
 def x3u_ivf_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 cosine neighbors for EVERY corpus vector, confined to its
     IVF cell: an i<j cell self-join scored once per pair by the
-    codegen'd flat dot, then a per-vector top-k window over the narrow
-    edge proxy — the kNN-graph primitive without an all-pairs stage."""
+    zip_with/aggregate dot fold, then a per-vector top-k window over the
+    narrow edge proxy — the kNN-graph primitive without an all-pairs
+    stage."""
     emb = Catalog(spark, sf_dir).embeddings
     centroids = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
@@ -5638,7 +5552,6 @@ def x3z2_post_split_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("q_id", "qemb", "qnrm", F.col("p.cid").alias("cid"))
     )
-    # HOF fold (r19 adjudication — see dot_flat's docstring)
     dotqe = dot(F.col("qemb"), F.col("emb"))
     # probes = queries x nprobe rows by construction — broadcast it so
     # the scoring join stays a broadcast cell equi-join (the x3z
@@ -6515,7 +6428,6 @@ def x3z6_post_merge_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("q_id", "qemb", "qnrm", F.col("p.cid").alias("cid"))
     )
-    # HOF fold (r19 adjudication — see dot_flat's docstring)
     dotqe = dot(F.col("qemb"), F.col("emb"))
     # probes = queries x nprobe rows by construction — broadcast them
     # so the scoring join stays a broadcast cell equi-join (the x3z2

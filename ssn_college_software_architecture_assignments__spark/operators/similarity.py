@@ -61,8 +61,8 @@ def sqdist(a: Column, b: Column) -> Column:
 
 
 def dot_int(a: Column, b: Column) -> Column:
-    """Integer dot product as the ordered HOF fold — exact in any
-    order, so bitwise-identical to the flat form by construction."""
+    """Integer dot product as the ordered HOF fold. Integer addition is
+    exact, so the result is independent of summation order."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
         F.lit(0).cast("long"),
@@ -71,104 +71,6 @@ def dot_int(a: Column, b: Column) -> Column:
 
 
 EMB_DIM = 64  # fixture embedding dimensionality (TESTDATA.md)
-
-
-def _size_guard(flat: Column, hof: Column, dim: int, *arrs: Column) -> Column:
-    """Dispatch flat-unrolled vs HOF form on the RUNTIME array size.
-
-    The flat forms below index ``a[0] .. a[dim-1]`` statically — under
-    ANSI mode that throws on any shorter array, and the planted-fixture
-    pytests legitimately drive the registered functions with tiny
-    (e.g. 4-dim) vectors. A CASE on ``size() == dim`` keeps the flat
-    branch (whole-stage-codegen'd) on conforming rows — the entire
-    production table — and falls back to the interpreted HOF fold
-    otherwise, which is bit-identical on any dim (same left-to-right
-    IEEE adds). CaseWhen branches evaluate lazily, and Spark's
-    subexpression elimination never hoists branch-only subtrees, so the
-    out-of-bounds index in the untaken flat branch cannot fire."""
-    cond = F.size(arrs[0]) == dim
-    for arr in arrs[1:]:
-        cond = cond & (F.size(arr) == dim)
-    return F.when(cond, flat).otherwise(hof)
-
-
-def dot_flat(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
-    """Dot product unrolled to a flat ``a[0]*b[0] + a[1]*b[1] + ...``
-    expression. Same left-to-right fold order as ``F.aggregate`` (so
-    results are bit-identical to :func:`dot`); the flat form compiles
-    inside whole-stage codegen while lambda HOFs evaluate interpreted.
-    Arrays whose runtime size differs from ``dim`` (planted mini
-    fixtures) take the HOF fold via :func:`_size_guard`.
-
-    NO REGISTERED CALLER since r19: a fresh-session interleaved A/B
-    over every consuming query (x3b/g/i/l/q/s/t, x2d/x2f, the x3x/x3z
-    maintenance family, x3u/x3v/x3w's pair joins, x4v) read the HOF
-    fold faster on ALL of them at fixture volumes — each rebuilt plan
-    pays the flat form's expression compile (a 64-term tree per
-    codegen stage, keyed on generated source that embeds expression
-    ids, so never cache-hit across rebuilds), which the per-row win
-    cannot recover below roughly millions of scored rows per build.
-    The flat helpers stay for production-scale volumes, where one
-    compile amortizes over billions of rows and the flat form wins
-    per-row; flipping a site back needs only the measurement, not a
-    new proof — the fold order makes results bit-identical either way
-    (OPTIMIZATION_r19.md)."""
-    out = a[0] * b[0]
-    for i in range(1, dim):
-        out = out + a[i] * b[i]
-    return _size_guard(out, dot(a, b), dim, a, b)
-
-
-def cosine_flat(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
-    return dot_flat(a, b, dim) / (
-        F.sqrt(dot_flat(a, a, dim)) * F.sqrt(dot_flat(b, b, dim))
-    )
-
-
-def l2_norm_flat(a: Column, dim: int = EMB_DIM) -> Column:
-    """Flat-unrolled L2 norm. Unconditionally bit-identical to
-    :func:`l2_norm` (not just same-fold-order): every x*x term is
-    non-negative, so even the 0.0-init edge (-0.0 vs +0.0 first term)
-    cannot arise. Same size-guard dispatch as :func:`dot_flat`."""
-    return F.sqrt(dot_flat(a, a, dim))
-
-
-def sqdist_flat(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
-    """Flat-unrolled squared L2 distance. Unconditionally bit-identical
-    to the (x-y)*(x-y) zip_with/aggregate fold: same left-to-right
-    order, and every term is non-negative so the 0.0-init edge cannot
-    arise.
-
-    Deliberately UNGUARDED (no :func:`_size_guard`): its only caller
-    (x3l) is never driven with non-``dim`` fixtures, and the guard is
-    not free — subexpression elimination cannot dedupe inside CaseWhen
-    branches, so if an input array is an inlined computed expression
-    the guarded form recomputes it per term (measured 4x WORSE than the
-    HOF fold on x3g). A dim mismatch fails loudly under ANSI
-    (INVALID_ARRAY_INDEX); add the guard if a planted-fixture caller
-    ever appears."""
-    out = (a[0] - b[0]) * (a[0] - b[0])
-    for i in range(1, dim):
-        out = out + (a[i] - b[i]) * (a[i] - b[i])
-    return out
-
-
-def dot_int_flat(a: Column, b: Column, dim: int = EMB_DIM) -> Column:
-    """Flat integer dot product: sum of (a[i]*b[i]) cast to long, the
-    codegen form of the zip_with/aggregate int fold. Integer addition is
-    associative and exact, so this is bitwise-identical to the HOF fold
-    in ANY order — no float edge cases at all.
-
-    Deliberately UNGUARDED — see :func:`sqdist_flat`: x3g's ``_q``
-    input is a heavy computed expression that projection collapse
-    inlines into every term; inside a CaseWhen branch those 128 copies
-    are not subexpression-eliminated (measured 61.8 s vs 2.6 s
-    unguarded at sf0.1), and no caller is driven with non-``dim``
-    fixtures."""
-    out = (a[0] * b[0]).cast("long")
-    for i in range(1, dim):
-        out = out + (a[i] * b[i]).cast("long")
-    return out
 
 
 # X3a — brute-force cosine top-k -----------------------------------------------
@@ -218,14 +120,6 @@ def x3_similarity_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            # HOF cosine DELIBERATELY (r18 re-measure): this query is
-            # 2000 corpus rows x 8 queries — at that volume the flat
-            # form's huge generated method pays more in codegen compile
-            # time than its per-row win returns (fresh-session A/B:
-            # HOF 0.44-0.60 s vs guarded-flat 1.4-1.9 s vs unguarded
-            # flat 1.4-1.6 s; the bench series read the flat version
-            # as a 0.64 -> 1.6 s regression). Results are bit-identical
-            # either way (same left-to-right fold).
             cosine(F.col("q_emb"), F.col("emb")).alias("cos_sim"),
         )
     )
@@ -466,13 +360,7 @@ def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest cell per corpus vector (rank over the K broadcast
     centroids). Factored out of :func:`_ivf_topk` because the
     assignment is nprobe-INDEPENDENT: x3p scores one assignment pass
-    against the widest probe set and derives every leg from it.
-
-    HOF cosine deliberately (r18 re-measure): at this query's volume
-    (2000 corpus rows x 16 centroids) the flat form's generated-code
-    compile time outweighs its per-row win — fresh-session A/B on the
-    full x3d shape read flat 3.9-4.3 s vs HOF 1.1-1.4 s. Results are
-    bit-identical either way (same left-to-right fold)."""
+    against the widest probe set and derives every leg from it."""
     emb = Catalog(spark, sf_dir).embeddings
     centroids = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cent_emb")
@@ -781,10 +669,8 @@ def x3g_similarity_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "q_id",
             "vec_id",
-            # flat integer dot (r18): exact in any order, so provably
-            # identical to the zip_with/aggregate fold — but codegen'd
             F.round(
-                dot_int_flat(F.col("_qa"), F.col("_q"))
+                dot_int(F.col("_qa"), F.col("_q"))
                 / F.sqrt(F.col("_aqq").cast("double") * F.col("_qq").cast("double")),
                 4,
             ).alias("cos_q"),
@@ -1010,7 +896,7 @@ def x3i_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     sliced = F.slice(_dvec("embedding"), 1, 16)
     vecs = (
         emb.select(
-            "vec_id", sliced.alias("emb"), l2_norm_flat(sliced, 16).alias("nrm")
+            "vec_id", sliced.alias("emb"), l2_norm(sliced).alias("nrm")
         )
         .filter(F.col("nrm") > 0)
     )
@@ -1019,7 +905,7 @@ def x3i_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("q_id"),
             sliced.alias("q_emb"),
-            l2_norm_flat(sliced, 16).alias("q_nrm"),
+            l2_norm(sliced).alias("q_nrm"),
         )
         .filter(F.col("q_nrm") > 0)
     )
@@ -1363,9 +1249,6 @@ def x3l_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = vecs.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
-    # HOF fold (r19 adjudication): the flat codegen form loses at
-    # fixture volumes — each rebuilt plan pays expression compile that
-    # the per-row win never recovers (see dot_flat's docstring)
     scored = (
         ensure_min_partitions(vecs)
         .crossJoin(F.broadcast(queries))

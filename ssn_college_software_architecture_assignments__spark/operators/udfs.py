@@ -257,6 +257,32 @@ def _asof_merge_kernel(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
     return out
 
 
+def _f5_bucket_count(spark: SparkSession, ev: DataFrame) -> int:
+    """Cogroup bucket count for f5: tracks DATA VOLUME, not core count
+    (guide §5). With buckets == cores, a 100 TB events table would
+    arrive as ONE pandas frame of ~1/cores of the table per cogroup
+    call. The optimizer's sizeInBytes estimate (parquet file size; no
+    extra job) caps per-bucket input at ``spark.ssn.f5.targetBucketBytes``;
+    the floor stays at defaultParallelism so small inputs keep one call
+    per core.
+
+    Unknown stats do not raise: Spark reports them as the
+    ``spark.sql.defaultSizeInBytes`` sentinel (Long.MaxValue by
+    default), which would ask for ~1.4e11 buckets. Any estimate at or
+    above that sentinel is treated as unknown and takes the floor."""
+    target = int(
+        spark.conf.get("spark.ssn.f5.targetBucketBytes", str(64 << 20))
+    )
+    floor = max(spark.sparkContext.defaultParallelism, 1)
+    est_bytes = int(
+        str(ev._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    )
+    unknown = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    if est_bytes >= unknown:
+        return floor
+    return max(floor, est_bytes // max(target, 1))
+
+
 @register("f5_cogrouped_asof", oracle=_F5_ORACLE, tags=("F2", "J8"))
 def f5_cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-table grouped map: cogroup purchases with clicks per user
@@ -264,33 +290,12 @@ def f5_cogrouped_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     face of the J8 as-of join, checked against the relational as-of
     law. Rounding stays OUT of the kernel (see _asof_merge_kernel)."""
     ev = Catalog(spark, sf_dir).events
-    # Cogroup on a HASH BUCKET of user_id, not user_id itself (r18,
-    # guide §4.5): one Python call per bucket amortizes the per-call
+    # Cogroup on a HASH BUCKET of user_id, not user_id itself (guide
+    # §4.5): one Python call per bucket amortizes the per-call
     # Arrow->pandas + merge_asof setup over many users; the kernel's
     # by="user_id" keeps the per-user as-of law bit-identical (the
     # bucket count only changes parallelism, never the result).
-    #
-    # r19 (guide §5): the bucket count tracks DATA VOLUME, not core
-    # count. With buckets == cores, a 100 TB events table would arrive
-    # as ONE pandas frame of ~1/cores of the table per cogroup call —
-    # the §5 Python-memory hazard the per-user form never had. The
-    # optimizer's sizeInBytes estimate (parquet file size; no extra
-    # job) caps per-bucket input at a conf-driven byte target; the
-    # floor stays at defaultParallelism so small inputs keep one call
-    # per core (the r18 amortization, and the exact r18 bucket count
-    # at fixture scales).
-    target = int(
-        spark.conf.get("spark.ssn.f5.targetBucketBytes", str(64 << 20))
-    )
-    try:
-        est_bytes = int(
-            str(ev._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
-        )
-    except Exception:  # stats unavailable: fall back to the core floor
-        est_bytes = 0
-    n_buckets = max(
-        spark.sparkContext.defaultParallelism, est_bytes // max(target, 1), 1
-    )
+    n_buckets = _f5_bucket_count(spark, ev)
     purchases = (
         ev.filter(F.col("event_type") == "purchase")
         .select("user_id", "event_id", "ts")

@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .scratch import run_scoped
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -436,43 +438,11 @@ def register(name: str, oracle: str | None = None, tags: tuple[str, ...] = ()):
         if name in _REGISTRY:
             raise ValueError(f"duplicate query registration: {name}")
 
-        # Registry-dispatch cache janitor: a handful of operators persist()
-        # multi-consumer subtrees (x3v's cells/truth, a16's per_key, the
-        # REST readers' page caches) and a long-lived session sweeping all
-        # ~260 queries would otherwise accumulate those tables in executor
-        # storage memory — retention is bounded two ways: each registry
-        # dispatch drops the previous query's cache before building its
-        # own (the r15 janitor), and every persist_scoped() frame created
-        # during the build additionally unpersists as soon as the caller
-        # drops its reference to the returned DataFrame (r19, guide §5 —
-        # blocks no longer outlive their own query waiting for the next
-        # dispatch). Direct module-level calls (tests, plan gates) are
-        # unaffected; gates clearCache themselves.
-        #
-        # CONTRACT: registry dispatch assumes build-then-MATERIALIZE per
-        # query (the driver's and check_oracle's loop shape). A runner
-        # that builds several registered queries before collecting any
-        # of them would have dispatch B unpersist A's persisted legs
-        # before A is forced — results stay correct (unpersisted frames
-        # recompute), but persist-guarded single-execution invariants
-        # (e.g. x3v's brute truth leg) silently degrade to recomputation
-        # and timings mislead. Force each query before dispatching the
-        # next, or call the underlying module function directly.
+        # Registry dispatch builds under run_scoped: the caches a query
+        # persists live exactly as long as the DataFrame it returns.
         @functools.wraps(fn)
         def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-            from .scratch import close_persist_scope, open_persist_scope
-
-            try:
-                spark.catalog.clearCache()
-            except Exception:
-                pass  # a stopped/foreign session must not mask the query
-            opened = open_persist_scope()
-            out = None
-            try:
-                out = fn(spark, sf_dir)
-                return out
-            finally:
-                close_persist_scope(opened, out)
+            return run_scoped(fn, spark, sf_dir)
 
         _REGISTRY[name] = QueryDef(
             name=name, fn=run, oracle=oracle, tags=tuple(tags), doc=fn.__doc__ or ""

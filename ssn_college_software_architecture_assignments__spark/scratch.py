@@ -1,27 +1,22 @@
-"""Process-lifetime scratch resources with guaranteed reclamation.
+"""Scratch resources with guaranteed reclamation: temp directories and
+query-internal caches.
 
 Every operator that needs an on-disk fixture (lake roots, stream
 checkpoints, bucketed-table warehouses, .env files) allocates through
 :func:`scratch_dir` instead of calling ``tempfile.mkdtemp`` directly.
-The returned directory lives until interpreter exit, then a single
-``atexit`` janitor removes everything — so repeated bench/oracle
-sweeps in one process no longer accumulate unbounded temp-dir litter
-(review-caught: t11/s20/s21 each leaked a lake + checkpoint pair per
-invocation).
+Directories are per-process: they live until interpreter exit, when a
+single ``atexit`` janitor removes them. Spark's ``addPyFile`` and
+parquet readers copy or own what they need, and nothing in the package
+reads a scratch dir from a later process, so removal at exit is safe.
 
-Lifetime contract: directories are PER-PROCESS, not per-call. Spark's
-``addPyFile`` and parquet readers copy/own what they need, so removing
-the source trees at exit is safe; nothing in the package reads a
-scratch dir from a later process.
-
-:func:`persist_scoped` (r19) is the cache analogue: query-internal
-multi-consumer ``persist()`` frames register with the active persist
-scope (registry.py opens one around each top-level query build) and
-unpersist when the query's returned DataFrame is collected — guide §5,
-"unpersist when done". Before r19 those blocks outlived their query
-until the NEXT registry dispatch's clearCache janitor ran, and forever
-in direct-module-call probe sessions (the r18 measurement notes traced
-late-session timing inflation to exactly this accumulation).
+Caches follow one rule: a cache lives exactly as long as the DataFrame
+the query returns. Every ``persist()`` in the package goes through
+:func:`persist_scoped`, and the registry builds each query under
+:func:`run_scoped`. When the caller drops its last reference to the
+result, every frame the build persisted unpersists; when the build
+raises, they unpersist at once. Nothing else in the package touches
+the session's cache, so the caller's own cached tables survive any
+number of dispatches, and two threads can dispatch concurrently.
 """
 
 from __future__ import annotations
@@ -40,57 +35,48 @@ _PERSIST_SCOPE = threading.local()
 
 
 def persist_scoped(df):
-    """``df.persist()`` plus registration with this thread's active
-    persist scope. With no scope open (direct module calls from tests
-    and probe scripts) it is a plain ``persist()`` — the registry
-    janitor's clearCache still bounds retention for registry dispatch,
-    and probes manage their own cache."""
+    """``df.persist()``, registered with this thread's open
+    :func:`run_scoped` build. Outside a build (direct module calls from
+    tests and probes) it is a plain ``persist()`` the caller owns."""
     out = df.persist()
-    frames = getattr(_PERSIST_SCOPE, "frames", None)
-    if frames is not None:
-        frames.append(out)
+    jdfs = getattr(_PERSIST_SCOPE, "jdfs", None)
+    if jdfs is not None:
+        jdfs.append(out._jdf)
     return out
 
 
-def open_persist_scope() -> bool:
-    """Start collecting :func:`persist_scoped` frames on this thread.
-    Returns True when this call opened the scope (the outermost build
-    owns the release); nested opens are no-ops so a composed query's
-    persists all ride the top-level result's lifetime."""
-    if getattr(_PERSIST_SCOPE, "frames", None) is None:
-        _PERSIST_SCOPE.frames = []
-        return True
-    return False
+def _release(jdfs) -> None:
+    # Non-blocking unpersist of JVM handles. Errors are swallowed: at
+    # interpreter shutdown the gateway may already be gone.
+    for jdf in jdfs:
+        try:
+            jdf.unpersist(False)
+        except Exception:
+            pass
 
 
-def close_persist_scope(opened: bool, out) -> None:
-    """Close the scope opened by :func:`open_persist_scope`, tying the
-    collected frames' cache lifetime to ``out``: when the caller's last
-    reference to the returned DataFrame is collected, every frame
-    unpersists (non-blocking). Unpersist is a pure perf hint — a
-    straggler reference to a derived frame simply recomputes — and
-    release errors are swallowed because at interpreter shutdown the
-    JVM gateway may already be gone."""
-    if not opened:
-        return
-    frames = getattr(_PERSIST_SCOPE, "frames", None) or []
-    _PERSIST_SCOPE.frames = None
-    if not frames or out is None:
-        return
+def run_scoped(build, *args):
+    """Run ``build(*args)`` and tie the lifetime of every frame it
+    :func:`persist_scoped` to the DataFrame it returns.
 
-    def _release(frames=tuple(frames)):
-        for f in frames:
-            try:
-                f.unpersist(False)
-            except Exception:
-                pass
-
+    The release closure holds only the frames' JVM handles, never the
+    result, so a build that returns one of its own persisted frames
+    (the REST readers) is still collectable. A nested call runs inside
+    the outer scope: a composed query's persists ride the top-level
+    result's lifetime."""
+    if getattr(_PERSIST_SCOPE, "jdfs", None) is not None:
+        return build(*args)
+    _PERSIST_SCOPE.jdfs = jdfs = []
     try:
-        weakref.finalize(out, _release)
-    except TypeError:
-        # non-weakref-able result (not a DataFrame): fall back to the
-        # registry janitor's next-dispatch clearCache
-        pass
+        out = build(*args)
+    except BaseException:
+        _release(jdfs)
+        raise
+    finally:
+        _PERSIST_SCOPE.jdfs = None
+    if jdfs:
+        weakref.finalize(out, _release, tuple(jdfs))
+    return out
 
 
 def _janitor() -> None:

@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..registry import register
-from ..scratch import scratch_dir
+from ..scratch import persist_scoped, scratch_dir
 
 _EXPORT_ROOT = os.path.join(tempfile.gettempdir(), "ssn_spark_export")
 
@@ -98,7 +98,8 @@ def s1_rest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     1000 docs so the correctness run isn't dominated by mock HTTP time).
 
     The mock server lives only for the duration of the action, so the
-    result is materialized (cached + counted) before the server stops."""
+    result is materialized (persisted + counted) before the server
+    stops; the cache lives as long as the returned DataFrame."""
     from .mock_api import MockApiServer
     from .rest import register_rest_source
 
@@ -114,7 +115,7 @@ def s1_rest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pages_per_partition", "2")
             .load()
         )
-        df = df.cache()
+        df = persist_scoped(df)
         df.count()  # materialize while the server is alive
     return df
 
@@ -154,7 +155,7 @@ def s1b_rest_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
             page_size=50,
             schema_pin_path=pin,
         )
-        df = df.select("doc_id", "lang", "n_chars").cache()
+        df = persist_scoped(df.select("doc_id", "lang", "n_chars"))
         df.count()
     assert os.path.exists(pin), "inferred schema was not pinned"
     return df
@@ -192,7 +193,7 @@ def s1c_rest_env_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
             env_file=env_file,
             auth_env="SSN_S1C_API_TOKEN",
         )
-        df = df.cache()
+        df = persist_scoped(df)
         df.count()
     return df
 
@@ -237,7 +238,7 @@ def s1d_oauth_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             client_id_env="S1D_CLIENT_ID",
             client_secret_env="S1D_CLIENT_SECRET",
         )
-        df = df.cache()
+        df = persist_scoped(df)
         df.count()
         assert server.auth_401s >= 1, "mid-run 401 (expiry) never happened"
         assert server.token_fetches >= 2, "401-driven re-fetch never happened"
@@ -269,7 +270,7 @@ def s2_paginated_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pages_per_partition", "1")
             .load()
         )
-        df = df.cache()
+        df = persist_scoped(df)
         df.count()
     return df
 
@@ -300,7 +301,7 @@ def s2b_cursor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pagination", "cursor")
             .load()
         )
-        df = df.cache()
+        df = persist_scoped(df)
         df.count()
     return df
 
@@ -332,7 +333,7 @@ def s2c_link_header_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pagination", "link")
             .load()
         )
-        df = df.cache()
+        df = persist_scoped(df)
         df.count()
     return df
 
@@ -408,6 +409,6 @@ def s3_rate_limited_read(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("rate_limit_rps", "50")
             .load()
         )
-        df = df.cache()
+        df = persist_scoped(df)
         df.count()
     return df

@@ -6,7 +6,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from ssn_college_software_architecture_assignments__spark.operators.dedup import (
-    connected_components,
     minhash_candidate_pairs,
     minhash_signatures,
     simhash64,
@@ -62,25 +61,6 @@ def test_simhash_deterministic_and_near_for_near_texts(spark):
     far = hamming(rows[1], rows[4])
     assert near < far  # one-word edit is closer than unrelated text
     assert near <= 16
-
-
-def test_connected_components_chain_and_singleton(spark):
-    # chain 1-2-3 plus edge 5-4 plus isolated 9: transitivity must group
-    # the whole chain even though (1,3) is not an edge.
-    nodes = spark.createDataFrame([(i,) for i in (1, 2, 3, 4, 5, 9)], "id long")
-    edges = spark.createDataFrame([(1, 2), (2, 3), (5, 4)], "src long, dst long")
-    got = {r["id"]: r["label"] for r in connected_components(nodes, edges).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 9: 9}
-
-
-def test_connected_components_long_path_converges(spark):
-    # worst-case diameter: a 12-node path; min label must reach the far end
-    nodes = spark.createDataFrame([(i,) for i in range(12)], "id long")
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(11)], "src long, dst long"
-    )
-    got = {r["id"]: r["label"] for r in connected_components(nodes, edges).collect()}
-    assert got == {i: 0 for i in range(12)}
 
 
 def test_embedding_lsh_candidates_scored_exactly_and_sublinear(spark):
@@ -211,64 +191,6 @@ def _union_find_components(n, edges):
         r = find(v)
         comp_min[r] = min(comp_min.get(r, v), v)
     return sorted((v, comp_min[find(v)]) for v in range(n))
-
-
-def _spark_components(spark, n, edges):
-    from ssn_college_software_architecture_assignments__spark.operators.dedup import (
-        connected_components,
-    )
-
-    nodes = spark.range(n).select(F.col("id").cast("long"))
-    if edges:
-        e = spark.createDataFrame(
-            [(int(a), int(b)) for a, b in edges], "src long, dst long"
-        )
-    else:
-        e = spark.createDataFrame([], "src long, dst long")
-    return sorted(
-        (r["id"], r["label"]) for r in connected_components(nodes, e).collect()
-    )
-
-
-def test_connected_components_long_chain_converges(spark):
-    """Regression for the silent-mislabel hazard: a 60-node path has
-    diameter 59 > the 16-round budget, so 1-hop-per-round propagation
-    returned wrong labels with no error. Pointer jumping must resolve
-    it (and any storable component) within the budget: every node in
-    one path-component labels to 0."""
-    n = 60
-    edges = [(i, i + 1) for i in range(n - 1)]
-    got = _spark_components(spark, n, edges)
-    assert got == [(v, 0) for v in range(n)]
-
-
-def test_connected_components_match_union_find(spark):
-    """Property: arbitrary small graphs (self-loops, duplicate and
-    reversed edges, isolated nodes) resolve to exactly the union-find
-    components with min-id canonical labels."""
-    from hypothesis import HealthCheck, given, settings
-    from hypothesis import strategies as st
-
-    n = 12
-
-    @given(
-        edges=st.lists(
-            st.tuples(st.integers(0, n - 1), st.integers(0, n - 1)),
-            min_size=0,
-            max_size=18,
-        )
-    )
-    @settings(
-        max_examples=5,
-        deadline=None,
-        suppress_health_check=[HealthCheck.function_scoped_fixture],
-    )
-    def run(edges):
-        assert _spark_components(spark, n, edges) == _union_find_components(
-            n, edges
-        )
-
-    run()
 
 
 # ---- winnowing: property test vs Python reference + the sharing guarantee ----
@@ -1539,13 +1461,20 @@ def test_large_star_small_star_planted_3chain(spark):
         single_hop[a] = min(single_hop.get(a, a), m)
         single_hop[b] = min(single_hop.get(b, b), m)
     assert single_hop[30] == 20 != labels[30]  # the mislabel x2e2 fixes
+    # chain 1-2-3 plus edge 5-4 plus isolated 9: transitivity groups the
+    # whole chain although (1,3) is not an edge, and a reversed edge
+    # still labels to its minimum
+    labels = dict(_spark_ls_components(spark, 10, [(1, 2), (2, 3), (5, 4)]))
+    assert {v: labels[v] for v in (1, 2, 3, 4, 5, 9)} == {
+        1: 1, 2: 1, 3: 1, 4: 4, 5: 4, 9: 9
+    }
 
 
 def test_large_star_small_star_long_chain_converges(spark):
     """A 60-node path has diameter 59 >> the 16-round budget; the
     edge-rewriting rounds must still converge (O(log n) is the paper's
-    bound) and label every node 0 — the same silent-mislabel regression
-    the connected_components twin pins, proven for this algorithm."""
+    bound) and label every node 0: a propagation that moved the minimum
+    one hop per round would return wrong labels here without an error."""
     n = 60
     edges = [(i, i + 1) for i in range(n - 1)]
     assert _spark_ls_components(spark, n, edges) == [(v, 0) for v in range(n)]
@@ -1554,8 +1483,7 @@ def test_large_star_small_star_long_chain_converges(spark):
 def test_large_star_small_star_match_union_find(spark):
     """Property: arbitrary small graphs (self-loops, duplicate and
     reversed edges, isolated nodes) resolve to exactly the union-find
-    components with min-id canonical labels — the same contract as
-    connected_components, different algorithm."""
+    components with min-id canonical labels."""
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 

@@ -19,7 +19,7 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ssn_college_software_architecture_assignments__spark.operators.dedup import (
-    connected_components,
+    large_star_small_star,
     minhash_candidate_pairs,
     minhash_signatures,
 )
@@ -167,7 +167,7 @@ def test_connected_components_matches_union_find(spark, n_nodes, edge_picks):
         edges_df = edges_df.limit(0)
     got = {
         r["id"]: r["label"]
-        for r in connected_components(nodes_df, edges_df).collect()
+        for r in large_star_small_star(nodes_df, edges_df).collect()
     }
     assert got == _union_find_components(n_nodes, edges)
 

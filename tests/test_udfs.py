@@ -175,3 +175,32 @@ def test_f7_counts_bytes_not_characters(spark):
     assert a["max_bytes"] == 6 != len("héllo")  # bytes, not chars
     assert b["n_docs"] == 3 and b["total_bytes"] == 9
     assert (b["min_bytes"], b["max_bytes"]) == (2, 4)
+
+
+def test_f5_bucket_count_treats_unknown_stats_as_unknown(spark, sf_dir):
+    """An RDD-backed frame has no size statistics; Spark reports the
+    ``spark.sql.defaultSizeInBytes`` sentinel (Long.MaxValue) instead of
+    raising. f5 must read that as unknown and keep the core floor, not
+    ask for ~1.4e11 buckets. A parquet scan with a known size still
+    scales its bucket count with the size."""
+    from ssn_college_software_architecture_assignments__spark.catalog import Catalog
+    from ssn_college_software_architecture_assignments__spark.operators.udfs import (
+        _f5_bucket_count,
+    )
+
+    floor = spark.sparkContext.defaultParallelism
+    rdd_backed = spark.createDataFrame(
+        spark.sparkContext.parallelize([(1, 2)]), "user_id long, event_id long"
+    )
+    stats = rdd_backed._jdf.queryExecution().optimizedPlan().stats()
+    assert int(str(stats.sizeInBytes())) == (1 << 63) - 1
+    assert _f5_bucket_count(spark, rdd_backed) == floor
+
+    ev = Catalog(spark, sf_dir).events
+    size = int(str(ev._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    target = max(size // (floor + 3), 1)
+    spark.conf.set("spark.ssn.f5.targetBucketBytes", str(target))
+    try:
+        assert _f5_bucket_count(spark, ev) == size // target > floor
+    finally:
+        spark.conf.unset("spark.ssn.f5.targetBucketBytes")
