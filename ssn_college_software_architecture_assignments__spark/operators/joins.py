@@ -406,8 +406,8 @@ def j11_write_bucketed_tables(
     subsequent join of the two tables on the bucket key is shuffle-free.
     Benchmarked separately from the join leg (bench.py j11_write vs
     j11_join) so the shuffle-free claim is measurable round-over-round.
-    ``base`` lets a caller that re-runs the ingest (bench.py's riser
-    re-measure) reuse ONE scratch location — overwrite mode replaces the
+    ``base`` lets a caller that re-runs the ingest (bench.py's sweeps)
+    reuse ONE scratch location — overwrite mode replaces the
     tables in place instead of retaining a full copy per run."""
     from concurrent.futures import ThreadPoolExecutor
 

@@ -98,8 +98,8 @@ def test_check_priority_is_complete_and_duplicate_free():
     """The evidence-age rotation list must stay a PERMUTATION of the
     registry: a registered query missing from _CHECK_PRIORITY silently
     sorts last forever (never rotates), a stale name is dead weight,
-    and a duplicate makes the rank mapping ambiguous. r16 rebuilt the
-    list by script; this pins the invariant for future hand edits."""
+    and a duplicate makes the rank mapping ambiguous. The list is
+    edited by hand; this pins the invariant for every edit."""
     from ssn_college_software_architecture_assignments__spark.registry import (
         _CHECK_PRIORITY,
         load_all,
@@ -114,13 +114,7 @@ def test_check_priority_is_complete_and_duplicate_free():
     )
 
 
-def test_bench_common18_is_frozen_and_headline_consistent():
-    """COMMON18 anchors the round-over-round series: exactly 18 names,
-    every one either a HEADLINE query or a j11 leg, and the full
-    HEADLINE set must still contain every COMMON18 member it is
-    supposed to time (a headline rename would silently zero the
-    subtotal)."""
-    import importlib.util
+def _bench_module():
     from pathlib import Path
 
     spec = importlib.util.spec_from_file_location(
@@ -128,8 +122,29 @@ def test_bench_common18_is_frozen_and_headline_consistent():
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
+    return mod
+
+
+def test_bench_common18_is_frozen_and_headline_consistent():
+    """COMMON18 anchors the round-over-round series: exactly 18 names,
+    every one either a HEADLINE query or a j11 leg, and the full
+    HEADLINE set must still contain every COMMON18 member it is
+    supposed to time (a headline rename would silently zero the
+    subtotal)."""
+    mod = _bench_module()
     c18 = list(mod.COMMON18)
     assert len(c18) == 18 and len(set(c18)) == 18
     timed = set(mod.HEADLINE) | {"j11_write", "j11_join"}
     missing = [n for n in c18 if n not in timed]
     assert not missing, missing
+
+
+def test_bench_fingerprint_records_the_session_core_budget(spark):
+    """os.cpu_count() is the host's core count, not the session's: the
+    fingerprint must also carry the master, the default parallelism and
+    the raw SPARK_GRAFT_CPUS the session was built from."""
+    fp = _bench_module()._fingerprint(spark)
+    sc = spark.sparkContext
+    assert fp["master"] == sc.master
+    assert fp["default_parallelism"] == sc.defaultParallelism
+    assert fp["spark_graft_cpus"] == os.environ.get("SPARK_GRAFT_CPUS")
