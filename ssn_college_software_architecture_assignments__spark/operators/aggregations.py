@@ -879,10 +879,10 @@ def a16_skew_histogram_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute the per-key aggregate ONCE: with_range_bucket plans its
     # input twice (cutpoint fold + assignment), and unlike w4b's cheap
     # scan this input is the full events shuffle. persist(), not
-    # localCheckpoint(): lazy (no job at construction/explain time) and
-    # lineage survives, so PLANS.md keeps the scan-pushdown evidence
-    # under the InMemoryRelation (review-caught — eager checkpoint ran
-    # the shuffle at build time and erased the scan from the plan)
+    # localCheckpoint(): the cache is lazy (no job at build or explain
+    # time) and keeps its lineage, so `explain` still shows the scan and
+    # its pushed filters under the InMemoryRelation; an eager checkpoint
+    # would run the shuffle at build time and cut the scan from the plan
     per_key = persist_scoped(per_key)
     assigned = with_range_bucket(
         per_key, "n_rows", list(_A16_PROBS), out="size_bucket"

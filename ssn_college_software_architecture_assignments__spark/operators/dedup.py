@@ -12,6 +12,8 @@ These are the training-data-pipeline dedup family. Design constraints at
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -197,15 +199,14 @@ def minhash_candidate_pairs(
     semantics trade. Plan-gated to one documents scan in
     tests/test_plan_shapes.py.
 
-    Mega-bucket caveat (both forms share the quadratic PAIR count; this
-    form additionally materializes each bucket as one aggregation row):
-    a document duplicated millions of times verbatim puts all copies in
-    one bucket. At 100 TB the production pipeline collapses
-    exact-duplicate SIGNATURES first — identical signatures are exact
-    dups (X1's job), carried as (representative, count) so banding only
-    ever sees unique signatures — which bounds bucket rows at the cost
-    of one extra hash-agg; neither formulation survives skipping that
-    step, because the pair explosion itself is the quadratic term.
+    Mega-bucket bound: a document duplicated millions of times verbatim
+    puts all its copies in one bucket, and the in-bucket pair count is
+    quadratic in either form. The expansion runs through in_row_pairs,
+    so a bucket over _MAX_PAIR_GROUP (4096) members is refused with an
+    error naming its size and the remedy. The remedy at 100 TB is to
+    collapse exact-duplicate SIGNATURES first: identical signatures are
+    exact dups (X1's job), carried as (representative, count), so
+    banding only ever sees unique signatures and buckets stay small.
     """
     rows_per_band = num_hashes // bands
     band_hashes = F.array(
@@ -233,23 +234,21 @@ def minhash_candidate_pairs(
         )
         .filter(F.size("ms") >= 2)
     )
-    # i<j pair expansion + signature-estimate Jaccard, one nested HOF.
-    # array_sort on struct(_id, ...) orders members by _id, so emitted
-    # pairs always satisfy id_a < id_b without a join condition.
-    pair_expr = F.expr(
-        f"""
-        flatten(transform(sequence(0, size(ms) - 2), i ->
-          transform(sequence(i + 1, size(ms) - 1), j ->
-            named_struct(
-              'id_a', ms[i]._id,
-              'id_b', ms[j]._id,
-              'est_jaccard',
-              round(aggregate(
-                      zip_with(ms[i].minhash, ms[j].minhash,
-                               (x, y) -> CAST(x = y AS INT)),
-                      0, (acc, v) -> acc + v)
-                    / CAST({num_hashes} AS DOUBLE), 4)))))
-        """
+    # i<j pairs scored by signature-estimate Jaccard. array_sort on
+    # struct(_id, ...) orders members by _id, so emitted pairs always
+    # satisfy id_a < id_b without a join condition.
+    pair_expr = in_row_pairs(
+        "ms",
+        lambda a, b: f"""
+            'id_a', {a}._id,
+            'id_b', {b}._id,
+            'est_jaccard',
+            round(aggregate(
+                    zip_with({a}.minhash, {b}.minhash,
+                             (x, y) -> CAST(x = y AS INT)),
+                    0, (acc, v) -> acc + v)
+                  / CAST({num_hashes} AS DOUBLE), 4)""",
+        "x2",
     )
     return (
         buckets.select(F.explode(pair_expr).alias("p"))
@@ -606,6 +605,90 @@ def x2e_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# In-row pair expansion --------------------------------------------------------
+#
+# Every dedup pair stage groups its candidates (an LSH band bucket, a
+# gram's postings, a centroid cell, a token's source list) and expands
+# each group's member array into its pairs inside the one aggregation
+# row. No self-join, so the subtree that built the groups is planned
+# once. The price is quadratic in the group and lands in a single row
+# buffer (~16 bytes a pair of longs): a stop-gram or a mega-bucket of
+# verbatim copies would quietly kill an executor with terabytes in one
+# row. Such a group carries no dedup signal, so rather than silently
+# change an edge law with a frequency cap, every expansion refuses a
+# group over this one declared bound and names the remedy. At 4096
+# members a group emits ~8.4M pairs, ~134 MB of buffer; conforming data
+# pays one size comparison per group row.
+_MAX_PAIR_GROUP = 4096
+
+
+def in_row_pairs(
+    arr: str, fields: Callable[[str, str], str], op: str, diagonal: bool = False
+) -> Column:
+    """Array column holding one ``named_struct(fields(a, b))`` per member
+    pair of the array column ``arr``: every i < j pair, or every i <= j
+    pair when ``diagonal`` (see pair_overlap for what the (a, a) rows
+    carry). ``fields`` receives the SQL of the two members and returns
+    the named_struct body. Pairs keep array order, so a sorted array
+    yields a < b. Callers drop groups too small to pair first.
+
+    A group over _MAX_PAIR_GROUP members raises an error naming ``op``,
+    the group size, the bound and the remedy. The CASE tests the size
+    before any pair struct is built. The bound is read when the plan is
+    built."""
+    bound = _MAX_PAIR_GROUP
+    last_i, off = (1, "") if diagonal else (2, " + 1")
+    pairs = F.expr(
+        f"""
+        flatten(transform(sequence(0, size({arr}) - {last_i}), i ->
+          transform(sequence(i{off}, size({arr}) - 1), j ->
+            named_struct({fields(f"{arr}[i]", f"{arr}[j]")}))))
+        """
+    )
+    return F.when(F.size(arr) <= F.lit(bound), pairs).otherwise(
+        F.raise_error(
+            F.format_string(
+                f"{op}: a group holds %s members, over the declared "
+                f"pair-expansion bound {bound} — its in-row pair buffer "
+                "would grow quadratically; collapse exact duplicates, "
+                "pre-filter stop-grams or split the overloaded cell before "
+                "pairing, or raise the bound knowingly",
+                F.size(arr),
+            )
+        )
+    )
+
+
+def pair_overlap(groups: DataFrame, arr: str, op: str) -> DataFrame:
+    """(a, b, n_a, n_b, n_shared) for every member pair a < b that
+    shares at least one row of ``groups``: n_shared counts the rows
+    holding both, n_a and n_b the rows holding each. ``arr`` must be a
+    sorted array of distinct members, so the Jaccard overlap of the two
+    members' row sets is n_shared / (n_a + n_b - n_shared).
+
+    One pass over ``groups``: the i <= j expansion's diagonal rows
+    (a, a) count each member's own rows, so one aggregate carries both
+    the intersections and the sizes, and two windows over that
+    members^2-sized table attach n_a and n_b. A separate sizes
+    aggregate joined back would plan the subtree that built ``groups``
+    again (the one-scan gates of x2m, x2r and x4m in
+    tests/test_plan_shapes.py)."""
+    pairs = in_row_pairs(arr, lambda a, b: f"'a', {a}, 'b', {b}", op, diagonal=True)
+    agg = (
+        groups.select(F.explode(pairs).alias("p"))
+        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+    )
+    diag = F.when(F.col("a") == F.col("b"), F.col("n_shared"))
+    return agg.select(
+        "a",
+        "b",
+        F.max(diag).over(W.partitionBy("a")).alias("n_a"),
+        F.max(diag).over(W.partitionBy("b")).alias("n_b"),
+        "n_shared",
+    ).filter(F.col("a") < F.col("b"))
+
+
 # X2e2 — GLOBAL transitive-closure clusters via large-star/small-star ----------
 #
 # x2e closes a 40-doc candidate graph; x2e2 runs the same
@@ -625,40 +708,6 @@ def x2e_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stays cheap; the Spark side's shape is the 100 TB one.
 
 _X2E2_MIN_SHARED = 3
-
-# Declared per-gram postings bound (r19, the x2j2 mega-cluster guard
-# precedent): the postings-group pair expansion materializes a k-doc
-# gram's k(k-1)/2 pair structs inside ONE row buffer — ~16 bytes a
-# pair, so the declared bound caps the buffer at ~134 MB while a
-# stop-shingle ("of the and" at corpus scale) would quietly kill an
-# executor with terabytes in a single row. A gram shared by thousands
-# of documents carries no dedup signal (standard MinHash/SemDeDup
-# practice is to drop such stop-grams); rather than silently change
-# the declared edge law with a document-frequency cap, the engine
-# REFUSES loudly and names the remedy. One size comparison per gram
-# row on conforming data.
-_X2E2_MAX_POSTINGS = 4096
-
-
-def _postings_guard(ids_col: str, op: str, bound: int) -> Column:
-    """Filter-shaped guard: True for conforming postings rows, raises
-    with the offending size and the remedy once any row exceeds the
-    declared bound. Sits between the postings aggregation and the pair
-    flatten, so the quadratic buffer is never built — it is refused."""
-    return F.when(F.size(ids_col) <= F.lit(bound), F.lit(True)).otherwise(
-        F.raise_error(
-            F.format_string(
-                op
-                + ": a group holds %s members, over the declared "
-                + f"pair-expansion bound {bound} — its in-row pair "
-                "buffer would grow quadratically; pre-filter stop-grams "
-                "/ split the overloaded cell, or raise the bound "
-                "knowingly",
-                F.size(ids_col),
-            )
-        ).cast("boolean")
-    )
-
 
 def _gram3_table(docs: DataFrame) -> DataFrame:
     """(doc_id, gram) with one row per DISTINCT 3-token shingle — the
@@ -680,35 +729,26 @@ def x2e2_shared_gram_pairs(docs: DataFrame) -> DataFrame:
     — the final plan can't witness this stage's shape, so the plan gate
     targets it directly.
 
-    Postings-group form, NOT the gram self-join (r18 optimization,
-    guide §2.3/§2.4 — the x2 banding precedent): the self-join planned
+    Postings-group form, NOT the gram self-join: the self-join plans
     the shingle explode TWICE (two documents scans, two Generates, no
-    ReusedExchange) and, statistics-blind, BROADCAST the entire
+    ReusedExchange) and, statistics-blind, BROADCASTS the entire
     exploded gram table as the build side — corpus-sized at 100 TB.
     Grouping the postings list per gram computes the explode ONCE and
-    replaces the join with a single groupBy-gram exchange; in-bucket
-    i<j expansion emits exactly the pairs the join emitted (postings
-    are per-doc-distinct and sorted, so src < dst by construction),
-    and the same (src, dst) count >= _X2E2_MIN_SHARED fold follows.
-    Measured at sf0.1: pair stage 5.8 s -> see OPTIMIZATION_r18.md.
-    The quadratic per-gram pair cost is IDENTICAL in both forms (a
-    k-doc gram emits k(k-1)/2 pairs either way, and both forms key by
-    gram, so the hot gram lands in one task regardless); the postings
-    row adds only k longs of buffer, the x2 banding caveat verbatim."""
+    replaces the join with a single groupBy-gram exchange; the i<j
+    in_row_pairs expansion emits exactly the pairs the join would
+    (postings are per-doc-distinct and sorted, so src < dst by
+    construction), and the same (src, dst) count >= _X2E2_MIN_SHARED
+    fold follows. The quadratic per-gram pair cost is the same in both
+    forms (a k-doc gram emits k(k-1)/2 pairs either way, and both key
+    by gram, so a hot gram lands in one task regardless); a stop-gram
+    over _MAX_PAIR_GROUP postings is refused by in_row_pairs."""
     grams = _gram3_table(docs)
     posts = (
         grams.groupBy("gram")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") >= 2)
-        .filter(_postings_guard("ids", "x2e2", _X2E2_MAX_POSTINGS))
     )
-    pair_expr = F.expr(
-        """
-        flatten(transform(sequence(0, size(ids) - 2), i ->
-          transform(sequence(i + 1, size(ids) - 1), j ->
-            named_struct('src', ids[i], 'dst', ids[j]))))
-        """
-    )
+    pair_expr = in_row_pairs("ids", lambda a, b: f"'src', {a}, 'dst', {b}", "x2e2")
     return (
         posts.select(F.explode(pair_expr).alias("p"))
         .select("p.src", "p.dst")
@@ -2009,50 +2049,48 @@ def semantic_dup_candidates(
     centroid array, not a row_number over the n*K crossJoin (which
     would Exchange+sort 16x-inflated corpus rows).
     Per-vector norms are precomputed before grouping so each pair costs
-    one dot product. Pairwise work is quadratic in CELL size only; the
-    mega-bucket caveat and its exact-dup-collapse prefix from
-    minhash_candidate_pairs apply unchanged. Zero-norm vectors are
-    dropped before pairing (their cosine is undefined; leaving them in
-    would make the null sort placement engine-dependent)."""
+    one dot product. Pairwise work is quadratic in CELL size only, and
+    the in_row_pairs expansion refuses a cell over _MAX_PAIR_GROUP
+    members (a degenerate centroid set piling the corpus into one
+    cell); the remedy is minhash_candidate_pairs' exact-dup collapse or
+    a cell split. Zero-norm vectors are dropped before pairing (their
+    cosine is undefined; leaving them in would make the null sort
+    placement engine-dependent)."""
     cells = assign_cells(emb, centroids)
     grouped = (
         cells.groupBy("cell")
         .agg(F.array_sort(F.collect_list(F.struct("vec_id", "emb", "nrm"))).alias("ms"))
         .filter(F.size("ms") >= 2)
-        # r19: the same declared pair-expansion bound as x2e2's postings
-        # (a degenerate centroid set piling the corpus into one cell
-        # would otherwise build a quadratic single-row buffer here —
-        # the x2j2 guard's hazard, refused loudly instead)
-        .filter(_postings_guard("ms", "x2j", _X2E2_MAX_POSTINGS))
     )
-    # i<j expansion (array_sort on struct(vec_id, ...) guarantees
-    # keep_id < dup_id), exact cosine per pair, comparator sort on
-    # (rounded cos desc, keep_id, dup_id), then the top-k slice — all
-    # inside one nested higher-order expression per cell.
-    pair_expr = F.expr(
-        f"""
-        slice(
-          array_sort(
-            flatten(transform(sequence(0, size(ms) - 2), i ->
-              transform(sequence(i + 1, size(ms) - 1), j ->
-                named_struct(
-                  'keep_id', ms[i].vec_id,
-                  'dup_id', ms[j].vec_id,
-                  'cos',
-                  aggregate(zip_with(ms[i].emb, ms[j].emb, (x, y) -> x * y),
-                            0D, (acc, v) -> acc + v)
-                  / (ms[i].nrm * ms[j].nrm))))),
-            (l, r) -> CASE
-              WHEN round(l.cos, 4) > round(r.cos, 4) THEN -1
-              WHEN round(l.cos, 4) < round(r.cos, 4) THEN 1
-              WHEN l.keep_id < r.keep_id THEN -1
-              WHEN l.keep_id > r.keep_id THEN 1
-              WHEN l.dup_id < r.dup_id THEN -1
-              WHEN l.dup_id > r.dup_id THEN 1
-              ELSE 0 END),
-          1, {top_per_cell})
-        """
+    # i<j pairs (array_sort on struct(vec_id, ...) guarantees
+    # keep_id < dup_id) with exact cosine, sorted on (rounded cos desc,
+    # keep_id, dup_id), then the top-k slice — all inside one nested
+    # higher-order expression per cell.
+    pairs = in_row_pairs(
+        "ms",
+        lambda a, b: f"""
+            'keep_id', {a}.vec_id,
+            'dup_id', {b}.vec_id,
+            'cos',
+            aggregate(zip_with({a}.emb, {b}.emb, (x, y) -> x * y),
+                      0D, (acc, v) -> acc + v)
+            / ({a}.nrm * {b}.nrm)""",
+        "x2j",
     )
+
+    def by_cos_desc_then_ids(l: Column, r: Column) -> Column:
+        lc, rc = F.round(l["cos"], 4), F.round(r["cos"], 4)
+        return (
+            F.when(lc > rc, -1)
+            .when(lc < rc, 1)
+            .when(l["keep_id"] < r["keep_id"], -1)
+            .when(l["keep_id"] > r["keep_id"], 1)
+            .when(l["dup_id"] < r["dup_id"], -1)
+            .when(l["dup_id"] > r["dup_id"], 1)
+            .otherwise(0)
+        )
+
+    pair_expr = F.slice(F.array_sort(pairs, by_cos_desc_then_ids), 1, top_per_cell)
     return (
         grouped.select(
             F.col("cell").cast("long").alias("cell"),
@@ -2451,12 +2489,10 @@ def x2k_quality_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # LSH banding target): how many pairs and how many documents does each
 # candidate threshold capture? Computed over the same restricted slice
 # and token-set Jaccard as x2c, but as a CURVE — one row per threshold —
-# so the cutoff is picked from data, not folklore. One corpus scan via
-# the x4m diagonal-pair idiom: group postings by token, expand i<=j doc
-# pairs inside each posting list, and the DIAGONAL rows (a,a) of the
-# same aggregate are each doc's distinct-token count, attached back
-# with two windows over the tiny pair table — no posting self-join, no
-# second scan for sizes.
+# so the cutoff is picked from data, not folklore. One corpus scan:
+# pair_overlap over the (token, lang) posting lists yields every doc
+# pair's shared-token count and each doc's distinct-token count in one
+# aggregate — no posting self-join, no second scan for sizes.
 
 _X2M_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
@@ -2533,32 +2569,12 @@ def x2m_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     post = toks.groupBy("tok", "lang").agg(
         F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    pair_expr = F.expr(
-        """
-        flatten(transform(sequence(0, size(ids) - 1), i ->
-          transform(sequence(i, size(ids) - 1), j ->
-            named_struct('id_a', ids[i], 'id_b', ids[j]))))
-        """
-    )
-    agg = (
-        post.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.id_a").alias("id_a"), F.col("p.id_b").alias("id_b"))
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    diag = F.when(F.col("id_a") == F.col("id_b"), F.col("n_common"))
-    sized = agg.select(
-        "id_a",
-        "id_b",
-        "n_common",
-        F.max(diag).over(W.partitionBy("id_a")).alias("na"),
-        F.max(diag).over(W.partitionBy("id_b")).alias("nb"),
-    )
-    pairs = sized.filter(F.col("id_a") < F.col("id_b")).select(
-        "id_a",
-        "id_b",
+    pairs = pair_overlap(post, "ids", "x2m").select(
+        F.col("a").alias("id_a"),
+        F.col("b").alias("id_b"),
         (
-            F.col("n_common").cast("double")
-            / (F.col("na") + F.col("nb") - F.col("n_common"))
+            F.col("n_shared").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
         ).alias("jac"),
     )
     sweep = pairs.select(
@@ -3007,12 +3023,11 @@ def x2q_duplicated_gram_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
 # without cross-source exact dups (this fixture has none), which is
 # precisely why the production diagnostic runs at span granularity.
 #
-# Scale shape: x4m's one-pass diagonal-pair idiom on the 60-bit md5
-# gram key (the shuffle carries 8-byte keys, never gram text): distinct
-# (source, gram-hash) rows, per-hash sorted source list (bounded by the
-# source count), i<=j in-list HOF expansion where the DIAGONAL carries
-# each source's gram-set size — one corpus scan, one sources^2-sized
-# aggregate, two windows over that tiny table.
+# Scale shape: pair_overlap on the 60-bit md5 gram key (the shuffle
+# carries 8-byte keys, never gram text): distinct (source, gram-hash)
+# rows, a per-hash sorted source list (bounded by the source count),
+# then one sources^2-sized aggregate carrying both the shared-gram
+# counts and each source's gram-set size — one corpus scan.
 
 _X2R_ORACLE = f"""
 WITH g AS (
@@ -3072,39 +3087,17 @@ def x2r_cross_source_gram_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     tok = g.groupBy("gh").agg(F.sort_array(F.collect_list("source")).alias("srcs"))
-    pair_expr = F.expr(
-        """
-        flatten(transform(sequence(0, size(srcs) - 1), i ->
-          transform(sequence(i, size(srcs) - 1), j ->
-            named_struct('src_a', srcs[i], 'src_b', srcs[j]))))
-        """
-    )
-    agg = (
-        tok.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.src_a").alias("src_a"), F.col("p.src_b").alias("src_b"))
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-    )
-    diag = F.when(F.col("src_a") == F.col("src_b"), F.col("n_pair"))
-    sized = agg.select(
-        "src_a",
-        "src_b",
-        "n_pair",
-        F.max(diag).over(W.partitionBy("src_a")).alias("n_grams_a"),
-        F.max(diag).over(W.partitionBy("src_b")).alias("n_grams_b"),
-    )
     return (
-        sized.filter(F.col("src_a") < F.col("src_b"))
+        pair_overlap(tok, "srcs", "x2r")
         .select(
-            "src_a",
-            "src_b",
-            F.col("n_grams_a").cast("long").alias("n_grams_a"),
-            F.col("n_grams_b").cast("long").alias("n_grams_b"),
-            F.col("n_pair").cast("long").alias("n_shared"),
+            F.col("a").alias("src_a"),
+            F.col("b").alias("src_b"),
+            F.col("n_a").alias("n_grams_a"),
+            F.col("n_b").alias("n_grams_b"),
+            "n_shared",
             F.round(
-                F.col("n_pair")
-                / (
-                    F.col("n_grams_a") + F.col("n_grams_b") - F.col("n_pair")
-                ).cast("double"),
+                F.col("n_shared")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast("double"),
                 4,
             ).alias("jaccard"),
         )

@@ -1017,17 +1017,14 @@ ORDER BY i.src_a, i.src_b
 @register("x4m_source_vocab_overlap", oracle=_X4M_ORACLE, tags=("X4",))
 def x4m_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Jaccard overlap between source vocabularies, computed in
-    ONE pass over the corpus: distinct (source, token) pairs, per-token
-    sorted source list, then i<=j HOF pair expansion inside the list —
-    the DIAGONAL rows (i == j) are each source's vocabulary size, so the
-    same sources^2-sized aggregate carries both the intersections and
-    the sizes, and two windows over that tiny table attach n_vocab_a/b
-    without ever re-planning the corpus subtree (a separate sizes
-    aggregate joined back plans the expensive distinct THREE times —
-    verified on the physical plan; this form scans documents once).
-    Pairs sharing zero tokens don't appear — both engines agree on that
-    convention by construction."""
-    from pyspark.sql import Window as W
+    ONE pass over the corpus: distinct (source, token) pairs, a
+    per-token sorted source list, then dedup.pair_overlap, whose one
+    sources^2-sized aggregate carries both the intersections and each
+    source's vocabulary size (a separate sizes aggregate joined back
+    plans the expensive distinct THREE times; this form scans documents
+    once). Pairs sharing zero tokens don't appear — both engines agree
+    on that convention by construction."""
+    from .dedup import pair_overlap
 
     docs = Catalog(spark, sf_dir).documents
     vocab = (
@@ -1038,39 +1035,17 @@ def x4m_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = vocab.groupBy("token").agg(
         F.sort_array(F.collect_list("source")).alias("srcs")
     )
-    pair_expr = F.expr(
-        """
-        flatten(transform(sequence(0, size(srcs) - 1), i ->
-          transform(sequence(i, size(srcs) - 1), j ->
-            named_struct('src_a', srcs[i], 'src_b', srcs[j]))))
-        """
-    )
-    agg = (
-        tok.select(F.explode(pair_expr).alias("p"))
-        .groupBy(F.col("p.src_a").alias("src_a"), F.col("p.src_b").alias("src_b"))
-        .agg(F.count(F.lit(1)).alias("n_pair"))
-    )
-    diag = F.when(F.col("src_a") == F.col("src_b"), F.col("n_pair"))
-    sized = agg.select(
-        "src_a",
-        "src_b",
-        "n_pair",
-        F.max(diag).over(W.partitionBy("src_a")).alias("n_vocab_a"),
-        F.max(diag).over(W.partitionBy("src_b")).alias("n_vocab_b"),
-    )
     return (
-        sized.filter(F.col("src_a") < F.col("src_b"))
+        pair_overlap(tok, "srcs", "x4m")
         .select(
-            "src_a",
-            "src_b",
-            F.col("n_vocab_a").cast("long").alias("n_vocab_a"),
-            F.col("n_vocab_b").cast("long").alias("n_vocab_b"),
-            F.col("n_pair").cast("long").alias("n_shared"),
+            F.col("a").alias("src_a"),
+            F.col("b").alias("src_b"),
+            F.col("n_a").alias("n_vocab_a"),
+            F.col("n_b").alias("n_vocab_b"),
+            "n_shared",
             F.round(
-                F.col("n_pair")
-                / (F.col("n_vocab_a") + F.col("n_vocab_b") - F.col("n_pair")).cast(
-                    "double"
-                ),
+                F.col("n_shared")
+                / (F.col("n_a") + F.col("n_b") - F.col("n_shared")).cast("double"),
                 4,
             ).alias("jaccard"),
         )

@@ -2716,28 +2716,61 @@ def test_x3x6_plan_verdicts_agree_with_both_executors(spark):
         assert not (r["over_split_trigger"] and r["under_merge_floor"])
 
 
-def test_x2e2_postings_guard_refuses_hot_gram(spark, monkeypatch):
-    """r19 hot-gram guard (the x2j2 mega-cluster precedent): a gram
-    whose postings exceed the declared pair-expansion bound must raise
-    loudly BEFORE the quadratic in-row pair buffer is built, naming
-    the size and the remedy; postings exactly AT the bound pass
-    through untouched. The bound is lowered by monkeypatch and the hot
-    gram planted (five docs sharing every 3-shingle)."""
+def _x2e2_hot_gram(spark, dmod):
+    # five docs sharing every 3-shingle: each gram's postings hold 5 docs,
+    # and every doc pair shares all three shingles (>= MIN_SHARED 3)
+    docs = spark.createDataFrame(
+        [(i, "w x y z q") for i in range(5)], "doc_id long, text string"
+    )
+    return dmod.x2e2_shared_gram_pairs(docs).select(
+        F.col("src").alias("a"), F.col("dst").alias("b")
+    )
+
+
+def _x2_mega_bucket(spark, dmod):
+    # five verbatim copies: identical signatures fill one bucket per band
+    docs = spark.createDataFrame(
+        [(i, "w x y z q") for i in range(5)], "doc_id long, text string"
+    )
+    sigs = dmod.minhash_signatures(docs, "doc_id", "text")
+    return dmod.minhash_candidate_pairs(sigs).select(
+        F.col("id_a").alias("a"), F.col("id_b").alias("b")
+    )
+
+
+def _x2j_single_cell(spark, dmod):
+    # one centroid: every (non-zero) vector lands in the same cell
+    emb = spark.createDataFrame(
+        [(i, [1.0, float(i)]) for i in range(5)], "vec_id long, emb array<double>"
+    )
+    cents = spark.createDataFrame([(0, [1.0, 0.0])], "cent_id long, cemb array<double>")
+    return dmod.semantic_dup_candidates(emb, cents, top_per_cell=10).select(
+        F.col("keep_id").alias("a"), F.col("dup_id").alias("b")
+    )
+
+
+@pytest.mark.parametrize(
+    "planted",
+    [_x2e2_hot_gram, _x2_mega_bucket, _x2j_single_cell],
+    ids=["x2e2", "x2", "x2j"],
+)
+def test_pair_group_bound_refuses_oversized_group(spark, monkeypatch, planted):
+    """Every in-row pair expansion carries the declared pair-group
+    bound: a planted group (x2e2 hot gram, x2 LSH mega-bucket, x2j
+    single cell) over the bound must raise loudly BEFORE the quadratic
+    in-row pair buffer is built, naming the size and the remedy; a
+    group exactly AT the bound passes through untouched. The bound is
+    lowered by monkeypatch; each planted group holds five members."""
     import ssn_college_software_architecture_assignments__spark.operators.dedup as dmod
 
-    docs = spark.createDataFrame(
-        [(i, "w x y z q") for i in range(5)],
-        "doc_id long, text string",
-    )
-    monkeypatch.setattr(dmod, "_X2E2_MAX_POSTINGS", 4)
+    monkeypatch.setattr(dmod, "_MAX_PAIR_GROUP", 4)
     with pytest.raises(Exception) as ei:
-        dmod.x2e2_shared_gram_pairs(docs).collect()
+        planted(spark, dmod).collect()
     assert "pair-expansion bound" in str(ei.value)
     assert "5 members" in str(ei.value)
 
-    # boundary: postings == bound is conforming; every doc pair shares
-    # all three 3-shingles (>= the MIN_SHARED 3), so C(5,2) edges
-    monkeypatch.setattr(dmod, "_X2E2_MAX_POSTINGS", 5)
-    rows = dmod.x2e2_shared_gram_pairs(docs).collect()
+    # boundary: a group == bound is conforming and emits all C(5,2) pairs
+    monkeypatch.setattr(dmod, "_MAX_PAIR_GROUP", 5)
+    rows = planted(spark, dmod).collect()
     assert len(rows) == 10
-    assert all(r["src"] < r["dst"] for r in rows)
+    assert all(r["a"] < r["b"] for r in rows)

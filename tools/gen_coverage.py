@@ -3,7 +3,11 @@
 Each registry entry is tagged with the §2 ids it implements; this tool
 inverts that mapping so the judge can check the inventory line by line.
 
-Usage: python tools/gen_coverage.py  (writes /root/repo/COVERAGE.md)
+Usage: python tools/gen_coverage.py  (rewrites COVERAGE.md at the repo root)
+
+tests/test_tools.py asserts that the committed COVERAGE.md equals
+render(), so a registry change that moves the inventory fails until the
+file is regenerated.
 """
 
 from __future__ import annotations
@@ -42,7 +46,8 @@ FAMILY_TAGS = {
 }
 
 
-def main() -> None:
+def render() -> str:
+    """COVERAGE.md's full text for the current registry."""
     from ssn_college_software_architecture_assignments__spark import registry
 
     defs = registry.load_all()
@@ -89,10 +94,15 @@ def main() -> None:
     )
     if missing:
         lines.append(f"Missing: {', '.join(missing)}")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
     out = os.path.join(REPO_ROOT, "COVERAGE.md")
+    text = render()
     with open(out, "w") as fh:
-        fh.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {total - len(missing)}/{total} covered, {len(defs)} queries")
+        fh.write(text)
+    print(f"wrote {out}: {text.splitlines()[-1]}")
 
 
 if __name__ == "__main__":
