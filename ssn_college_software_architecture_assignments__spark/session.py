@@ -42,7 +42,7 @@ def default_parallelism() -> int:
     sets it (the bench contract — its low-core pass scales everything
     derived from this down with it), else the host's real core count —
     a literal fallback would create that many state stores / shuffle
-    partitions per stateful operator on a smaller machine (r18 advisory)."""
+    partitions per stateful operator on a smaller machine."""
     env = os.environ.get("SPARK_GRAFT_CPUS")
     if env:
         return int(env)
@@ -66,13 +66,19 @@ def _ship_package_to_workers(spark: SparkSession) -> None:
     foreign cwd satisfies the DRIVER import but not the workers (the
     runtime sys.path edit never reaches PYTHONPATH, and local-mode
     workers inherit only the JVM's env). Shipping the package once via
-    ``addPyFile`` closes that gap; skipped when the repo root is already
-    worker-visible (PYTHONPATH or cwd), which covers every in-repo
-    entry point (tests, bench, check_oracle). Never allowed to fail a
-    query — any error degrades to the historical behavior. Keyed on the
-    applicationId, not a process flag: a driver that stops its session
-    and builds a new one needs the zip shipped AGAIN (addPyFile state
-    dies with the context)."""
+    ``addPyFile`` closes that gap for executor tasks; skipped when the
+    repo root is already worker-visible (PYTHONPATH or cwd), which covers
+    every in-repo entry point (tests, bench, check_oracle).
+
+    ``addPyFile`` does not reach the driver-side Python processes that
+    plan Python data sources (the streaming source runner among them), so
+    the REST source pickles its module by value instead
+    (``sources.rest.register_rest_source``).
+
+    Never allowed to fail a query — any error leaves the package
+    unshipped. Keyed on the applicationId, not a process flag: a driver
+    that stops its session and builds a new one needs the zip shipped
+    AGAIN (addPyFile state dies with the context)."""
     tmp_dir = None
     try:
         app_id = spark.sparkContext.applicationId

@@ -84,40 +84,16 @@ def s6_csv_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # S1/S2/S3 — REST extraction through the Python Data Source ------------------------
 
+_REST_SCHEMA = "doc_id BIGINT, lang STRING, n_chars BIGINT"
+
 _S1_ORACLE = """
 SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 1000
 """
 
-
-@register("s1_rest_source", oracle=_S1_ORACLE, tags=("S1", "S2", "S3"))
-def s1_rest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full E(xtract) path: an in-process mock REST API serves the
-    documents table as paginated JSON (FIXTURES.md B1); the ``restapi``
-    Python Data Source extracts it with page-range partitions and rate
-    limiting, yielding a DataFrame equal to the source table (bounded to
-    1000 docs so the correctness run isn't dominated by mock HTTP time).
-
-    The mock server lives only for the duration of the action, so the
-    result is materialized (persisted + counted) before the server
-    stops; the cache lives as long as the returned DataFrame."""
-    from .mock_api import MockApiServer
-    from .rest import register_rest_source
-
-    records = _docs_records(spark, sf_dir, 1000)
-    register_rest_source(spark)
-    with MockApiServer(records) as server:
-        df = (
-            spark.read.format("restapi")
-            .option("base_url", server.base_url)
-            .option("endpoint", "documents")
-            .option("schema", "doc_id BIGINT, lang STRING, n_chars BIGINT")
-            .option("page_size", "200")
-            .option("pages_per_partition", "2")
-            .load()
-        )
-        df = persist_scoped(df)
-        df.count()  # materialize while the server is alive
-    return df
+# s1b-s3 and s9b all extract the first 100 documents.
+_REST100_ORACLE = """
+SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
+"""
 
 
 def _docs_records(spark: SparkSession, sf_dir: str, limit: int) -> list[dict]:
@@ -128,12 +104,48 @@ def _docs_records(spark: SparkSession, sf_dir: str, limit: int) -> list[dict]:
     ]
 
 
-_S1B_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
+def _mock_rest_read(
+    spark: SparkSession, sf_dir: str, limit: int, server: dict, **options: str
+) -> DataFrame:
+    """Serve documents with ``doc_id < limit`` from an in-process mock
+    REST API (FIXTURES.md B1, configured by ``server``) and extract them
+    with the ``restapi`` source under ``options``.
+
+    The mock server lives only for the duration of the action, so the
+    result is materialized (persisted + counted) before the server
+    stops; the cache lives as long as the returned DataFrame."""
+    from .mock_api import MockApiServer
+    from .rest import register_rest_source
+
+    records = _docs_records(spark, sf_dir, limit)
+    register_rest_source(spark)
+    with MockApiServer(records, **server) as api:
+        df = (
+            spark.read.format("restapi")
+            .option("base_url", api.base_url)
+            .option("endpoint", "documents")
+            .option("schema", _REST_SCHEMA)
+            .options(**options)
+            .load()
+        )
+        df = persist_scoped(df)
+        df.count()  # materialize while the server is alive
+    return df
 
 
-@register("s1b_rest_infer", oracle=_S1B_ORACLE, tags=("S1",))
+@register("s1_rest_source", oracle=_S1_ORACLE, tags=("S1", "S2", "S3"))
+def s1_rest_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full E(xtract) path: an in-process mock REST API serves the
+    documents table as paginated JSON (FIXTURES.md B1); the ``restapi``
+    Python Data Source extracts it with page-range partitions, yielding
+    a DataFrame equal to the source table (bounded to 1000 docs so the
+    correctness run isn't dominated by mock HTTP time)."""
+    return _mock_rest_read(
+        spark, sf_dir, 1000, {}, page_size="200", pages_per_partition="2"
+    )
+
+
+@register("s1b_rest_infer", oracle=_REST100_ORACLE, tags=("S1",))
 def s1b_rest_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema inference for unknown APIs (SURVEY.md §1.2): ``read_rest``
     with ``schema=None`` probes page 1, infers the record schema with
@@ -161,12 +173,7 @@ def s1b_rest_infer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-_S1C_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
-
-
-@register("s1c_rest_env_auth", oracle=_S1C_ORACLE, tags=("S1",))
+@register("s1c_rest_env_auth", oracle=_REST100_ORACLE, tags=("S1",))
 def s1c_rest_env_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Credentialed extraction through the .env contract
     (README.md:16-17,89-92): the token lives only in a .env file, the
@@ -188,7 +195,7 @@ def s1c_rest_env_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             server.base_url,
             "documents",
-            schema="doc_id BIGINT, lang STRING, n_chars BIGINT",
+            schema=_REST_SCHEMA,
             page_size=50,
             env_file=env_file,
             auth_env="SSN_S1C_API_TOKEN",
@@ -198,12 +205,7 @@ def s1c_rest_env_auth(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-_S1D_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
-
-
-@register("s1d_oauth_refresh", oracle=_S1D_ORACLE, tags=("S1", "S3"))
+@register("s1d_oauth_refresh", oracle=_REST100_ORACLE, tags=("S1", "S3"))
 def s1d_oauth_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OAuth2 client-credentials extraction with MID-RUN token expiry
     (README.md:88-92 auth contract beyond static bearer): every token dies
@@ -230,7 +232,7 @@ def s1d_oauth_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark,
             server.base_url,
             "documents",
-            schema="doc_id BIGINT, lang STRING, n_chars BIGINT",
+            schema=_REST_SCHEMA,
             page_size=25,
             pages_per_partition=2,
             env_file=env_file,
@@ -245,105 +247,40 @@ def s1d_oauth_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df
 
 
-_S2_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
-
-
-@register("s2_paginated_read", oracle=_S2_ORACLE, tags=("S2",))
+@register("s2_paginated_read", oracle=_REST100_ORACLE, tags=("S2",))
 def s2_paginated_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pagination as partition parallelism: one InputPartition per page
     (pages_per_partition=1), so every page is fetched by its own task —
     the page loop runs on executors, not the driver (README.md:12)."""
-    from .mock_api import MockApiServer
-    from .rest import register_rest_source
-
-    records = _docs_records(spark, sf_dir, 100)
-    register_rest_source(spark)
-    with MockApiServer(records) as server:
-        df = (
-            spark.read.format("restapi")
-            .option("base_url", server.base_url)
-            .option("endpoint", "documents")
-            .option("schema", "doc_id BIGINT, lang STRING, n_chars BIGINT")
-            .option("page_size", "25")
-            .option("pages_per_partition", "1")
-            .load()
-        )
-        df = persist_scoped(df)
-        df.count()
-    return df
+    return _mock_rest_read(
+        spark, sf_dir, 100, {}, page_size="25", pages_per_partition="1"
+    )
 
 
-_S2B_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
-
-
-@register("s2b_cursor_read", oracle=_S2B_ORACLE, tags=("S2",))
+@register("s2b_cursor_read", oracle=_REST100_ORACLE, tags=("S2",))
 def s2b_cursor_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Opaque-cursor pagination (Stripe/GitHub shape): the reader walks
     next_cursor links serially in one partition — cursor chains cannot be
     probed for parallelism, so scale comes from running many connectors,
     not splitting one chain (README.md:12)."""
-    from .mock_api import MockApiServer
-    from .rest import register_rest_source
-
-    records = _docs_records(spark, sf_dir, 100)
-    register_rest_source(spark)
-    with MockApiServer(records, cursor_mode=True) as server:
-        df = (
-            spark.read.format("restapi")
-            .option("base_url", server.base_url)
-            .option("endpoint", "documents")
-            .option("schema", "doc_id BIGINT, lang STRING, n_chars BIGINT")
-            .option("page_size", "30")
-            .option("pagination", "cursor")
-            .load()
-        )
-        df = persist_scoped(df)
-        df.count()
-    return df
+    return _mock_rest_read(
+        spark, sf_dir, 100, {"cursor_mode": True}, page_size="30", pagination="cursor"
+    )
 
 
-_S2C_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
-
-
-@register("s2c_link_header_read", oracle=_S2C_ORACLE, tags=("S2",))
+@register("s2c_link_header_read", oracle=_REST100_ORACLE, tags=("S2",))
 def s2c_link_header_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFC 5988 Link-header pagination (GitHub/GitLab shape, README.md:12;
     SURVEY S2's third pagination style): the server advertises the next
     page only in a ``Link: <url>; rel="next"`` response header, so the
     reader follows the chain serially in one partition — like cursors,
     link chains cannot be probed for parallelism."""
-    from .mock_api import MockApiServer
-    from .rest import register_rest_source
-
-    records = _docs_records(spark, sf_dir, 100)
-    register_rest_source(spark)
-    with MockApiServer(records, link_mode=True) as server:
-        df = (
-            spark.read.format("restapi")
-            .option("base_url", server.base_url)
-            .option("endpoint", "documents")
-            .option("schema", "doc_id BIGINT, lang STRING, n_chars BIGINT")
-            .option("page_size", "30")
-            .option("pagination", "link")
-            .load()
-        )
-        df = persist_scoped(df)
-        df.count()
-    return df
+    return _mock_rest_read(
+        spark, sf_dir, 100, {"link_mode": True}, page_size="30", pagination="link"
+    )
 
 
-_S9B_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
-
-
-@register("s9b_rest_stream", oracle=_S9B_ORACLE, tags=("S9",))
+@register("s9b_rest_stream", oracle=_REST100_ORACLE, tags=("S9",))
 def s9b_rest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental REST ingestion through the Python streaming data
     source: repeated availableNow runs against one checkpoint walk the
@@ -366,7 +303,7 @@ def s9b_rest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 spark.readStream.format("restapi")
                 .option("base_url", server.base_url)
                 .option("endpoint", "documents")
-                .option("schema", "doc_id BIGINT, lang STRING, n_chars BIGINT")
+                .option("schema", _REST_SCHEMA)
                 .option("page_size", "25")
                 .option("stream_pages_per_batch", "4")
                 .load()
@@ -383,32 +320,17 @@ def s9b_rest_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).select("doc_id", "lang", "n_chars")
 
 
-_S3_ORACLE = """
-SELECT doc_id, lang, n_chars FROM documents WHERE doc_id < 100
-"""
-
-
-@register("s3_rate_limited_read", oracle=_S3_ORACLE, tags=("S3",))
+@register("s3_rate_limited_read", oracle=_REST100_ORACLE, tags=("S3",))
 def s3_rate_limited_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rate-limit + fault survival: the server 429s the first two
     requests (honored via Retry-After backoff) and the reader throttles
     itself to rate_limit_rps per partition — yet the extraction still
     yields exactly the source rows (README.md:12,32)."""
-    from .mock_api import MockApiServer
-    from .rest import register_rest_source
-
-    records = _docs_records(spark, sf_dir, 100)
-    register_rest_source(spark)
-    with MockApiServer(records, fail_first_n=2, fail_mode="429") as server:
-        df = (
-            spark.read.format("restapi")
-            .option("base_url", server.base_url)
-            .option("endpoint", "documents")
-            .option("schema", "doc_id BIGINT, lang STRING, n_chars BIGINT")
-            .option("page_size", "50")
-            .option("rate_limit_rps", "50")
-            .load()
-        )
-        df = persist_scoped(df)
-        df.count()
-    return df
+    return _mock_rest_read(
+        spark,
+        sf_dir,
+        100,
+        {"fail_first_n": 2, "fail_mode": "429"},
+        page_size="50",
+        rate_limit_rps="50",
+    )

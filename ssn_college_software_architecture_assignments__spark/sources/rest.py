@@ -7,27 +7,38 @@ limits (/root/reference/README.md:11-12,21,88-92), producing a DataFrame
 instead of a driver-side list of dicts.
 
 Design (SURVEY.md §4.2):
-- **Pagination parallelism**: ``partitions()`` probes the first page for a
-  total count, then emits one InputPartition per page *range* — pages are
-  fetched concurrently by executors, not serially on the driver.
-- **Rate limiting**: a per-partition token delay bounds aggregate request
-  rate at ``rate_limit_rps`` overall (approximate by design — there is no
-  cluster-global bucket; documented bound, SURVEY.md §7).
+- **Pagination parallelism**: offset pagination probes the first page for
+  a total count, then emits one InputPartition per page *range*, so pages
+  are fetched concurrently by executors, not serially on the driver.
+  Cursor and Link-header chains are serial by protocol (each address
+  arrives with the previous page) and run as one partition.
+- **One page loop**: every read (page ranges, chains, stream batches and
+  stream replay) goes through ``_pages``: throttle, fetch, convert the
+  records to rows, stop at an empty page (README.md:32).
+- **Rate limiting**: each partition sleeps ``1 / rate_limit_rps`` before
+  every page request, so one partition issues at most ``rate_limit_rps``
+  requests per second and the aggregate rate is at most
+  ``partitions x rate_limit_rps``. There is no cluster-global bucket
+  (documented bound, SURVEY.md §7). Cursor and link chains are one
+  partition each, so they are held to ``rate_limit_rps``.
 - **Credential hygiene**: the auth token is read from the environment ON
   THE DRIVER (``auth_env`` names the variable, mirroring the reference's
   .env contract README.md:16-17) and never appears in plans or logs —
   options reprs redact it.
 - **Fault handling** (README.md:32): bounded retries with exponential
-  backoff; HTTP 429 honors Retry-After; non-JSON bodies and 5xx retry
-  then fail the partition cleanly.
+  backoff; HTTP 429 waits the larger of Retry-After and the backoff;
+  non-JSON bodies and 5xx retry then fail the partition cleanly.
 """
 
 from __future__ import annotations
 
+import email.utils
+import itertools
 import json
 import math
 import os
 import re
+import sys
 import time
 import urllib.error
 import urllib.parse
@@ -42,6 +53,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 DEFAULT_TIMEOUT_SEC = 10.0
+MAX_RETRY_AFTER_SEC = 30.0
 
 
 class PageRange(InputPartition):
@@ -50,20 +62,12 @@ class PageRange(InputPartition):
         self.end_page = end_page  # exclusive
 
 
-class CursorWalk(InputPartition):
-    """Opaque-cursor chains are inherently serial (each page's address is
-    only known after the previous page arrives), so the whole walk is one
-    partition. Parallelize ABOVE the connector (many endpoints/tenants),
-    not within a single cursor chain."""
-
-    def __init__(self):
-        super().__init__(value=None)
-
-
-class LinkWalk(InputPartition):
-    """RFC 5988 ``Link: <url>; rel="next"`` chains (GitHub/GitLab shape)
-    are serial for the same reason as cursors: the next page's address
-    arrives in the previous response's headers."""
+class ChainWalk(InputPartition):
+    """Opaque-cursor and RFC 5988 ``Link: <url>; rel="next"`` chains are
+    inherently serial (each page's address is only known after the
+    previous page arrives), so the whole walk is one partition.
+    Parallelize ABOVE the connector (many endpoints/tenants), not within
+    a single chain."""
 
     def __init__(self):
         super().__init__(value=None)
@@ -144,34 +148,78 @@ def parse_link_next(link_header: str | None) -> str | None:
     return None
 
 
-def _fetch_json(
+def _dig(payload, dotted: str):
+    """The value at a dotted path (``meta.total``) in a JSON payload, or
+    None when any step is missing or not an object."""
+    cur = payload
+    for part in dotted.split("."):
+        if not isinstance(cur, dict) or part not in cur:
+            return None
+        cur = cur[part]
+    return cur
+
+
+def _rest_url(base_url: str, endpoint: str, params: dict) -> str:
+    qs = urllib.parse.urlencode(params)
+    return f"{base_url.rstrip('/')}/{endpoint.lstrip('/')}?{qs}"
+
+
+def _secret(options: dict, key: str, env_key: str) -> str:
+    """``options[key]``, else the value of the env var named by
+    ``options[env_key]``. Fails fast, before any request, when that
+    variable is named but unset or empty (reference fault matrix: auth)."""
+    val = options.get(key, "")
+    env_name = options.get(env_key)
+    if val or not env_name:
+        return val
+    val = os.environ.get(env_name, "")
+    if not val:
+        raise ValueError(
+            f"auth env var {env_name!r} is not set in this process — failing "
+            "fast before any request (reference fault matrix: auth)"
+        )
+    return val
+
+
+def _retry_after_sec(value: str | None) -> float | None:
+    """Seconds a ``Retry-After`` header asks for: delay-seconds or an
+    HTTP-date (RFC 9110 §10.2.3). None when absent or unparseable, so the
+    caller falls back to its own backoff."""
+    if not value:
+        return None
+    try:
+        return max(0.0, float(value))
+    except ValueError:
+        pass
+    try:
+        when = email.utils.parsedate_to_datetime(value)
+    except (TypeError, ValueError):
+        return None
+    return max(0.0, when.timestamp() - time.time())
+
+
+def _request_json(
     url: str,
     headers: dict[str, str],
+    data: bytes | None = None,
     max_retries: int = 4,
     backoff_base: float = 0.25,
 ):
-    """GET ``url`` -> parsed JSON with bounded retry/backoff.
+    """GET ``url`` (POST when ``data`` is given) -> ``(payload, headers)``
+    with bounded retries.
 
-    Retries: connectivity errors, HTTP 5xx, HTTP 429 (honoring
-    Retry-After), and invalid (non-JSON) 200 bodies — exactly the fault
-    matrix the reference requires connectors to survive (README.md:32).
-    """
-    return _fetch_json_with_headers(url, headers, max_retries, backoff_base)[0]
-
-
-def _fetch_json_with_headers(
-    url: str,
-    headers: dict[str, str],
-    max_retries: int = 4,
-    backoff_base: float = 0.25,
-):
-    """Same retry/backoff loop as :func:`_fetch_json`, but also returns
-    the response headers (link-header pagination reads ``Link`` from
-    them). Returns ``(payload, headers_dict)``."""
+    Retries connectivity errors, HTTP 5xx, HTTP 429 and invalid (non-JSON)
+    200 bodies — the fault matrix the reference requires connectors to
+    survive (README.md:32). Any other 4xx is a config or auth error and
+    raises at once. After failed attempt ``k`` the loop sleeps
+    ``backoff_base * 2**k`` once; a 429 sleeps the larger of that and its
+    Retry-After (capped at ``MAX_RETRY_AFTER_SEC``). The last attempt
+    raises without sleeping."""
     last_err: Exception | None = None
     for attempt in range(max_retries + 1):
+        wait = backoff_base * (2**attempt)
         try:
-            req = urllib.request.Request(url, headers=headers)
+            req = urllib.request.Request(url, data=data, headers=headers)
             with urllib.request.urlopen(req, timeout=DEFAULT_TIMEOUT_SEC) as resp:
                 body = resp.read()
                 resp_headers = dict(resp.headers.items())
@@ -182,23 +230,24 @@ def _fetch_json_with_headers(
                 link_values = resp.headers.get_all("Link")
                 if link_values:
                     resp_headers["Link"] = ", ".join(link_values)
-            try:
-                return json.loads(body), resp_headers
-            except json.JSONDecodeError as exc:
-                last_err = ValueError(f"invalid JSON response from {url}: {exc}")
+            return json.loads(body), resp_headers
+        except json.JSONDecodeError as exc:
+            last_err = ValueError(f"invalid JSON response from {url}: {exc}")
         except urllib.error.HTTPError as exc:
             if exc.code == 429:
-                retry_after = float(exc.headers.get("Retry-After", "1") or 1)
-                time.sleep(min(retry_after, 30.0))
-                last_err = exc
-            elif 500 <= exc.code < 600:
-                last_err = exc
-            else:
-                raise  # 4xx other than 429: config/auth error — fail fast
+                retry_after = _retry_after_sec(exc.headers.get("Retry-After"))
+                if retry_after is not None:
+                    wait = max(wait, min(retry_after, MAX_RETRY_AFTER_SEC))
+            elif not 500 <= exc.code < 600:
+                raise
+            last_err = exc
         except (urllib.error.URLError, TimeoutError, OSError) as exc:
             last_err = exc
-        time.sleep(backoff_base * (2**attempt))
-    raise RuntimeError(f"REST fetch failed after {max_retries + 1} attempts: {last_err}")
+        if attempt < max_retries:
+            time.sleep(wait)
+    raise RuntimeError(
+        f"REST request failed after {max_retries + 1} attempts: {last_err}"
+    )
 
 
 def fetch_oauth_token(
@@ -209,8 +258,8 @@ def fetch_oauth_token(
 ) -> str:
     """OAuth2 client-credentials grant (RFC 6749 §4.4): POST the token
     endpoint with form-encoded credentials, return the access token.
-    Reuses the connector's retry/backoff policy for 5xx/429/connectivity;
-    a 4xx is a credential error and fails fast."""
+    Uses the connector's one retry loop for 5xx/429/connectivity; a 4xx
+    is a credential error and fails fast."""
     data = urllib.parse.urlencode(
         {
             "grant_type": "client_credentials",
@@ -218,29 +267,16 @@ def fetch_oauth_token(
             "client_secret": client_secret,
         }
     ).encode()
-    last_err: Exception | None = None
-    for attempt in range(max_retries + 1):
-        try:
-            req = urllib.request.Request(
-                token_url,
-                data=data,
-                headers={"Content-Type": "application/x-www-form-urlencoded"},
-            )
-            with urllib.request.urlopen(req, timeout=DEFAULT_TIMEOUT_SEC) as resp:
-                payload = json.loads(resp.read())
-            token = payload.get("access_token")
-            if not token:
-                raise ValueError("token endpoint returned no access_token")
-            return str(token)
-        except urllib.error.HTTPError as exc:
-            if exc.code == 429 or 500 <= exc.code < 600:
-                last_err = exc
-            else:
-                raise
-        except (urllib.error.URLError, TimeoutError, OSError) as exc:
-            last_err = exc
-        time.sleep(0.25 * (2**attempt))
-    raise RuntimeError(f"OAuth token fetch failed: {last_err}")
+    payload, _ = _request_json(
+        token_url,
+        {"Content-Type": "application/x-www-form-urlencoded"},
+        data=data,
+        max_retries=max_retries,
+    )
+    token = payload.get("access_token") if isinstance(payload, dict) else None
+    if not token:
+        raise ValueError("token endpoint returned no access_token")
+    return str(token)
 
 
 class RestDataSourceReader(DataSourceReader):
@@ -249,7 +285,7 @@ class RestDataSourceReader(DataSourceReader):
         self.base_url = options["base_url"].rstrip("/")
         self.endpoint = options.get("endpoint", "").lstrip("/")
         self.page_size = int(options.get("page_size", "100"))
-        self.pagination = options.get("pagination", "offset")  # offset | cursor
+        self.pagination = options.get("pagination", "offset")  # offset | cursor | link
         self.page_param = options.get("page_param", "page")
         self.size_param = options.get("size_param", "per_page")
         self.cursor_param = options.get("cursor_param", "cursor")
@@ -257,7 +293,8 @@ class RestDataSourceReader(DataSourceReader):
         self.data_path = options.get("data_path", "data")
         self.total_path = options.get("total_path", "meta.total")
         self.max_pages = int(options.get("max_pages", "100000"))
-        self.rate_limit_rps = float(options.get("rate_limit_rps", "0") or 0)
+        rate_limit_rps = float(options.get("rate_limit_rps", "0") or 0)
+        self._delay = 1.0 / rate_limit_rps if rate_limit_rps > 0 else 0.0
         self.pages_per_partition = int(options.get("pages_per_partition", "4"))
         self.extra_params = json.loads(options.get("params", "{}"))
         # Credential: preferred path is read_rest(), which resolves
@@ -265,47 +302,23 @@ class RestDataSourceReader(DataSourceReader):
         # token as the ``auth_token`` option. ``auth_env`` is also honored
         # here for deployments whose env is present at JVM launch (worker
         # processes inherit the JVM environment, not the live driver one).
-        token = options.get("auth_token", "")
-        auth_env = options.get("auth_env")
-        if not token and auth_env:
-            token = os.environ.get(auth_env, "")
-            if not token:
-                raise ValueError(
-                    f"auth env var {auth_env!r} is not set — failing fast before "
-                    "any request (reference fault matrix: auth)"
-                )
+        token = _secret(options, "auth_token", "auth_env")
         self._headers = {"Accept": "application/json"}
         if token:
             self._headers["Authorization"] = f"Bearer {token}"
         # OAuth2 client-credentials (RFC 6749 §4.4): token fetched lazily
         # per task process and refreshed once on 401 — bearer tokens
         # expire mid-extraction in long jobs, and a static token can't
-        # survive that (README.md:88-92 auth contract, extended).
+        # survive that (README.md:88-92 auth contract, extended). Client
+        # credentials come from direct options, else from the env vars
+        # the ``*_env`` options name — the narrow-exposure path (only the
+        # env var NAME rides the options / plan / UI).
         self._token_url = options.get("token_url")
-        # OAuth client credentials: prefer direct options, else resolve
-        # *_env names from this process's environment — the narrow-exposure
-        # path (only the env var NAME rides the options / plan / UI) for
-        # deployments whose env is present at JVM launch.
-        self._client_id = self._secret_option(options, "client_id")
-        self._client_secret = self._secret_option(options, "client_secret")
+        self._client_id = _secret(options, "client_id", "client_id_env")
+        self._client_secret = _secret(options, "client_secret", "client_secret_env")
         self._field_names = [f.name for f in schema.fields]
 
     # -- helpers ------------------------------------------------------------
-
-    @staticmethod
-    def _secret_option(options: dict, key: str) -> str:
-        """Resolve ``key`` from a direct option, else from the env var
-        named by ``{key}_env`` (fail fast if named but absent)."""
-        val = options.get(key, "")
-        env_name = options.get(f"{key}_env")
-        if not val and env_name:
-            val = os.environ.get(env_name, "")
-            if not val:
-                raise ValueError(
-                    f"oauth env var {env_name!r} is not set in this process — "
-                    "failing fast before any request (reference fault matrix: auth)"
-                )
-        return val
 
     def _refresh_token(self) -> None:
         self._headers["Authorization"] = "Bearer " + fetch_oauth_token(
@@ -313,70 +326,114 @@ class RestDataSourceReader(DataSourceReader):
         )
 
     def _get(self, url: str):
-        """GET with OAuth refresh: fetch a token before the first request
-        if none is held, re-fetch ONCE on 401 (expired mid-run)."""
+        """GET -> ``(payload, headers)`` with OAuth refresh: fetch a token
+        before the first request if none is held, re-fetch ONCE on 401
+        (expired mid-run)."""
         if self._token_url and "Authorization" not in self._headers:
             self._refresh_token()
         try:
-            return _fetch_json(url, self._headers)
+            return _request_json(url, self._headers)
         except urllib.error.HTTPError as exc:
-            if exc.code == 401 and self._token_url:
-                self._refresh_token()
-                return _fetch_json(url, self._headers)
-            raise
+            if exc.code != 401 or not self._token_url:
+                raise
+        self._refresh_token()
+        return _request_json(url, self._headers)
 
-    def _get_with_headers(self, url: str):
-        if self._token_url and "Authorization" not in self._headers:
-            self._refresh_token()
-        try:
-            return _fetch_json_with_headers(url, self._headers)
-        except urllib.error.HTTPError as exc:
-            if exc.code == 401 and self._token_url:
-                self._refresh_token()
-                return _fetch_json_with_headers(url, self._headers)
-            raise
+    def _url(self, params: dict | None = None) -> str:
+        """The endpoint's address with the ``params`` option, ``params``
+        and the page size in its query string."""
+        return _rest_url(
+            self.base_url,
+            self.endpoint,
+            {**self.extra_params, **(params or {}), self.size_param: self.page_size},
+        )
 
-    def _page_url(self, page: int) -> str:
-        params = dict(self.extra_params)
-        params[self.page_param] = page
-        params[self.size_param] = self.page_size
-        qs = urllib.parse.urlencode(params)
-        return f"{self.base_url}/{self.endpoint}?{qs}"
+    def _pages(self, url: str, next_url, limit: int):
+        """The one page loop. For at most ``limit`` pages: sleep the
+        rate-limit delay, fetch ``url`` and yield ``(payload, rows,
+        next)``, where ``next = next_url(url, payload, headers)`` is the
+        following page's address (None at the end of the chain). An empty
+        page is yielded with no rows and ends the walk (README.md:32)."""
+        for _ in range(limit):
+            if self._delay:
+                time.sleep(self._delay)
+            payload, headers = self._get(url)
+            records = _dig(payload, self.data_path) or []
+            rows = [tuple(rec.get(n) for n in self._field_names) for rec in records]
+            nxt = next_url(url, payload, headers) if rows else None
+            yield payload, rows, nxt
+            if nxt is None:
+                return
+            url = nxt
 
-    def _cursor_url(self, cursor: str | None) -> str:
-        params = dict(self.extra_params)
-        if cursor is not None:
-            params[self.cursor_param] = cursor
-        params[self.size_param] = self.page_size
-        qs = urllib.parse.urlencode(params)
-        return f"{self.base_url}/{self.endpoint}?{qs}"
+    def _page_walk(self, start: int, end: int):
+        """Offset pagination: pages ``start`` .. ``end - 1``."""
+        following = itertools.count(start + 1)
+        return self._pages(
+            self._url({self.page_param: start}),
+            lambda *_: self._url({self.page_param: next(following)}),
+            end - start,
+        )
 
-    def _dig(self, payload, dotted: str):
-        cur = payload
-        for part in dotted.split("."):
-            if not isinstance(cur, dict) or part not in cur:
-                return None
-            cur = cur[part]
-        return cur
+    def _next_in_chain(self, url: str, payload, headers) -> str | None:
+        """The next address of a cursor chain (the body's
+        ``next_cursor_path``) or a link chain (the ``Link: <url>;
+        rel="next"`` header, resolved against the current URL so servers
+        may emit absolute or relative targets)."""
+        if self.pagination == "link":
+            nxt = parse_link_next(headers.get("Link"))
+            return None if nxt is None else urllib.parse.urljoin(url, nxt)
+        cursor = _dig(payload, self.next_cursor_path)
+        return None if cursor is None else self._url({self.cursor_param: str(cursor)})
+
+    def _read_chain(self):
+        """Walk a cursor or link chain (README.md:12; SURVEY S2 names
+        offset/cursor/link-header) from the endpoint with only the size
+        param.
+
+        A lost next pointer is indistinguishable from the end of the
+        chain, so a parsing gap, a server that drops its next pointer
+        early or a misconfigured ``next_cursor_path`` would silently
+        truncate the extraction. When the API advertises a (cleanly
+        numeric — it is advisory) total, a chain that ends short of it
+        raises instead. A walk that used up ``max_pages`` with a next
+        address still in hand is a deliberately capped read: it returns
+        the bounded prefix without the cross-check."""
+        n_pages = n_rows = 0
+        expected = nxt = None
+        for payload, rows, nxt in self._pages(
+            self._url(), self._next_in_chain, self.max_pages
+        ):
+            if n_pages == 0:
+                expected = _advisory_int(_dig(payload, self.total_path))
+            n_pages += 1
+            n_rows += len(rows)
+            yield from rows
+        if n_pages == self.max_pages and nxt is not None:
+            return
+        if expected is not None and n_rows < expected:
+            raise RuntimeError(
+                f"{self.pagination} chain ended after {n_rows} records but the "
+                f"API advertised {expected} — a next pointer was lost "
+                "(silent truncation)"
+            )
 
     # -- DataSourceReader API -------------------------------------------------
 
     def partitions(self):
         """Probe page 1 for the total record count, then one partition per
         page range so the page loop runs ON EXECUTORS in parallel. Cursor
-        pagination cannot be probed — it yields one serial partition."""
-        if self.pagination == "cursor":
-            return [CursorWalk()]
-        if self.pagination == "link":
-            return [LinkWalk()]
-        first = self._get(self._page_url(1))
-        total = _advisory_int(self._dig(first, self.total_path))
-        records = self._dig(first, self.data_path) or []
+        and link chains cannot be probed — each yields one serial
+        partition."""
+        if self.pagination in ("cursor", "link"):
+            return [ChainWalk()]
+        first, _ = self._get(self._url({self.page_param: 1}))
+        total = _advisory_int(_dig(first, self.total_path))
         if total is None:
             # Unknown (or non-numeric — the total is advisory) total: fall
-            # back to the serial PageRange walk in one partition (can't
-            # parallelize an unprobeable chain).
-            return [PageRange(1, self.max_pages)]
+            # back to a serial walk of up to max_pages pages in one
+            # partition (can't parallelize an unprobeable chain).
+            return [PageRange(1, self.max_pages + 1)]
         n_pages = min(max(1, math.ceil(total / self.page_size)), self.max_pages)
         step = max(1, self.pages_per_partition)
         return [
@@ -385,101 +442,11 @@ class RestDataSourceReader(DataSourceReader):
         ]
 
     def read(self, partition):
-        if isinstance(partition, CursorWalk):
-            yield from self._read_cursor_chain()
+        if isinstance(partition, ChainWalk):
+            yield from self._read_chain()
             return
-        if isinstance(partition, LinkWalk):
-            yield from self._read_link_chain()
-            return
-        delay = 1.0 / self.rate_limit_rps if self.rate_limit_rps > 0 else 0.0
-        for page in range(partition.start_page, partition.end_page):
-            if delay:
-                time.sleep(delay)
-            payload = self._get(self._page_url(page))
-            records = self._dig(payload, self.data_path)
-            if not records:  # empty payload terminates cleanly (README.md:32)
-                break
-            for rec in records:
-                yield tuple(rec.get(name) for name in self._field_names)
-
-    def _read_link_chain(self):
-        """Follow ``Link: <url>; rel="next"`` headers (README.md:12; SURVEY
-        S2 names offset/cursor/link-header). The first request goes to the
-        endpoint with only the size param; every later address comes from
-        the previous response's headers, resolved relative to the current
-        URL so servers may emit absolute or relative targets."""
-        delay = 1.0 / self.rate_limit_rps if self.rate_limit_rps > 0 else 0.0
-        url = self._cursor_url(None)
-        n_yielded, expected_total = 0, None
-        for _ in range(self.max_pages):
-            if delay:
-                time.sleep(delay)
-            payload, resp_headers = self._get_with_headers(url)
-            if expected_total is None:
-                expected_total = self._dig(payload, self.total_path)
-            records = self._dig(payload, self.data_path)
-            if not records:
-                break
-            for rec in records:
-                yield tuple(rec.get(name) for name in self._field_names)
-            n_yielded += len(records)
-            nxt = parse_link_next(
-                resp_headers.get("Link") or resp_headers.get("link")
-            )
-            if nxt is None:
-                break
-            url = urllib.parse.urljoin(url, nxt)
-        else:
-            # The max_pages budget ran out with a live rel="next" still in
-            # hand: a deliberately capped read, not truncation — return
-            # the bounded prefix without tripping the cross-check.
-            return
-        # A missing rel="next" is indistinguishable from end-of-chain, so
-        # a parsing gap would silently truncate the extraction. When the
-        # API advertises a (cleanly numeric — it is advisory) total,
-        # cross-check it and fail loudly instead.
-        expected = _advisory_int(expected_total)
-        if expected is not None and n_yielded < expected:
-            raise RuntimeError(
-                f"link-header chain ended after {n_yielded} records but the "
-                f"API advertised {expected} — a rel=\"next\" link was "
-                "lost (silent truncation)"
-            )
-
-    def _read_cursor_chain(self):
-        delay = 1.0 / self.rate_limit_rps if self.rate_limit_rps > 0 else 0.0
-        cursor: str | None = None
-        n_yielded, expected_total = 0, None
-        for _ in range(self.max_pages):
-            if delay:
-                time.sleep(delay)
-            payload = self._get(self._cursor_url(cursor))
-            if expected_total is None:
-                expected_total = self._dig(payload, self.total_path)
-            records = self._dig(payload, self.data_path)
-            if not records:
-                break
-            for rec in records:
-                yield tuple(rec.get(name) for name in self._field_names)
-            n_yielded += len(records)
-            nxt = self._dig(payload, self.next_cursor_path)
-            if nxt is None:
-                break
-            cursor = str(nxt)
-        else:
-            # Budget exhausted with a live next_cursor: deliberately
-            # capped read — return the bounded prefix, no cross-check.
-            return
-        # Same silent-truncation net as the link chain: a server that
-        # emits next_cursor=null early (or a misconfigured
-        # next_cursor_path) would otherwise look like clean end-of-chain.
-        expected = _advisory_int(expected_total)
-        if expected is not None and n_yielded < expected:
-            raise RuntimeError(
-                f"cursor chain ended after {n_yielded} records but the API "
-                f"advertised {expected} — next_cursor disappeared "
-                "early (silent truncation)"
-            )
+        for _, rows, _ in self._page_walk(partition.start_page, partition.end_page):
+            yield from rows
 
 
 class RestStreamReader(SimpleDataSourceStreamReader):
@@ -490,8 +457,9 @@ class RestStreamReader(SimpleDataSourceStreamReader):
     stream OFFSET is the next page number, each micro-batch fetches the
     pages that appeared since the last committed offset, and the
     checkpoint makes re-runs exactly-once — no duplicate loads, no
-    driver-side bookkeeping. Rate limiting and retry/backoff are the
-    same code path as the batch reader."""
+    driver-side bookkeeping. Batches and replays go through the batch
+    reader's page loop, so rate limiting and retry/backoff are the same
+    code path."""
 
     def __init__(self, schema: StructType, options: dict):
         self._r = RestDataSourceReader(schema, options)
@@ -513,29 +481,19 @@ class RestStreamReader(SimpleDataSourceStreamReader):
         """Fetch up to pages_per_batch new pages; advance the offset past
         the pages actually consumed (an empty page ends the batch early —
         README.md:32 empty-payload termination)."""
-        r = self._r
-        delay = 1.0 / r.rate_limit_rps if r.rate_limit_rps > 0 else 0.0
         page = int(start["page"])
-        rows: list[tuple] = []
-        for _ in range(self.pages_per_batch):
-            if delay:
-                time.sleep(delay)
-            payload = r._get(r._page_url(page))
-            records = r._dig(payload, r.data_path)
-            if not records:
-                break
-            for rec in records:
-                rows.append(tuple(rec.get(n) for n in r._field_names))
-            page += 1
-        return iter(rows), {"page": page}
+        pages = [
+            rows
+            for _, rows, _ in self._r._page_walk(page, page + self.pages_per_batch)
+            if rows
+        ]
+        batch = [row for rows in pages for row in rows]
+        return iter(batch), {"page": page + len(pages)}
 
     def readBetweenOffsets(self, start: dict, end: dict):
         """Deterministic replay of a committed range (failure recovery)."""
-        r = self._r
-        for page in range(int(start["page"]), int(end["page"])):
-            payload = r._get(r._page_url(page))
-            for rec in r._dig(payload, r.data_path) or []:
-                yield tuple(rec.get(n) for n in r._field_names)
+        for _, rows, _ in self._r._page_walk(int(start["page"]), int(end["page"])):
+            yield from rows
 
 
 class RestDataSource(DataSource):
@@ -561,6 +519,17 @@ class RestDataSource(DataSource):
 
 
 def register_rest_source(spark) -> None:
+    """Register the ``restapi`` format on ``spark``.
+
+    This module is pickled BY VALUE. The streaming source is unpickled in
+    a driver-side Python process that ``addPyFile`` does not reach, so
+    pickling by reference would fail there with ``ModuleNotFoundError``
+    whenever the package is not on the driver's import path (a working
+    directory outside the repo). The module imports only the stdlib and
+    pyspark at module level, so its pickled classes need nothing else."""
+    from pyspark import cloudpickle
+
+    cloudpickle.register_pickle_by_value(sys.modules[__name__])
     spark.dataSource.register(RestDataSource)
 
 
@@ -586,13 +555,9 @@ def infer_rest_schema(
     later runs EVOLVE it: previously-pinned fields keep their pinned types
     (no silent type drift), genuinely new fields are appended. Returns a
     DDL string for the ``schema`` option."""
-    params = urllib.parse.urlencode({page_param: 1, size_param: page_size})
-    url = f"{base_url.rstrip('/')}/{endpoint.lstrip('/')}?{params}"
-    payload = _fetch_json(url, headers or {"Accept": "application/json"})
-    cur = payload
-    for part in data_path.split("."):
-        cur = cur.get(part) if isinstance(cur, dict) else None
-    records = cur or []
+    url = _rest_url(base_url, endpoint, {page_param: 1, size_param: page_size})
+    payload, _ = _request_json(url, headers or {"Accept": "application/json"})
+    records = _dig(payload, data_path)
     if not records:
         raise ValueError(f"cannot infer schema: no records at {data_path!r}")
     # Spill the sample page to a temp JSONL file so inference runs through
@@ -611,16 +576,13 @@ def infer_rest_schema(
         os.unlink(sample_path)
     if pin_path:
         if os.path.exists(pin_path):
-            from pyspark.sql.types import StructType as _ST
-
             with open(pin_path, encoding="utf-8") as fh:
-                pinned = _ST.fromJson(json.load(fh))
+                pinned = StructType.fromJson(json.load(fh))
             pinned_names = {f.name for f in pinned.fields}
-            evolved = _ST(
+            inferred = StructType(
                 pinned.fields
                 + [f for f in inferred.fields if f.name not in pinned_names]
             )
-            inferred = evolved
         with open(pin_path, "w", encoding="utf-8") as fh:
             json.dump(inferred.jsonValue(), fh)
     return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in inferred.fields)
@@ -657,48 +619,34 @@ def read_rest(spark, base_url: str, endpoint: str, schema: str | None = None, **
         from .dotenv import load_dotenv
 
         load_dotenv(env_file)
-    auth_env = opts.pop("auth_env", None)
-    token = ""
-    if auth_env:
-        token = os.environ.get(auth_env, "")
-        if not token:
-            raise ValueError(
-                f"auth env var {auth_env!r} is not set — failing fast before "
-                "any request (reference fault matrix: auth)"
-            )
+    token = _secret(opts, "auth_token", "auth_env")
+    opts.pop("auth_env", None)
+    if token:
         opts["auth_token"] = token
     # OAuth2 client-credentials: resolve client id/secret from the
-    # DRIVER's environment (same .env contract as auth_env) and hand them
-    # to the reader, which fetches and refreshes tokens itself (401 ->
-    # one re-fetch). A driver-fetched token alone would not survive
-    # expiry mid-extraction on executors.
+    # DRIVER's environment (same .env contract as auth_env), failing fast
+    # here, and hand them to the reader, which fetches and refreshes
+    # tokens itself (401 -> one re-fetch). A driver-fetched token alone
+    # would not survive expiry mid-extraction on executors.
     if "token_url" in opts:
         ship_secrets = str(opts.pop("ship_secrets", "true")).lower() != "false"
-        resolved: dict[str, str] = {}
-        for opt_key in ("client_id", "client_secret"):
-            env_key = opts.get(f"{opt_key}_env")
-            if env_key:
-                val = os.environ.get(env_key, "")
-                if not val:
-                    raise ValueError(
-                        f"oauth env var {env_key!r} is not set — failing fast "
-                        "before any request (reference fault matrix: auth)"
-                    )
-                resolved[opt_key] = val
-                if ship_secrets:
-                    # default: ship the value (works regardless of worker
-                    # env) — see the SECRET-EXPOSURE CAVEAT above
-                    opts.pop(f"{opt_key}_env")
-                    opts[opt_key] = val
+        creds = {
+            key: _secret(opts, key, f"{key}_env")
+            for key in ("client_id", "client_secret")
+        }
+        if ship_secrets:
+            # default: ship the values (works regardless of worker env) —
+            # see the SECRET-EXPOSURE CAVEAT above
+            for key, val in creds.items():
+                if opts.pop(f"{key}_env", None):
+                    opts[key] = val
         # A driver-held token is only needed to authenticate the schema
         # inference probe below; tasks fetch (and refresh) their own.
         # Fetching one unconditionally would also pollute token-endpoint
         # hit counts that tests use to isolate reader refresh behavior.
         if schema is None and not token:
             token = fetch_oauth_token(
-                opts["token_url"],
-                resolved.get("client_id", opts.get("client_id", "")),
-                resolved.get("client_secret", opts.get("client_secret", "")),
+                opts["token_url"], creds["client_id"], creds["client_secret"]
             )
     if schema is None:
         headers = {"Accept": "application/json"}

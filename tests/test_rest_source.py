@@ -3,6 +3,8 @@ invalid responses, empty payloads, rate limits, connectivity, auth."""
 
 from __future__ import annotations
 
+import json
+
 import pytest
 
 from ssn_college_software_architecture_assignments__spark.sources.mock_api import (
@@ -561,3 +563,227 @@ def test_stream_rejects_non_offset_pagination(spark):
             finally:
                 if q is not None:
                     q.stop()
+
+
+# -- retry loop, stream replay, capped reads and foreign-cwd streaming --
+
+
+class _Resp:
+    """Just enough of an ``http.client.HTTPResponse`` for the retry loop."""
+
+    def __init__(self, payload):
+        import email.message
+
+        self._body = json.dumps(payload).encode()
+        self.headers = email.message.Message()
+
+    def read(self):
+        return self._body
+
+    def __enter__(self):
+        return self
+
+    def __exit__(self, *exc):
+        return False
+
+
+def _http_429(retry_after: str):
+    import email.message
+    import urllib.error
+
+    hdrs = email.message.Message()
+    hdrs["Retry-After"] = retry_after
+    return urllib.error.HTTPError(
+        "http://api.invalid/items", 429, "Too Many", hdrs, None
+    )
+
+
+def _schema_type():
+    """SCHEMA as a StructType, built without a Spark session."""
+    from pyspark.sql.types import (
+        DoubleType,
+        LongType,
+        StringType,
+        StructField,
+        StructType,
+    )
+
+    return StructType(
+        [
+            StructField("id", LongType()),
+            StructField("name", StringType()),
+            StructField("price", DoubleType()),
+        ]
+    )
+
+
+def _recorded_sleeps(monkeypatch) -> list[float]:
+    """Replace the connector's clock with one that records every sleep."""
+    import time
+    import types
+
+    from ssn_college_software_architecture_assignments__spark.sources import rest
+
+    sleeps: list[float] = []
+    monkeypatch.setattr(
+        rest, "time", types.SimpleNamespace(sleep=sleeps.append, time=time.time)
+    )
+    return sleeps
+
+
+@pytest.mark.parametrize(
+    "case", ["http_date_retry_after", "no_sleep_after_last", "one_429_wait"]
+)
+def test_retry_loop_waits(monkeypatch, case):
+    """A Retry-After given as an HTTP-date (RFC 9110 §10.2.3) is waited
+    out and retried; the last failed attempt raises without sleeping; a
+    429 sleeps once, the larger of Retry-After and the backoff."""
+    import email.utils
+    import time
+    import urllib.error
+    import urllib.request
+
+    from ssn_college_software_architecture_assignments__spark.sources.rest import (
+        PageRange,
+        RestDataSourceReader,
+    )
+
+    page = {"data": [{"id": 1, "name": "a", "price": 1.5}]}
+    outcomes = {
+        "http_date_retry_after": [
+            _http_429(email.utils.formatdate(time.time() + 5, usegmt=True)),
+            _Resp(page),
+        ],
+        "no_sleep_after_last": [urllib.error.URLError("connection refused")] * 5,
+        "one_429_wait": [_http_429("3"), _Resp(page)],
+    }[case]
+
+    def fake_urlopen(req, timeout=None):
+        outcome = outcomes.pop(0)
+        if isinstance(outcome, Exception):
+            raise outcome
+        return outcome
+
+    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+    sleeps = _recorded_sleeps(monkeypatch)
+    reader = RestDataSourceReader(
+        _schema_type(), {"base_url": "http://api.invalid", "endpoint": "items"}
+    )
+    if case == "no_sleep_after_last":
+        with pytest.raises(RuntimeError, match="5 attempts"):
+            list(reader.read(PageRange(1, 2)))
+        assert sleeps == [0.25, 0.5, 1.0, 2.0]
+        return
+    assert list(reader.read(PageRange(1, 2))) == [(1, "a", 1.5)]
+    assert not outcomes
+    if case == "one_429_wait":
+        assert sleeps == [3.0]
+    else:
+        assert len(sleeps) == 1 and 3.0 <= sleeps[0] <= 5.0
+
+
+def test_stream_replay_returns_committed_pages_throttled(monkeypatch):
+    """readBetweenOffsets replays exactly the committed pages [2, 4) and
+    goes through the same rate-limited page loop as every other read."""
+    from ssn_college_software_architecture_assignments__spark.sources.rest import (
+        RestStreamReader,
+    )
+
+    sleeps = _recorded_sleeps(monkeypatch)
+    with MockApiServer(RECORDS[:50]) as server:
+        reader = RestStreamReader(
+            _schema_type(),
+            {
+                "base_url": server.base_url,
+                "endpoint": "items",
+                "page_size": "10",
+                "rate_limit_rps": "20",
+            },
+        )
+        rows = list(reader.readBetweenOffsets({"page": 2}, {"page": 4}))
+        assert server.request_count == 2
+    assert [r[0] for r in rows] == list(range(10, 30))
+    assert sleeps == [0.05, 0.05]
+
+
+_FOREIGN_CWD_STREAM = """
+import sys
+sys.path.insert(0, {root!r})
+from pyspark.sql import SparkSession
+from ssn_college_software_architecture_assignments__spark.sources.mock_api import (
+    MockApiServer,
+)
+from ssn_college_software_architecture_assignments__spark.sources.rest import (
+    register_rest_source,
+)
+
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+)
+register_rest_source(spark)
+with MockApiServer([{{"id": i}} for i in range(10)]) as server:
+    q = (
+        spark.readStream.format("restapi")
+        .option("base_url", server.base_url)
+        .option("endpoint", "items")
+        .option("schema", "id BIGINT")
+        .option("page_size", "5")
+        .load()
+        .writeStream.format("memory")
+        .queryName("rest_pages")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+print("ROWS", spark.table("rest_pages").count())
+spark.stop()
+"""
+
+
+def test_stream_from_foreign_cwd(tmp_path):
+    """A driver whose working directory is outside the repo, with the
+    repo only on its runtime sys.path, can run a two-page REST stream:
+    the streaming source's Python runner must not need to import the
+    package."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "stream.py"
+    script.write_text(_FOREIGN_CWD_STREAM.format(root=root))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, str(script)],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+        env=env,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    assert "ROWS 10" in out.stdout
+
+
+@pytest.mark.parametrize("meta_total", [250, "n/a"])
+def test_offset_capped_read_returns_max_pages(meta_total):
+    """max_pages caps an offset read at the same number of pages whether
+    or not the API advertises a usable total."""
+    from ssn_college_software_architecture_assignments__spark.sources.rest import (
+        RestDataSourceReader,
+    )
+
+    with MockApiServer(RECORDS, meta_total=meta_total) as server:
+        reader = RestDataSourceReader(
+            _schema_type(),
+            {
+                "base_url": server.base_url,
+                "endpoint": "items",
+                "page_size": "60",
+                "max_pages": "2",
+            },
+        )
+        rows = [row for p in reader.partitions() for row in reader.read(p)]
+    assert [r[0] for r in rows] == list(range(120))
