@@ -22,12 +22,16 @@ from ..registry import register
 from ..scratch import persist_scoped
 from .similarity import (
     _X3R2_STEPS,
+    _centroid_array,
     _dvec,
     _x3r2_ctes,
     _x3r2_train,
+    assign_cells,
     cosine,
     dot,
     l2_norm,
+    nearest_cells,
+    serve_ivf_topk,
     _X3R2_ASG_CTES,
     x3r2_trained_assign,
 )
@@ -1970,63 +1974,6 @@ FROM (
   FROM pairs
 ) WHERE rn <= 3
 """
-
-
-def _centroid_array(centroids: DataFrame) -> DataFrame:
-    """1-row (cents: array<struct<cent_id, cemb, cnrm>>) broadcast side
-    of every centroid comparison — ONE site for the zero-norm guard and
-    the struct layout, shared by assign_cells (top-1 argmax fold) and
-    x3v's probe ranking (top-N sort); the x3v pytest additionally
-    asserts the two ranking routes agree at rank 1."""
-    return (
-        centroids.filter(l2_norm(F.col("cemb")) > 0)
-        .select(
-            F.struct(
-                F.col("cent_id"),
-                F.col("cemb"),
-                l2_norm(F.col("cemb")).alias("cnrm"),
-            ).alias("c")
-        )
-        .agg(F.collect_list("c").alias("cents"))
-    )
-
-
-# The per-row nearest-centroid argmax fold over the broadcast ``cents``
-# array — module-level (r18) so x3x4's merge reassignment can apply
-# THE SAME law while keeping its cell_before column in the projection
-# (assign_cells hardcodes its output columns). Strict (cos, cent_id)
-# comparison: the pick is independent of collect_list's array order.
-_ASSIGN_CELL_EXPR = """
-        aggregate(
-          transform(cents, c -> named_struct(
-            'cid', c.cent_id,
-            'cos', aggregate(zip_with(emb, c.cemb, (x, y) -> x * y),
-                             0D, (acc, v) -> acc + v) / (nrm * c.cnrm))),
-          named_struct('bid', CAST(-1 AS BIGINT), 'bcos', CAST(-2.0 AS DOUBLE)),
-          (acc, s) -> IF(s.cos > acc.bcos OR (s.cos = acc.bcos AND s.cid < acc.bid),
-                         named_struct('bid', s.cid, 'bcos', s.cos), acc),
-          acc -> acc.bid)
-        """
-
-
-def assign_cells(emb: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vec_id, emb, nrm, cell): MAP-SIDE nearest-centroid assignment
-    shared by x2j SemDeDup and the x3u kNN graph. The K centroids
-    collapse to a single array row, broadcast, and each vector folds an
-    argmax over it in one per-row expression — no n*K window (a
-    row_number over the crossJoin would Exchange+sort 16x-inflated
-    corpus rows, the shuffle this family's scale story forbids). The
-    fold's strict (cos, cent_id) comparison makes the pick independent
-    of collect_list's nondeterministic array order. Zero-norm guards
-    run BEFORE any cosine: under ANSI mode the divide would throw, and
-    a zero vector has no defined neighbor."""
-    emb = emb.withColumn("nrm", l2_norm(F.col("emb"))).filter(F.col("nrm") > 0)
-    cent_arr = _centroid_array(centroids)
-    return (
-        emb.crossJoin(F.broadcast(cent_arr))
-        .select(F.expr(_ASSIGN_CELL_EXPR).alias("cell"), "vec_id", "emb", "nrm")
-        .filter(F.col("cell") >= 0)
-    )
 
 
 def semantic_dup_candidates(
@@ -4141,32 +4088,6 @@ _X3V_K = 3
 _X3V_NPROBES = (1, 2)
 
 
-def probe_cells_expr(nprobe: int) -> Column:
-    """Top-``nprobe`` nearest cells, ordered by (raw cos desc, cent_id),
-    folded over the crossJoined broadcast centroid array (requires
-    columns ``emb``, ``nrm``, ``cents``) — THE shared probe-ranking law
-    site: x3v's audit and x3w's whole-corpus repair must rank probe
-    cells identically or their recall numbers stop being comparable."""
-    return F.expr(
-        f"""
-        transform(
-          slice(
-            array_sort(
-              transform(cents, c -> named_struct(
-                'cos', aggregate(zip_with(emb, c.cemb, (x, y) -> x * y),
-                                 0D, (acc, v) -> acc + v) / (nrm * c.cnrm),
-                'cid', c.cent_id)),
-              (l, r) -> CASE WHEN l.cos > r.cos THEN -1
-                             WHEN l.cos < r.cos THEN 1
-                             WHEN l.cid < r.cid THEN -1
-                             WHEN l.cid > r.cid THEN 1
-                             ELSE 0 END),
-            1, {nprobe}),
-          s -> s.cid)
-        """
-    )
-
-
 def brute_truth_edges(cells: DataFrame, n_probes: int, k: int) -> DataFrame:
     """(q_id, neighbor_id): exact top-``k`` cosine neighbors over the
     WHOLE corpus for the ``vec_id < n_probes`` probe subset, under the
@@ -4292,7 +4213,9 @@ def x3v_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("q_id"),
             F.col("emb").alias("q_emb"),
             F.col("nrm").alias("q_nrm"),
-            probe_cells_expr(max(_X3V_NPROBES)).alias("probe_cells"),
+            nearest_cells(
+                F.col("emb"), F.col("cents"), n=max(_X3V_NPROBES), nrm=F.col("nrm")
+            )["cid"].alias("probe_cells"),
         )
     )
     dq = dot(F.col("q_emb"), F.col("n_emb"))
@@ -4479,26 +4402,25 @@ def multiprobe_knn_graph(
     ``nprobe`` nearest cells — THE shared site for the x3w query and
     its property test.
 
-    r19 (guide §4.1/§2.3): the exploded probe frame (each vector
-    appears once per probed cell) joins members on the cell key, the
-    candidate is scored by one projected dot per candidate row,
-    and the per-vector top-k is one window — x3v's ``topk_edges``
-    shape lifted to the whole corpus. This replaces the two
-    collect_list aggregations + in-row HOF expansion (+ global merge
-    re-aggregation), which evaluated every candidate dot interpreted
-    and buffered whole cells per row. Top-k over all candidates equals
-    the old per-cell-top-k-then-merge under the one total order
+    The probe cells are one :func:`nearest_cells` top-``nprobe`` per
+    vector; the exploded probe frame (each vector appears once per
+    probed cell) joins members on the cell key, each candidate is
+    scored by one projected dot, and the per-vector top-k is one
+    window — x3v's ``topk_edges`` shape lifted to the whole corpus.
+    Nothing buffers a whole cell in one row. Top-k over all candidates
+    equals per-cell-top-k-then-merge under the one total order
     (round(cos,4) desc, nid): any global top-k candidate is within its
     own cell's top-k. A member has ONE home cell, so no (q, n)
     candidate duplicates exist. The merge hint keeps the planner from
     broadcasting a corpus-sized side; only (q_id, nid, cos) crosses
     the window exchange."""
     cent_arr = _centroid_array(centroids)
+    near = nearest_cells(F.col("emb"), F.col("cents"), n=nprobe, nrm=F.col("nrm"))
     probes = cells.crossJoin(F.broadcast(cent_arr)).select(
         F.col("vec_id").alias("q_id"),
         F.col("emb").alias("q_emb"),
         F.col("nrm").alias("q_nrm"),
-        F.explode(probe_cells_expr(nprobe)).alias("cell"),
+        F.explode(near["cid"]).alias("cell"),
     )
     members = cells.select(
         F.col("vec_id").alias("nid"),
@@ -5506,72 +5428,13 @@ def x3z2_post_split_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("cell_after").alias("cid"), "cvec")
     )
-    cent_row = (
-        newc.unionByName(untc)
-        .select(F.struct("cid", "cvec").alias("c"))
-        .agg(F.collect_list("c").alias("cents"))
-    )
-    q = corpus.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("emb").alias("qemb"),
-        F.col("nrm").alias("qnrm"),
-    )
-
-    def sqd(cvec):
-        return F.aggregate(
-            F.zip_with(F.col("qemb"), cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    probes = (
-        q.crossJoin(F.broadcast(cent_row))
-        .select(
-            "q_id", "qemb", "qnrm",
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            F.col("cents"),
-                            lambda c: F.struct(
-                                sqd(c["cvec"]).alias("d"),
-                                c["cid"].alias("cid"),
-                            ),
-                        )
-                    ),
-                    1, _X3Z2_NPROBE,
-                )
-            ).alias("p"),
-        )
-        .select("q_id", "qemb", "qnrm", F.col("p.cid").alias("cid"))
-    )
-    dotqe = dot(F.col("qemb"), F.col("emb"))
-    # probes = queries x nprobe rows by construction — broadcast it so
-    # the scoring join stays a broadcast cell equi-join (the x3z
-    # posture) instead of shuffling the corpus side twice
-    cand = (
-        F.broadcast(probes)
-        .join(corpus, "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id", "vec_id", "cid",
-            (dotqe / (F.col("qnrm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 4).desc(), "vec_id"
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _X3Z2_TOPK)
-        .select(
-            "q_id",
-            F.col("rnk").cast("int").alias("rnk"),
-            "vec_id",
-            F.col("cid").cast("long").alias("cell"),
-            (F.round(F.col("cos"), 4) + 0.0).alias("cos_sim"),
-        )
-        .orderBy("q_id", "rnk")
+    return serve_ivf_topk(
+        corpus,
+        newc.unionByName(untc).select(
+            F.col("cid").alias("cent_id"), F.col("cvec").alias("cemb")
+        ),
+        _X3Z2_NPROBE,
+        _X3Z2_TOPK,
     )
 
 
@@ -5854,7 +5717,7 @@ def x2j2b_semdedup_prune_post_split(
 # law's dual — a cell merges when DEN * n * K < NUM * total, i.e.
 # load < NUM/DEN x the average), dissolve it, and reassign its
 # members to the nearest SURVIVING standing centroid — the
-# _ASSIGN_CELL_EXPR argmax law verbatim over the broadcast survivor
+# nearest_cells cosine law verbatim over the broadcast survivor
 # array, applied to flagged members only, keeping cell_before in the
 # same map-side projection (no join-back). Untouched (surviving)
 # cells pass through with cell_after = cell_before, bit-identical —
@@ -5937,7 +5800,7 @@ def x3x4_merge_frames(
     centroid table (aggregates it). The member slice is an equi-join
     against the <= K-row broadcast flagged set (THE plan-gated claim
     that all merge work is keyed on flagged cells only); reassignment
-    applies _ASSIGN_CELL_EXPR over the broadcast survivor array in
+    applies :func:`nearest_cells` over the broadcast survivor array in
     the same map-side projection, so cell_before rides along without
     a join-back."""
     emb = Catalog(spark, sf_dir).embeddings
@@ -5963,16 +5826,17 @@ def x3x4_merge_frames(
         "cent_id",
         "left_anti",
     )
+    near = nearest_cells(F.col("emb"), F.col("cents"), nrm=F.col("nrm"))
     re_assigned = (
         members.crossJoin(F.broadcast(_centroid_array(surv)))
         .select(
             "vec_id",
             F.col("cell").cast("long").alias("cell_before"),
-            F.expr(_ASSIGN_CELL_EXPR).cast("long").alias("cell_after"),
+            near["cid"].cast("long").alias("cell_after"),
             F.lit(True).alias("was_merged"),
             "emb",
         )
-        .filter(F.col("cell_after") >= 0)
+        .filter(F.col("cell_after").isNotNull())
     )
     untouched = assigned.join(F.broadcast(flagged), "cell", "left_anti").select(
         "vec_id",
@@ -5989,7 +5853,7 @@ def x3x4_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge every underloaded IVF cell (load < _X3X4_NUM/_X3X4_DEN x
     the average, the x3x integer load law's dual): the cell dissolves
     and its members reassign to the nearest surviving standing
-    centroid by the assign_cells (cos desc, cent_id) argmax law.
+    centroid by the nearest_cells (cos desc, cent_id) law.
     One row per nonzero vector: cell_before, cell_after (identical
     for untouched cells — bit-identical pass-through), was_merged.
     Survivors are nonempty by pigeonhole for any floor <= 1x."""
@@ -6382,72 +6246,13 @@ def x3z6_post_merge_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(F.col("cell_after").alias("cid"), "cvec")
     )
-    cent_row = (
-        newc.unionByName(untc)
-        .select(F.struct("cid", "cvec").alias("c"))
-        .agg(F.collect_list("c").alias("cents"))
-    )
-    q = corpus.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("emb").alias("qemb"),
-        F.col("nrm").alias("qnrm"),
-    )
-
-    def sqd(cvec):
-        return F.aggregate(
-            F.zip_with(F.col("qemb"), cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    probes = (
-        q.crossJoin(F.broadcast(cent_row))
-        .select(
-            "q_id", "qemb", "qnrm",
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            F.col("cents"),
-                            lambda c: F.struct(
-                                sqd(c["cvec"]).alias("d"),
-                                c["cid"].alias("cid"),
-                            ),
-                        )
-                    ),
-                    1, _X3Z6_NPROBE,
-                )
-            ).alias("p"),
-        )
-        .select("q_id", "qemb", "qnrm", F.col("p.cid").alias("cid"))
-    )
-    dotqe = dot(F.col("qemb"), F.col("emb"))
-    # probes = queries x nprobe rows by construction — broadcast them
-    # so the scoring join stays a broadcast cell equi-join (the x3z2
-    # lesson) instead of shuffling the corpus side twice
-    cand = (
-        F.broadcast(probes)
-        .join(corpus, "cid")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id", "vec_id", "cid",
-            (dotqe / (F.col("qnrm") * F.col("nrm"))).alias("cos"),
-        )
-    )
-    w = W.partitionBy("q_id").orderBy(
-        F.round(F.col("cos"), 4).desc(), "vec_id"
-    )
-    return (
-        cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _X3Z6_TOPK)
-        .select(
-            "q_id",
-            F.col("rnk").cast("int").alias("rnk"),
-            "vec_id",
-            F.col("cid").cast("long").alias("cell"),
-            (F.round(F.col("cos"), 4) + 0.0).alias("cos_sim"),
-        )
-        .orderBy("q_id", "rnk")
+    return serve_ivf_topk(
+        corpus,
+        newc.unionByName(untc).select(
+            F.col("cid").alias("cent_id"), F.col("cvec").alias("cemb")
+        ),
+        _X3Z6_NPROBE,
+        _X3Z6_TOPK,
     )
 
 

@@ -22,6 +22,9 @@ in float32 and does NOT match — the oracle recomputes cosine explicitly.
 from __future__ import annotations
 
 import math
+import operator
+from collections.abc import Callable
+from functools import reduce
 
 import numpy as np
 import pandas as pd
@@ -67,6 +70,84 @@ def dot_int(a: Column, b: Column) -> Column:
         F.zip_with(a, b, lambda x, y: (x * y).cast("long")),
         F.lit(0).cast("long"),
         lambda acc, x: acc + x,
+    )
+
+
+def _centroid_array(centroids: DataFrame) -> DataFrame:
+    """One broadcastable row ``cents: array<struct<cent_id, cemb, cnrm>>``
+    from a (cent_id, cemb) frame: THE centroid layout every
+    nearest-centroid search reads (:func:`nearest_cells`), the PQ
+    codebook included. collect_list's order is nondeterministic; no
+    reader depends on it (the kernel's tie law, cent_id-keyed maps)."""
+    return centroids.select(
+        F.struct(
+            F.col("cent_id"),
+            F.col("cemb"),
+            l2_norm(F.col("cemb")).alias("cnrm"),
+        ).alias("c")
+    ).agg(F.collect_list("c").alias("cents"))
+
+
+def nearest_cells(
+    vec: Column,
+    cents: Column,
+    metric: str | Callable[[Column, Column], Column] = "cos",
+    n: int = 1,
+    nrm: Column | None = None,
+) -> Column:
+    """THE nearest-centroid kernel: which of the broadcast ``cents``
+    (:func:`_centroid_array`) is nearest to ``vec``, or which ``n`` are.
+
+    - Key: ``-cos`` for ``metric="cos"``, squared L2 for ``"l2"``, or
+      ``metric(vec, cemb)`` for another distance fold (x3m's
+      block-grouped L2). Every key is the module's left-to-right fold,
+      so distances and ties are bit-identical to the DuckDB oracles.
+    - Tie law: key ascending, then cent_id ascending. Key and id form
+      one struct and struct ordering compares them in that order, so
+      the pick is independent of the array's order.
+    - Zero-norm guard (cosine only): a zero-norm centroid is never a
+      candidate and a zero-norm vector has no nearest cell (null). It
+      runs before any divide, which would throw under ANSI mode.
+      ``nrm`` is the vector's precomputed norm, if the row has one.
+
+    n = 1 returns the struct ``(key, cid)`` (array_min; k-means inertia
+    reads the key); n > 1 returns the n nearest as an ascending array
+    of those structs (array_sort + slice), so a cell's probe rank is its
+    position. ``["cid"]`` reads the cell id(s) from either form. Map-side
+    per row: no n x K crossJoin, no window, no shuffle."""
+    if metric == "cos":
+        nrm = l2_norm(vec) if nrm is None else nrm
+        cents = F.filter(cents, lambda c: c["cnrm"] > 0)
+
+        def key(c: Column) -> Column:
+            return -(dot(vec, c["cemb"]) / (nrm * c["cnrm"]))
+
+    else:
+        dist = sqdist if metric == "l2" else metric
+
+        def key(c: Column) -> Column:
+            return dist(vec, c["cemb"])
+
+    keyed = F.transform(
+        cents, lambda c: F.struct(key(c).alias("key"), c["cent_id"].alias("cid"))
+    )
+    best = F.array_min(keyed) if n == 1 else F.slice(F.array_sort(keyed), 1, n)
+    return F.when(nrm > 0, best) if metric == "cos" else best
+
+
+def assign_cells(emb: DataFrame, centroids: DataFrame) -> DataFrame:
+    """(cell, vec_id, emb, nrm): every vector of ``emb`` (vec_id, emb)
+    assigned to its cosine-nearest centroid of ``centroids``
+    (cent_id, cemb) by :func:`nearest_cells`, map-side against the
+    broadcast centroid array. A row-number window over the n x K
+    crossJoin would shuffle every corpus row K times over. Zero-norm
+    vectors have no cell and are dropped."""
+    cell = nearest_cells(F.col("emb"), F.col("cents"), nrm=F.col("nrm"))["cid"]
+    return (
+        emb.withColumn("nrm", l2_norm(F.col("emb")))
+        .crossJoin(F.broadcast(_centroid_array(centroids)))
+        .select(cell.alias("cell"), "vec_id", "emb", "nrm")
+        .filter(F.col("cell").isNotNull())
     )
 
 
@@ -350,64 +431,49 @@ def x3d_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cell assignment -> cell-equi-join -> exact re-rank) is identical.
 
     Scale: the corpus never shuffles on anything wider than its cell id;
-    centroid assignment is a broadcast nested loop over K=16 rows, and the
-    candidate join per query touches ~2/16 of the corpus."""
+    centroid assignment and probe selection are per-row
+    :func:`nearest_cells` folds over the broadcast 16-entry centroid
+    array (no window), and the candidate join per query touches ~2/16
+    of the corpus."""
     return _ivf_topk(spark, sf_dir, nprobe=2)
 
 
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
+    """The fixed IVF codebook: the 16 corpus vectors vec_id < 16."""
+    return emb.filter(F.col("vec_id") < 16).select(
+        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
+    )
+
+
 def _ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus cell assignment for the fixed-centroid IVF kernel —
-    nearest cell per corpus vector (rank over the K broadcast
-    centroids). Factored out of :func:`_ivf_topk` because the
+    """Corpus cell assignment for the fixed-centroid IVF search
+    (:func:`assign_cells`). Separate from :func:`_ivf_topk` because the
     assignment is nprobe-INDEPENDENT: x3p scores one assignment pass
     against the widest probe set and derives every leg from it."""
     emb = Catalog(spark, sf_dir).embeddings
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cent_emb")
-    )
     vecs = emb.select("vec_id", _dvec("embedding").alias("emb"))
-    w_assign = W.partitionBy("vec_id").orderBy(
-        F.col("cent_dist").asc(), F.col("cent_id")
-    )
-    return (
-        vecs.crossJoin(F.broadcast(centroids))
-        .withColumn("cent_dist", -cosine(F.col("emb"), F.col("cent_emb")))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "emb", F.col("cent_id").alias("cell"))
-    )
+    return assign_cells(vecs, _ivf_centroids(emb))
 
 
 def _ivf_probe(
     spark: SparkSession, sf_dir: str, nprobe: int, with_rank: bool = False
 ) -> DataFrame:
-    """Per-query probe cells at width ``nprobe``: rank the K broadcast
-    centroids per query by (distance asc, cent_id) and keep the top
-    ``nprobe``. ``with_rank=True`` carries the cell rank column
-    (``cell_rn``) so x3p can derive EVERY narrower probe width from the
-    one widest probe set (cell_rn <= k IS the width-k probe set — the
-    rank order is the probe-selection law)."""
+    """Per-query probe cells at width ``nprobe``: the ``nprobe``
+    cosine-nearest centroids by :func:`nearest_cells`. ``with_rank=True``
+    carries each cell's probe rank (``cell_rn``, 1-based) so x3p can
+    derive EVERY narrower width from the one widest probe set
+    (cell_rn <= k IS the width-k probe set)."""
     emb = Catalog(spark, sf_dir).embeddings
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cent_emb")
-    )
     queries = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), _dvec("embedding").alias("q_emb")
     )
-    probed = (
-        queries.crossJoin(F.broadcast(centroids))
-        .withColumn("cent_dist", -cosine(F.col("q_emb"), F.col("cent_emb")))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy(F.col("cent_dist").asc(), F.col("cent_id"))
-            ),
-        )
-        .filter(F.col("rn") <= nprobe)
-    )
-    cols = ["q_id", "q_emb", F.col("cent_id").alias("cell")]
+    near = nearest_cells(F.col("q_emb"), F.col("cents"), n=nprobe)["cid"]
+    probed = queries.crossJoin(
+        F.broadcast(_centroid_array(_ivf_centroids(emb)))
+    ).select("q_id", "q_emb", F.posexplode(near).alias("pos", "cell"))
+    cols = ["q_id", "q_emb", "cell"]
     if with_rank:
-        cols.append(F.col("rn").alias("cell_rn"))
+        cols.append((F.col("pos") + 1).alias("cell_rn"))
     return probed.select(*cols)
 
 
@@ -945,19 +1011,14 @@ _PQ_BLOCKS, _PQ_BLOCK_DIM, _PQ_K = 4, 16, 16
 
 
 def _pq_codebook(vecs: DataFrame) -> DataFrame:
-    """THE single definition of the PQ codebook: one broadcast-able row
-    holding the (cent_id, vector) structs of the vec_id < _PQ_K corpus
-    entries. Both the encoder (x3j) and the searcher (x3k) build from
-    this — a second site would let the pair drift onto different
-    codebooks with nothing failing loudly."""
-    return (
-        vecs.filter(F.col("vec_id") < _PQ_K)
-        .select(
-            F.struct(
-                F.col("vec_id").alias("cent_id"), F.col("emb").alias("cemb")
-            ).alias("c")
+    """THE single definition of the PQ codebook: the vec_id < _PQ_K
+    corpus entries as one :func:`_centroid_array` row. The encoder
+    (x3j), the searchers (x3k, x3m) and x3m's coarse quantizer all build
+    from this, so they cannot drift onto different codebooks."""
+    return _centroid_array(
+        vecs.filter(F.col("vec_id") < _PQ_K).select(
+            F.col("vec_id").alias("cent_id"), F.col("emb").alias("cemb")
         )
-        .agg(F.collect_list("c").alias("cents"))
     )
 
 
@@ -974,23 +1035,28 @@ def _pq_block_sqdist_sql(a: str, b: str, blk: int) -> str:
     )
 
 
-def _pq_full_sqdist_sql(a: str, b: str) -> str:
+def _pq_full_sqdist(a: Column, b: Column) -> Column:
     """Full-vector squared L2 as the SUM OF THE FOUR BLOCK FOLDS (not one
-    64-term fold): float addition is non-associative, so the coarse
-    quantizer and the ADC tables must group terms identically for cell
-    argmins and distances to agree bit-for-bit with the oracle, which
-    mirrors this same block grouping."""
-    return " + ".join(
-        _pq_block_sqdist_sql(a, b, blk) for blk in range(_PQ_BLOCKS)
-    )
+    64-term fold), as a :func:`nearest_cells` distance: float addition
+    is non-associative, so the coarse quantizer must group terms the
+    way the block folds of :func:`_pq_block_sqdist_sql` and the oracle
+    do for its cell picks to agree bit-for-bit."""
+    blocks = [
+        sqdist(
+            F.slice(a, blk * _PQ_BLOCK_DIM + 1, _PQ_BLOCK_DIM),
+            F.slice(b, blk * _PQ_BLOCK_DIM + 1, _PQ_BLOCK_DIM),
+        )
+        for blk in range(_PQ_BLOCKS)
+    ]
+    return reduce(operator.add, blocks)
 
 
 def _pq_argmin_sql(dist_sql: str) -> str:
     """Argmin fold over the broadcast codebook: strict (distance,
     cent_id) comparison, so the result is independent of collect_list's
     nondeterministic array order. Returns a struct with fields ``bid``
-    (winning cent_id) and ``bd`` (its distance). Single site shared by
-    the per-block encoder (x3j) and the coarse quantizer (x3m)."""
+    (winning cent_id) and ``bd`` (its distance): the per-block encoder
+    of x3j."""
     return f"""
         aggregate(
           transform(cents, c -> named_struct('cid', c.cent_id, 'd', {dist_sql})),
@@ -1376,8 +1442,9 @@ def x3m_pq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # argmins read those fields — five separate argmin expressions would
     # each re-evaluate the 16x4 block folds (Catalyst cannot CSE across
     # lambda scopes), doubling the distance math in the ingest hot path.
+    # That is also why the cell pick here is not a nearest_cells call.
     # The cell distance is d0+d1+d2+d3, the same block grouping as
-    # _pq_full_sqdist_sql / the oracle.
+    # _pq_full_sqdist / the oracle, and the same (d, cent_id) tie law.
     dists = ", ".join(
         f"'d{b}', {_pq_block_sqdist_sql('emb', 'c.cemb', b)}"
         for b in range(_PQ_BLOCKS)
@@ -1424,34 +1491,19 @@ def x3m_pq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = vecs.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
     )
-    cent_rows = cent_arr.select(F.explode("cents").alias("c")).select(
-        F.col("c.cent_id").alias("cent_id"), F.col("c.cemb").alias("cemb")
+    # each query's nprobe cells, each row carrying the query's per-block
+    # distance tables: one map-side pass over the broadcast codebook
+    near = nearest_cells(
+        F.col("q_emb"), F.col("cents"), _pq_full_sqdist, n=_PQ_NPROBE
+    )["cid"]
+    probe_tab = queries.crossJoin(F.broadcast(cent_arr)).select(
+        "q_id",
+        F.explode(near).alias("cell"),
+        *[
+            F.expr(_pq_dist_table_sql("q_emb", b)).alias(f"dt_{b}")
+            for b in range(_PQ_BLOCKS)
+        ],
     )
-    probe = (
-        queries.crossJoin(F.broadcast(cent_rows))
-        .withColumn("d", F.expr(_pq_full_sqdist_sql("q_emb", "cemb")))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                W.partitionBy("q_id").orderBy(F.col("d").asc(), F.col("cent_id"))
-            ),
-        )
-        .filter(F.col("rn") <= _PQ_NPROBE)
-        .select("q_id", F.col("cent_id").alias("cell"))
-    )
-    qtab = (
-        queries.crossJoin(F.broadcast(cent_arr))
-        .select(
-            "q_id",
-            *[
-                F.expr(_pq_dist_table_sql("q_emb", b)).alias(f"dt_{b}")
-                for b in range(_PQ_BLOCKS)
-            ],
-        )
-    )
-    # both sides are query-sized; the explicit hint pins the plan so the
-    # no-shuffled-join gate can't flip on auto-broadcast estimation
-    probe_tab = probe.join(F.broadcast(qtab), "q_id")
 
     adc = sum(
         F.element_at(F.col(f"dt_{b}"), F.col(f"code_{b}").cast("bigint"))
@@ -1606,22 +1658,18 @@ def x3p_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@5 of IVF search at nprobe in {1, 2, 4} against exact
     brute-force truth — the tuning curve behind the nprobe knob.
 
-    ONE corpus scoring pass serves every probe width (r18, guide
-    §1.2/§2.3): the width-k probe set is by definition the first k
-    cells of the width-4 probe ranking, so the sweep scores the corpus
-    once against the WIDEST probe set with the cell rank attached and
-    derives each leg by ``cell_rn <= k`` + the shared rank law — the
-    candidates and scores are the ones leg k would have computed
-    itself (identical join, filter, and scoring sites). The scored
-    frame is the only thing replayed across legs, and it checkpoints
-    as four narrow columns (two ids, a double, a rank) — the earlier
-    form re-ran the fat assignment+scoring corpus pass per leg (or,
-    persisted, materialized corpus x 64-double embeddings; measured
-    2x slower than recomputing at sf0.1). The brute-force truth (8
-    queries x 5 rows) checkpoints across its two consumers the same
-    way."""
-    from functools import reduce
-
+    ONE corpus scoring pass serves every probe width: the width-k
+    probe set is by definition the first k cells of the width-4 probe
+    ranking, so the sweep scores the corpus once against the WIDEST
+    probe set with the cell rank attached and derives each leg by
+    ``cell_rn <= k`` + the shared rank law — the candidates and scores
+    are the ones leg k would have computed itself (identical join,
+    filter, and scoring sites). The scored frame is the only thing
+    replayed across legs, and it checkpoints as four narrow columns
+    (two ids, a double, a rank): re-running the assignment+scoring
+    corpus pass per leg, or persisting corpus x 64-double embeddings,
+    measured 2x slower at sf0.1. The brute-force truth (8 queries x 5
+    rows) checkpoints across its two consumers the same way."""
     bf = (
         x3_similarity_bruteforce(spark, sf_dir)
         .select("q_id", "vec_id")
@@ -1805,15 +1853,13 @@ def x3q_mrl_refine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB list_reduce, the w10 law), so argmin decisions are bit-exact
 # across engines — only the new-centroid means need rounding.
 #
-# Scale shape: the K centroids collapse to ONE broadcast row (a
-# cid-sorted array of (cid, cvec) structs) and assignment is a
-# PER-VECTOR FOLD over that array — genuinely map-side: one corpus
-# scan, no Window, no per-vector shuffle (the first cut of this
-# operator ranked a crossJoin-expanded (vector x centroid) table with
-# a vec_id-partitioned window, which hash-shuffled every embedding
-# once; array_min over (dist, cid) structs computes each distance once
-# and breaks ties toward the smaller cid, matching the oracle's
-# ORDER BY dist, cid).
+# Scale shape: the K centroids collapse to ONE broadcast row
+# (_centroid_array) and assignment is the L2 nearest_cells fold over
+# it: genuinely map-side, one corpus scan, no Window, no per-vector
+# shuffle (a vec_id-partitioned window over the crossJoin-expanded
+# (vector x centroid) table would hash-shuffle every embedding). Each
+# distance is computed once per centroid and ties go to the smaller
+# cid, matching the oracle's ORDER BY dist, cid.
 # The update explodes assigned vectors to (cluster, dim, value) and
 # hash-aggregates — the only shuffle, carrying one partial sum per
 # (cluster, dim) per partition (map-side combine), i.e. K x 64 rows.
@@ -1876,37 +1922,12 @@ def x3r_kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     cent = emb.filter(F.col("vec_id") < _X3R_K).select(
         F.col("vec_id").alias("cid"), _dvec("embedding").alias("cvec")
     )
-    # one broadcastable row: centroids as a cid-sorted struct array
-    cent_row = cent.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents")
-    )
     v = ensure_min_partitions(emb).select("vec_id", _dvec("embedding").alias("emb"))
-
-    def sqdist(cvec):
-        return F.aggregate(
-            F.zip_with(F.col("emb"), cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    # argmin = array_min over (dist, cid) structs: the distance is
-    # computed ONCE per centroid (F.transform binds it into the struct;
-    # the first cut re-evaluated sqdist in both the WHEN predicate and
-    # the result struct, doubling the O(vectors*K*dims) flop count of
-    # the assignment stage). Struct ordering compares dist first, then
-    # cid, so ties go to the smallest cid — exactly the oracle's
-    # ORDER BY dist, cid and the old strict-< first-wins fold.
-    argmin = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                sqdist(c["cvec"]).alias("best_d"), c["cid"].alias("cid")
-            ),
-        )
+    centroids = cent.select(
+        F.col("cid").alias("cent_id"), F.col("cvec").alias("cemb")
     )
-    assigned = (
-        v.crossJoin(F.broadcast(cent_row))
-        .select("vec_id", "emb", argmin["cid"].alias("cid"))
+    assigned = _l2_nearest(v, "emb", centroids).select(
+        "vec_id", "emb", F.col("near.cid").alias("cid")
     )
     # member count rides in the SAME (cluster, dim) aggregate — every
     # dimension row of a cluster counts each member exactly once, so a
@@ -2046,8 +2067,8 @@ _X3R2_ORACLE = _x3r2_oracle()
 def _x3r2_train(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list[tuple[int, int, int, float]], dict[int, list[float]], DataFrame]:
-    """THE x3r2 Lloyd training loop, extracted verbatim (r16) so x2j2
-    SemDeDup prunes against the REGISTERED trained centroids — one
+    """THE x3r2 Lloyd training loop, shared with x2j2 SemDeDup so it
+    prunes against the REGISTERED trained centroids — one
     training-law site, never a re-statement. Returns (per-step stats
     rows, final cid -> centroid dict, the double-cast corpus view v).
     Only the K x dims centroid table is ever collected per step (the
@@ -2062,33 +2083,9 @@ def _x3r2_train(
     v = ensure_min_partitions(emb).select(
         "vec_id", _dvec("embedding").alias("emb")
     )
-
-    def sqdist(cvec):
-        return F.aggregate(
-            F.zip_with(F.col("emb"), cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
     stats: list[tuple[int, int, int, float]] = []
     for step in range(1, _X3R2_STEPS + 1):
-        cent_df = spark.createDataFrame(
-            sorted(cent.items()), "cid long, cvec array<double>"
-        )
-        cent_row = cent_df.agg(
-            F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents")
-        )
-        am = F.array_min(
-            F.transform(
-                F.col("cents"),
-                lambda c: F.struct(
-                    sqdist(c["cvec"]).alias("best_d"), c["cid"].alias("cid")
-                ),
-            )
-        )
-        assigned = v.crossJoin(F.broadcast(cent_row)).select(
-            "vec_id", "emb", am.alias("a")
-        )
+        assigned = _l2_nearest(v, "emb", _cent_frame(spark, cent))
         # ONE aggregate carries the next centroids AND the step stats:
         # per (cid, dim), the rounded mean, the member count, and the
         # cluster's inertia. Each member contributes its best_d once
@@ -2101,8 +2098,8 @@ def _x3r2_train(
         # before the collect.
         m = (
             assigned.select(
-                F.col("a.cid").alias("cid"),
-                F.col("a.best_d").alias("best_d"),
+                F.col("near.cid").alias("cid"),
+                F.col("near.key").alias("best_d"),
                 F.posexplode("emb").alias("dim_idx", "val"),
             )
             .groupBy("cid", "dim_idx")
@@ -2142,35 +2139,36 @@ def x3r2_trained_assign(
     (dist, cid) argmin law — the Spark half of the _X2J2_ASG_CTES
     oracle chain, shared by x2j2 SemDeDup and the x3z trained-IVF
     search. Training runs via _x3r2_train (only K x dims centroid
-    tables are ever collected); assignment is the map-side broadcast
-    argmin fold — no window, the corpus never shuffles for it."""
+    tables are ever collected); assignment is the map-side
+    :func:`nearest_cells` fold — no window, the corpus never shuffles
+    for it."""
     _stats, cent, v = _x3r2_train(spark, sf_dir)
-
-    def sqdist(cvec):
-        return F.aggregate(
-            F.zip_with(F.col("emb"), cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    cent_df = spark.createDataFrame(
-        sorted(cent.items()), "cid long, cvec array<double>"
-    )
-    cent_row = cent_df.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents")
-    )
-    am = F.array_min(
-        F.transform(
-            F.col("cents"),
-            lambda c: F.struct(
-                sqdist(c["cvec"]).alias("best_d"), c["cid"].alias("cid")
-            ),
-        )
-    )
-    assigned = v.crossJoin(F.broadcast(cent_row)).select(
-        "vec_id", "emb", am["cid"].alias("cid")
+    assigned = _l2_nearest(v, "emb", _cent_frame(spark, cent)).select(
+        "vec_id", "emb", F.col("near.cid").alias("cid")
     )
     return assigned, cent
+
+
+def _cent_frame(spark: SparkSession, cent: dict[int, list[float]]) -> DataFrame:
+    """A driver-side centroid dict (cid -> vector) as a (cent_id, cemb)
+    frame for :func:`_l2_nearest`."""
+    return spark.createDataFrame(
+        sorted(cent.items()), "cent_id long, cemb array<double>"
+    )
+
+
+def _l2_nearest(
+    rows: DataFrame, vec_col: str, centroids: DataFrame, n: int = 1
+) -> DataFrame:
+    """``rows`` plus ``near``: the L2 :func:`nearest_cells` pick (n = 1)
+    or probe list (n > 1) of ``vec_col`` over the (cent_id, cemb) frame
+    ``centroids``, shipped as one broadcast centroid row. The k-means
+    steps, the trained assignment and the trained-IVF probes all go
+    through here."""
+    near = nearest_cells(F.col(vec_col), F.col("cents"), "l2", n=n)
+    return rows.crossJoin(F.broadcast(_centroid_array(centroids))).select(
+        *rows.columns, near.alias("near")
+    )
 
 
 # The trained-centroid assignment chain: the x3r2 training CTEs plus
@@ -2556,71 +2554,57 @@ _X3Z_ORACLE = _x3z_sql()
 def _trained_ivf_serve(
     spark: SparkSession, sf_dir: str, corpus_pred=None
 ) -> DataFrame:
-    """The x3z serving dataflow as a helper (r18): ``corpus_pred``
-    optionally filters the MEMBER side at the cell equi-join (x3z4's
-    tombstone predicate) while queries keep probing unfiltered — the
-    Spark half of :func:`_x3z_sql`'s extra predicate. ``None``
-    reproduces the registered x3z plan exactly."""
+    """x3z over the x3r2-trained partition. ``corpus_pred`` optionally
+    filters the MEMBER side at the cell equi-join (x3z4's tombstone
+    predicate) while queries keep probing unfiltered — the Spark half
+    of :func:`_x3z_sql`'s extra predicate."""
     assigned, cent = x3r2_trained_assign(spark, sf_dir)
     corpus = assigned.withColumn("nrm", l2_norm(F.col("emb"))).filter(
         F.col("nrm") > 0
     )
+    members = corpus if corpus_pred is None else corpus.filter(corpus_pred)
+    return serve_ivf_topk(
+        corpus, _cent_frame(spark, cent), _X3Z_NPROBE, _X3Z_TOPK, members
+    )
+
+
+def serve_ivf_topk(
+    corpus: DataFrame,
+    centroids: DataFrame,
+    nprobe: int,
+    topk: int,
+    members: DataFrame | None = None,
+) -> DataFrame:
+    """Trained-IVF top-``topk`` cosine serving, shared by x3z and its
+    post-split and post-merge twins (x3z2, x3z6). ``corpus`` is
+    (vec_id, cid, emb, nrm); its vec_id < 8 rows are the queries. Each
+    query probes its ``nprobe`` L2-nearest ``centroids`` (cent_id, cemb)
+    and scores exact cosine against only those cells' ``members``
+    (default: the corpus), self excluded, ranked by round(cos, 4) DESC
+    then vec_id. The probe rows (queries x nprobe) broadcast, so the
+    scoring join is a broadcast cell equi-join and the corpus never
+    shuffles for it."""
     q = corpus.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("q_id"),
         F.col("emb").alias("qemb"),
         F.col("nrm").alias("qnrm"),
     )
-    cent_df = spark.createDataFrame(
-        sorted(cent.items()), "cid long, cvec array<double>"
+    probes = _l2_nearest(q, "qemb", centroids, n=nprobe).select(
+        "q_id", "qemb", "qnrm", F.explode("near.cid").alias("cid")
     )
-    cent_row = cent_df.agg(
-        F.sort_array(F.collect_list(F.struct("cid", "cvec"))).alias("cents")
-    )
-
-    def sqd(cvec):
-        return F.aggregate(
-            F.zip_with(F.col("qemb"), cvec, lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    probes = (
-        q.crossJoin(F.broadcast(cent_row))
-        .select(
-            "q_id", "qemb", "qnrm",
-            F.explode(
-                F.slice(
-                    F.array_sort(
-                        F.transform(
-                            F.col("cents"),
-                            lambda c: F.struct(
-                                sqd(c["cvec"]).alias("d"),
-                                c["cid"].alias("cid"),
-                            ),
-                        )
-                    ),
-                    1, _X3Z_NPROBE,
-                )
-            ).alias("p"),
-        )
-        .select("q_id", "qemb", "qnrm", F.col("p.cid").alias("cid"))
-    )
-    dq = dot(F.col("qemb"), F.col("emb"))
-    members = corpus if corpus_pred is None else corpus.filter(corpus_pred)
+    cos = dot(F.col("qemb"), F.col("emb")) / (F.col("qnrm") * F.col("nrm"))
     cand = (
-        probes.join(members, "cid")
+        F.broadcast(probes)
+        .join(corpus if members is None else members, "cid")
         .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id", "vec_id", "cid",
-            (dq / (F.col("qnrm") * F.col("nrm"))).alias("cos"),
-        )
+        .select("q_id", "vec_id", "cid", cos.alias("cos"))
     )
     w = W.partitionBy("q_id").orderBy(
         F.round(F.col("cos"), 4).desc(), "vec_id"
     )
     return (
         cand.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= _X3Z_TOPK)
+        .filter(F.col("rnk") <= topk)
         .select(
             "q_id",
             F.col("rnk").cast("int").alias("rnk"),

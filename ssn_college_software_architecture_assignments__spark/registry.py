@@ -78,8 +78,6 @@ _CHECK_PRIORITY = (
     "x3x6_maintenance_plan",
     "x3z6_post_merge_ivf_topk",
     "x3z7_post_merge_recall",
-    "a19b_trimmed_mean_scalable",
-    "a20b_winsorized_mean_scalable",
     "x2j2b_semdedup_prune_post_split",
     "x3x4_ivf_cell_merge",
     "x3x5_post_merge_centroids",
@@ -87,6 +85,30 @@ _CHECK_PRIORITY = (
     "x3z5_tombstone_occupancy",
     "x2j2_semdedup_prune",
     "x3u_ivf_knn_graph",
+    "x3v_knn_graph_recall",
+    "x2j_semantic_dedup",
+    "x3h_ann_recall_eval",
+    "x3j_pq_codes",
+    "x3k_pq_adc_topk",
+    "x3l_pq_recall",
+    "x3w_knn_graph_multiprobe_repair",
+    "x3x_incremental_ivf_admission",
+    "x3m_pq_ivf_search",
+    "s26_time_travel_read",
+    "x3d_similarity_ivf",
+    "x3n_pq_refine_topk",
+    "x3p_ivf_nprobe_sweep",
+    "x3r_kmeans_step",
+    "x3z_trained_ivf_topk",
+    "s21_merge_on_read",
+    "x3x2_ivf_cell_split",
+    "x3x3_post_split_centroids",
+    "x3z2_post_split_ivf_topk",
+    "x3z3_post_split_recall",
+    "s10_upsert_latest_wins",
+    "x3r2_kmeans_train",
+    "a19b_trimmed_mean_scalable",
+    "a20b_winsorized_mean_scalable",
     "s7_raw_sink_roundtrip",
     "s8_validated_insert",
     "t12_streaming_decontamination",
@@ -102,14 +124,12 @@ _CHECK_PRIORITY = (
     "x2y_lsh_parameter_planner",
     "x3b2_similarity_lsh_oracle",
     "x3c_vector_features",
-    "x3v_knn_graph_recall",
     "x4b_term_frequency",
     "x4w_gopher_rules",
     "x5_multimodal_payload",
     "x6_deterministic_split",
     "x6s_decontaminated_mixture",
     "x6t_curriculum_anneal",
-    "x2j_semantic_dedup",
     "a11b_cdc_rollup_compose",
     "e2_sql_bracket_revenue",
     "e2_sql_large_quantity",
@@ -135,12 +155,7 @@ _CHECK_PRIORITY = (
     "x2k_quality_dedup_manifest",
     "x3f_embedding_quantize",
     "x3g_similarity_quantized",
-    "x3h_ann_recall_eval",
     "x3i_dim_truncation_recall",
-    "x3j_pq_codes",
-    "x3k_pq_adc_topk",
-    "x3l_pq_recall",
-    "x3w_knn_graph_multiprobe_repair",
     "x4i_repetition_profile",
     "x4j_unigram_logprob",
     "x4k_tfidf",
@@ -158,7 +173,6 @@ _CHECK_PRIORITY = (
     "x6h_packing_efficiency",
     "x6i_corpus_funnel",
     "x6u_epoch_reshuffle_manifest",
-    "x3x_incremental_ivf_admission",
     "a12_hll_sketch_rollup",
     "a13_heavy_hitters",
     "e1_etl_connector",
@@ -198,7 +212,6 @@ _CHECK_PRIORITY = (
     "x2n_incremental_near_dedup",
     "x2p_paragraph_near_dedup",
     "x3b_similarity_lsh",
-    "x3m_pq_ivf_search",
     "x4e2_lang_confusion",
     "x4u_bm25_retrieval",
     "x6j_dedup_aware_mixture",
@@ -209,16 +222,12 @@ _CHECK_PRIORITY = (
     "a2_groupby_agg",
     "f6_map_in_arrow",
     "s25_generation_drift_audit",
-    "s26_time_travel_read",
     "t6c_state_ttl_expiry",
     "w15_gaps_islands",
     "x2e2_global_dedup_clusters",
     "x2q_duplicated_gram_mass",
     "x2r_cross_source_gram_flow",
     "x2z_lsh_quality_audit",
-    "x3d_similarity_ivf",
-    "x3n_pq_refine_topk",
-    "x3p_ivf_nprobe_sweep",
     "x3y_mips_matmul_topk",
     "x4a2_bpe_token_count",
     "x4a_token_count",
@@ -297,7 +306,6 @@ _CHECK_PRIORITY = (
     "x2s_substring_span_dedup",
     "x2v_containment_rescore",
     "x3q_mrl_refine_topk",
-    "x3r_kmeans_step",
     "x4z2_chunk_mmr_rerank",
     "x4z_mmr_diversified_retrieval",
     "x5u_shot_segmentation",
@@ -305,7 +313,6 @@ _CHECK_PRIORITY = (
     "x6y3_incremental_survivorship",
     "x6z2_dedup_aware_waterfill",
     "a19_grouped_trimmed_mean",
-    "x3z_trained_ivf_topk",
     "a14_countmin_sketch",
     "a15_grouped_mode",
     "e2_sql_important_stock",
@@ -329,7 +336,6 @@ _CHECK_PRIORITY = (
     "s16_zorder_layout",
     "s1_rest_source",
     "s20_incremental_lake_merge",
-    "s21_merge_on_read",
     "s2_paginated_read",
     "t10_streaming_cumulative_distinct",
     "t11_foreachbatch_upsert",
@@ -354,10 +360,6 @@ _CHECK_PRIORITY = (
     "x6q_split_leakage_audit",
     "x6y4_retraction_survivorship",
     "a20_grouped_winsorized_mean",
-    "x3x2_ivf_cell_split",
-    "x3x3_post_split_centroids",
-    "x3z2_post_split_ivf_topk",
-    "x3z3_post_split_recall",
     "a10_stats_agg",
     "a11_incremental_rollup",
     "a16_skew_histogram_2d",
@@ -371,7 +373,6 @@ _CHECK_PRIORITY = (
     "f2_grouped_udaf",
     "f3_udtf_expand",
     "f5_cogrouped_asof",
-    "s10_upsert_latest_wins",
     "s11_partitioned_lake",
     "s12_compaction",
     "s13_schema_evolution",
@@ -390,7 +391,6 @@ _CHECK_PRIORITY = (
     "x2s3_span_dedup_mapcombine",
     "x2w_prefix_filter_join",
     "x3_similarity_bruteforce",
-    "x3r2_kmeans_train",
     "x3s_radius_search",
     "x3t_filtered_search",
     "x4t_quality_ensemble",

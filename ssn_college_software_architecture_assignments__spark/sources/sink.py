@@ -21,7 +21,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import Catalog
@@ -145,6 +145,24 @@ def s8_validated_insert(spark: SparkSession, sf_dir: str) -> DataFrame:
 # S10 — upsert / latest-wins merge (the reference's "updates" path) -------------
 
 
+def latest_per_key(
+    df: DataFrame, key_cols: list[str], order: list[Column]
+) -> DataFrame:
+    """One row per ``key_cols`` key: the first under ``order``. THE
+    sink's latest-per-key resolve (s10's upsert, s21's merge-on-read,
+    s26's as-of views). A per-key top-1 row_number, which Catalyst runs
+    as WindowGroupLimit: each map task forwards at most one candidate
+    per key, so no full per-key history is ever materialized."""
+    from pyspark.sql import Window as W
+
+    w = W.partitionBy(*key_cols).orderBy(*order)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def upsert_latest_wins(
     existing: DataFrame,
     updates: DataFrame,
@@ -161,19 +179,12 @@ def upsert_latest_wins(
     key). At 100 TB prefer table formats with native MERGE (Delta/
     Iceberg) for the storage side; this is the engine-side dataflow that
     stays identical."""
-    from pyspark.sql import Window as W
-
     tagged = existing.withColumn("_src", F.lit(0)).unionByName(
         updates.withColumn("_src", F.lit(1))
     )
-    w = W.partitionBy(*key_cols).orderBy(
-        F.col(version_col).desc(), F.col("_src").desc()
-    )
-    return (
-        tagged.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src")
-    )
+    return latest_per_key(
+        tagged, key_cols, [F.col(version_col).desc(), F.col("_src").desc()]
+    ).drop("_src")
 
 
 _S10_ORACLE = """
@@ -1421,17 +1432,9 @@ ORDER BY o_orderkey
 def merge_on_read_view(spark: SparkSession, lake_dir: str, key_cols: list[str],
                        version_col: str) -> DataFrame:
     """Resolve a base+deltas lake directory to latest-per-key rows at
-    read time (no base rewrite). The per-key top-1 window plans as
-    WindowGroupLimit — map tasks forward one candidate per key."""
-    from pyspark.sql import Window as W
-
+    read time (no base rewrite), by :func:`latest_per_key`."""
     all_rows = spark.read.parquet(f"{lake_dir}/*")
-    w = W.partitionBy(*key_cols).orderBy(F.col(version_col).desc())
-    return (
-        all_rows.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return latest_per_key(all_rows, key_cols, [F.col(version_col).desc()])
 
 
 def s21_land_generations(orders: DataFrame, lake: str) -> None:
@@ -2150,8 +2153,6 @@ def s26_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     and update/insert deltas vs the previous as-of state. Lands the
     shared s21 generation stack, reads it back, and resolves all three
     as-of views in one windowed plan."""
-    from pyspark.sql import Window as W
-
     orders = Catalog(spark, sf_dir).orders
     base_dir = scratch_dir(prefix="ssn_tt_")
     lake = f"{base_dir}/orders_mor"
@@ -2163,11 +2164,8 @@ def s26_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avs = spark.createDataFrame([(1,), (2,), (3,)], "as_of int")
     state = rows.join(F.broadcast(avs), F.col("v") <= F.col("as_of"))
-    w = W.partitionBy("as_of", "k").orderBy(F.col("v").desc())
-    cur = (
-        state.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("as_of", "k", "cents")
+    cur = latest_per_key(state, ["as_of", "k"], [F.col("v").desc()]).select(
+        "as_of", "k", "cents"
     )
     prev = cur.filter(F.col("as_of") < 3).select(
         (F.col("as_of") + 1).alias("as_of"),

@@ -1168,3 +1168,30 @@ def test_x3x6_plan_is_one_scan_plus_k_row_aggregate(spark):
     assert "SortMergeJoin" not in plan
     assert "CartesianProduct" not in plan
     assert "hashpartitioning(cell" in plan
+
+
+def test_ivf_search_windows_partition_by_query_only(spark):
+    """x3d / x3p: cell assignment and probe selection are per-row
+    nearest_cells folds over the broadcast centroid array, so the only
+    Window nodes left are the per-query top-k ranks, each partitioned
+    by q_id alone. A vec_id-partitioned Window would be the corpus-wide
+    assignment window, which shuffles the n x K crossJoin."""
+    import re
+
+    for name in ("x3d_similarity_ivf", "x3p_ivf_nprobe_sweep"):
+        lines = _plan(spark, name).splitlines()
+        parts = []
+        for i, line in enumerate(lines):
+            if re.match(r"\(\d+\) Window\b", line.strip()):
+                args = next(
+                    (
+                        lines[j].strip()
+                        for j in range(i + 1, min(i + 6, len(lines)))
+                        if lines[j].strip().startswith("Arguments:")
+                    ),
+                    "",
+                )
+                parts.append(args.split("], [")[-2] if "], [" in args else args)
+        assert parts, name
+        for part in parts:
+            assert re.fullmatch(r"q_id#\d+L?", part), (name, part)

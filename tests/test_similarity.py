@@ -1011,3 +1011,64 @@ def test_x3z_trained_ivf_planted_probe_and_ranking(spark):
         for r in rows
     )
     assert oracle == got
+
+
+def test_nearest_cells_tie_order_and_zero_norm_law(spark):
+    """nearest_cells law on handmade 2-D vectors, both metrics, n = 1
+    and n = 3: an exact distance tie (vector [1, 1] is equally near
+    centroids 1 and 2 by cosine AND by L2) goes to the smaller cent_id;
+    the answer does not depend on the centroid array's order (the
+    reversed array gives the same cells); the zero-norm centroid 4 is
+    never a cosine candidate but is an ordinary L2 one; the zero vector
+    has no cosine cell (null) and assign_cells drops it."""
+    import math
+
+    from pyspark.sql import functions as F
+
+    from ssn_college_software_architecture_assignments__spark.operators.similarity import (
+        _centroid_array,
+        assign_cells,
+        nearest_cells,
+    )
+
+    cents = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 1.0]), (4, [0.0, 0.0]), (5, [-1.0, 0.0])],
+        "cent_id long, cemb array<double>",
+    )
+    vecs = spark.createDataFrame(
+        [(0, [1.0, 1.0]), (1, [0.0, 0.0]), (2, [-2.0, 0.0])],
+        "vec_id long, emb array<double>",
+    )
+    expect = {
+        ("cos", 1): {0: 1, 1: None, 2: 5},
+        ("cos", 3): {0: [1, 2, 5], 1: None, 2: [5, 2, 1]},
+        ("l2", 1): {0: 1, 1: 4, 2: 5},
+        ("l2", 3): {0: [1, 2, 4], 1: [4, 1, 2], 2: [5, 4, 2]},
+    }
+    arr = _centroid_array(cents)
+    for cents_col in (F.col("cents"), F.reverse("cents")):
+        frame = vecs.crossJoin(arr.select(cents_col.alias("cents")))
+        for (metric, n), want in expect.items():
+            near = nearest_cells(F.col("emb"), F.col("cents"), metric, n)
+            got = {
+                r["vec_id"]: r["cell"]
+                for r in frame.select("vec_id", near["cid"].alias("cell")).collect()
+            }
+            assert got == want, (metric, n, got)
+        # n = 1 carries the winning key: squared L2, or -cos
+        keys = {
+            r["vec_id"]: (r["d"], r["c"])
+            for r in frame.select(
+                "vec_id",
+                nearest_cells(F.col("emb"), F.col("cents"), "l2")["key"].alias("d"),
+                nearest_cells(F.col("emb"), F.col("cents"))["key"].alias("c"),
+            ).collect()
+        }
+        assert keys == {
+            0: (1.0, -(1.0 / math.sqrt(2.0))),
+            1: (0.0, None),
+            2: (1.0, -1.0),
+        }
+
+    cells = {r["vec_id"]: r["cell"] for r in assign_cells(vecs, cents).collect()}
+    assert cells == {0: 1, 2: 5}
