@@ -185,32 +185,18 @@ def minhash_signatures(
 def minhash_candidate_pairs(
     sigs: DataFrame, num_hashes: int = 16, bands: int = 4
 ) -> DataFrame:
-    """LSH banding: hash each band of the signature, group rows into
-    (band_idx, band_hash) buckets, and generate candidate id pairs
-    WITHIN each bucket with a higher-order function, scoring each pair
-    with the estimated Jaccard (fraction of matching minhashes).
-
-    Bucket-grouping deliberately, NOT the band-bucket self-join: Spark
-    plans a self-join of this subtree by computing the expensive
-    shingle-explode + min-aggregate signature pass TWICE (no
-    ReusedExchange fires — measured 2 parquet scans / 4 HashAggregates
-    in the executed plan), while groupBy + in-bucket pair expansion
-    computes signatures ONCE and replaces the join shuffle with a single
-    groupBy shuffle whose payload is (id, signature) per band. Pair
-    count per bucket is identical in both forms (quadratic in bucket
-    size — tiny by LSH design: a bucket only fills when signatures
-    collide on a whole band), so this is a pure plan win, not a
-    semantics trade. Plan-gated to one documents scan in
-    tests/test_plan_shapes.py.
+    """LSH banding: hash each band of the signature into
+    (band_idx, band_hash) buckets and pair the ids sharing a bucket
+    through bucket_pairs (one signature pass, plan-gated to one
+    documents scan), each pair scored in the row with the estimated
+    Jaccard (fraction of matching minhashes).
 
     Mega-bucket bound: a document duplicated millions of times verbatim
-    puts all its copies in one bucket, and the in-bucket pair count is
-    quadratic in either form. The expansion runs through in_row_pairs,
-    so a bucket over _MAX_PAIR_GROUP (4096) members is refused with an
-    error naming its size and the remedy. The remedy at 100 TB is to
-    collapse exact-duplicate SIGNATURES first: identical signatures are
-    exact dups (X1's job), carried as (representative, count), so
-    banding only ever sees unique signatures and buckets stay small.
+    puts all its copies in one bucket, which bucket_pairs refuses over
+    _MAX_PAIR_GROUP (4096) members. The remedy at 100 TB is to collapse
+    exact-duplicate SIGNATURES first: identical signatures are exact
+    dups (X1's job), carried as (representative, count), so banding
+    only ever sees unique signatures and buckets stay small.
     """
     rows_per_band = num_hashes // bands
     band_hashes = F.array(
@@ -231,34 +217,26 @@ def minhash_candidate_pairs(
     banded = sigs.select(
         "_id", "minhash", F.posexplode(band_hashes).alias("band_idx", "band_hash")
     )
-    buckets = (
-        banded.groupBy("band_idx", "band_hash")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("_id", "minhash"))).alias("ms")
-        )
-        .filter(F.size("ms") >= 2)
-    )
-    # i<j pairs scored by signature-estimate Jaccard. array_sort on
-    # struct(_id, ...) orders members by _id, so emitted pairs always
-    # satisfy id_a < id_b without a join condition.
-    pair_expr = in_row_pairs(
-        "ms",
-        lambda a, b: f"""
-            'id_a', {a}._id,
-            'id_b', {b}._id,
-            'est_jaccard',
-            round(aggregate(
-                    zip_with({a}.minhash, {b}.minhash,
-                             (x, y) -> CAST(x = y AS INT)),
-                    0, (acc, v) -> acc + v)
-                  / CAST({num_hashes} AS DOUBLE), 4)""",
+    return bucket_pairs(
+        banded,
+        "_id",
+        ["band_idx", "band_hash"],
         "x2",
+        payload=("minhash",),
+        fields=_est_jaccard_field(num_hashes),
     )
-    return (
-        buckets.select(F.explode(pair_expr).alias("p"))
-        .select("p.id_a", "p.id_b", "p.est_jaccard")
-        .dropDuplicates(["id_a", "id_b"])
-    )
+
+
+def _est_jaccard_field(num_hashes: int) -> Callable[[str, str], str]:
+    """bucket_pairs ``fields``: the signature-estimate Jaccard of two
+    members carrying a ``minhash`` array, rounded to 4 places."""
+    return lambda a, b: f"""
+        'est_jaccard',
+        round(aggregate(
+                zip_with({a}.minhash, {b}.minhash,
+                         (x, y) -> CAST(x = y AS INT)),
+                0, (acc, v) -> acc + v)
+              / CAST({num_hashes} AS DOUBLE), 4)"""
 
 
 @register("x2_minhash_near_dedup", tags=("X2",))
@@ -336,20 +314,18 @@ def x2b_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("x2b2_simhash_pairs", tags=("X2",))
 def x2b2_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup PAIRING: 64-bit fingerprints split into 4 x 16-bit
-    bands; pairs colliding on any band (bucket equi-join — the pigeonhole
-    guarantee: any pair with Hamming distance <= 3 shares at least one
-    exact band) are scored with the exact Hamming distance
-    (bit_count(xor)) and flagged at <= 12 bits. Candidate generation is
+    bands; pairs colliding on any band (the pigeonhole guarantee: any
+    pair with Hamming distance <= 3 shares at least one exact band) are
+    scored in the row with the exact Hamming distance (bit_count(xor))
+    and flagged at <= 12 bits. Candidate generation is
     engine-hash-dependent -> rows-only; the Hamming arithmetic is
     re-verified in tests/test_dedup.py.
 
-    Scale shape: signatures are map-only; the only shuffle is the
-    (band_idx, band_value) bucket join — never all-pairs."""
+    Scale shape: signatures are map-only and computed once; the only
+    shuffle is the (band_idx, band_val) bucket grouping of
+    bucket_pairs — never all-pairs."""
     docs = ensure_min_partitions(Catalog(spark, sf_dir).documents)
-    # Materialize signatures once: the self-join otherwise re-evaluates the
-    # (interpreted HOF) simhash expression on BOTH sides. At scale this is
-    # the natural "persist the fingerprint table" step of a dedup pipeline.
-    sigs = docs.select("doc_id", simhash64("text").alias("simhash")).localCheckpoint()
+    sigs = docs.select("doc_id", simhash64("text").alias("simhash"))
     banded = sigs.select(
         "doc_id",
         "simhash",
@@ -362,26 +338,16 @@ def x2b2_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("band_idx", "band_val"),
     )
-    a = banded.select(
-        F.col("doc_id").alias("id_a"), F.col("simhash").alias("sim_a"),
-        "band_idx", "band_val",
-    )
-    b = banded.select(
-        F.col("doc_id").alias("id_b"), F.col("simhash").alias("sim_b"),
-        "band_idx", "band_val",
-    )
-    pairs = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+    pairs = bucket_pairs(
+        banded,
+        "doc_id",
+        ["band_idx", "band_val"],
+        "x2b2",
+        payload=("simhash",),
+        fields=lambda a, b: f"'hamming', bit_count({a}.simhash ^ {b}.simhash)",
     )
     return pairs.select(
-        "id_a",
-        "id_b",
-        F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))).alias("hamming"),
-        (
-            F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b"))) <= 12
-        ).alias("is_near_dup"),
+        "id_a", "id_b", "hamming", (F.col("hamming") <= 12).alias("is_near_dup")
     )
 
 
@@ -408,41 +374,45 @@ WHERE CAST(i.n_common AS DOUBLE) / (sa.n + sb.n - i.n_common) >= 0.8
 """
 
 
-@register("x2c_ngram_jaccard", oracle=_X2C_ORACLE, tags=("X2",))
-def x2c_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact token-set Jaccard >= 0.8 between same-lang documents, via the
-    inverted-index join (token -> doc postings), not all-pairs: documents
-    sharing no token never meet. Restricted to a small id range so the
-    oracle stays cheap; the shape is the scalable one."""
-    docs = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") < 40)
+def token_jaccard_pairs(docs: DataFrame) -> DataFrame:
+    """(id_a, id_b, jac): the exact token-set Jaccard of every pair of
+    same-lang documents sharing a token, over any (doc_id, lang, text)
+    frame. pair_overlap over the (token, lang) posting lists yields each
+    pair's shared-token count and each doc's distinct-token count in
+    one aggregate: no posting self-join, no second scan for sizes.
+    x2c's verdict and x2m's threshold sweep both read it."""
+    # array_distinct already makes (doc_id, lang, tok) unique — a
+    # .distinct() here would add a full shuffle of the exploded tokens,
+    # the largest intermediate, for nothing
     toks = docs.select(
         "doc_id",
         "lang",
         F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
     )
-    sizes = toks.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = toks.alias("a")
-    b = toks.alias("b")
-    inter = (
-        a.join(
-            b,
-            (F.col("a.tok") == F.col("b.tok"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (F.col("a.lang") == F.col("b.lang")),
-        )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("n_common"))
+    post = toks.groupBy("tok", "lang").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("na") + F.col("nb") - F.col("n_common")
+    return pair_overlap(post, "ids", "x2c/x2m").select(
+        F.col("a").alias("id_a"),
+        F.col("b").alias("id_b"),
+        (
+            F.col("n_shared").cast("double")
+            / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
+        ).alias("jac"),
     )
+
+
+@register("x2c_ngram_jaccard", oracle=_X2C_ORACLE, tags=("X2",))
+def x2c_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact token-set Jaccard >= 0.8 between same-lang documents, via the
+    token -> doc posting lists (token_jaccard_pairs), not all-pairs:
+    documents sharing no token never meet. Restricted to a small id
+    range so the oracle stays cheap; the shape is the scalable one."""
+    docs = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") < 40)
     return (
-        inter.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(jac >= 0.8)
-        .select("id_a", "id_b", F.round(jac, 4).alias("jaccard"))
+        token_jaccard_pairs(docs)
+        .filter(F.col("jac") >= 0.8)
+        .select("id_a", "id_b", F.round("jac", 4).alias("jaccard"))
     )
 
 
@@ -614,13 +584,13 @@ def x2e_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Every dedup pair stage groups its candidates (an LSH band bucket, a
 # gram's postings, a centroid cell, a token's source list) and expands
 # each group's member array into its pairs inside the one aggregation
-# row. No self-join, so the subtree that built the groups is planned
-# once. The price is quadratic in the group and lands in a single row
-# buffer (~16 bytes a pair of longs): a stop-gram or a mega-bucket of
-# verbatim copies would quietly kill an executor with terabytes in one
-# row. Such a group carries no dedup signal, so rather than silently
-# change an edge law with a frequency cap, every expansion refuses a
-# group over this one declared bound and names the remedy. At 4096
+# row, never through a self-join (bucket_pairs says why). The price is
+# quadratic in the group and lands in a single row buffer (~16 bytes a
+# pair of longs): a stop-gram or a mega-bucket of verbatim copies would
+# quietly kill an executor with terabytes in one row. Such a group
+# carries no dedup signal, so rather than silently change an edge law
+# with a frequency cap, every expansion refuses a group over this one
+# declared bound and names the remedy. At 4096
 # members a group emits ~8.4M pairs, ~134 MB of buffer; conforming data
 # pays one size comparison per group row.
 _MAX_PAIR_GROUP = 4096
@@ -693,6 +663,66 @@ def pair_overlap(groups: DataFrame, arr: str, op: str) -> DataFrame:
     ).filter(F.col("a") < F.col("b"))
 
 
+def bucket_pairs(
+    tagged: DataFrame,
+    id_col: str,
+    keys: list[str],
+    op: str,
+    payload: tuple[str, ...] = (),
+    fields: Callable[[str, str], str] | None = None,
+    where: Column | None = None,
+) -> DataFrame:
+    """The one candidate stage of every band, bucket and prefix-postings
+    pair generator: (id_a, id_b, ...) for every pair of ``tagged`` rows
+    that share a value of ``keys``, once each, with id_a < id_b. Stages
+    that count shared keys per pair use pair_overlap instead.
+
+    Each group's struct(id, *payload) members are collected, sorted by
+    id and expanded through in_row_pairs, so a group over
+    _MAX_PAIR_GROUP members is refused. A row carries at most one key
+    value per id and group (one bucket per band or table, one posting
+    per gram), so the sorted members pair strictly a < b. A pair
+    carries both members' payload as ``<col>_a`` and ``<col>_b``, or,
+    when ``fields`` is given, the named_struct body it builds from the
+    SQL of the two member structs (a score computed in the row).
+    ``where`` drops pairs before the cross-group dedup, so only
+    survivors ride that exchange. The payload is a function of the id,
+    so the dedup keys on (id_a, id_b) alone.
+
+    Grouped, not self-joined: Spark plans a self-join of ``tagged`` by
+    computing its subtree twice (no ReusedExchange fires), so the
+    signature, fingerprint or decode pass upstream would run once per
+    join side (x2's band self-join measured 2 parquet scans and 4
+    HashAggregates), and the scorer's table would be joined back twice
+    more.
+    Grouping computes the subtree once, replaces the join shuffle with
+    one groupBy shuffle of (id, payload) per key, and hands the scorer
+    its inputs in the row. The pairs per group are the same in both
+    forms (quadratic in the group, small by LSH design), so this is a
+    plan win, not a semantics trade; the one-scan and kernel-count
+    gates in tests/test_plan_shapes.py pin it."""
+    members = F.array_sort(F.collect_list(F.struct(id_col, *payload)))
+    groups = (
+        tagged.groupBy(*keys).agg(members.alias("ms")).filter(F.size("ms") >= 2)
+    )
+
+    def body(a: str, b: str) -> str:
+        extra = (
+            fields(a, b)
+            if fields is not None
+            else ", ".join(f"'{c}_a', {a}.{c}, '{c}_b', {b}.{c}" for c in payload)
+        )
+        ids = f"'id_a', {a}.{id_col}, 'id_b', {b}.{id_col}"
+        return f"{ids}, {extra}" if extra else ids
+
+    pairs = groups.select(
+        F.explode(in_row_pairs("ms", body, op)).alias("p")
+    ).select("p.*")
+    if where is not None:
+        pairs = pairs.filter(where)
+    return pairs.dropDuplicates(["id_a", "id_b"])
+
+
 # X2e2 — GLOBAL transitive-closure clusters via large-star/small-star ----------
 #
 # x2e closes a 40-doc candidate graph; x2e2 runs the same
@@ -702,8 +732,8 @@ def pair_overlap(groups: DataFrame, arr: str, op: str) -> DataFrame:
 # EDGE-set rounds regardless of topology. The edge law here is
 # a shared-evidence graph — two documents are linked when they share at
 # least _X2E2_MIN_SHARED distinct 3-token shingles — built by the same
-# inverted-index join every x2 candidate generator uses (gram -> doc
-# postings; documents sharing no gram never meet; never all-pairs).
+# gram -> doc posting lists every x2 candidate generator groups
+# (documents sharing no gram never meet; never all-pairs).
 # Unlike band-hash equality (transitive by construction), shared-gram
 # evidence genuinely CHAINS: A~B via one gram set, B~C via another, with
 # A and C sharing nothing — the fixture contains such chains, and the
@@ -715,8 +745,8 @@ _X2E2_MIN_SHARED = 3
 
 def _gram3_table(docs: DataFrame) -> DataFrame:
     """(doc_id, gram) with one row per DISTINCT 3-token shingle — the
-    Spark twin of _grams3_cte, factored out so the x2e2/x2e2b self-join
-    and x2e3's batch->corpus probe build their postings from one site."""
+    Spark twin of _grams3_cte, factored out so the x2e2/x2e2b postings
+    pairs and x2e3's batch->corpus probe build their postings from one site."""
     return docs.select(
         "doc_id",
         F.explode(
@@ -733,19 +763,13 @@ def x2e2_shared_gram_pairs(docs: DataFrame) -> DataFrame:
     — the final plan can't witness this stage's shape, so the plan gate
     targets it directly.
 
-    Postings-group form, NOT the gram self-join: the self-join plans
-    the shingle explode TWICE (two documents scans, two Generates, no
-    ReusedExchange) and, statistics-blind, BROADCASTS the entire
-    exploded gram table as the build side — corpus-sized at 100 TB.
-    Grouping the postings list per gram computes the explode ONCE and
-    replaces the join with a single groupBy-gram exchange; the i<j
-    in_row_pairs expansion emits exactly the pairs the join would
-    (postings are per-doc-distinct and sorted, so src < dst by
-    construction), and the same (src, dst) count >= _X2E2_MIN_SHARED
-    fold follows. The quadratic per-gram pair cost is the same in both
-    forms (a k-doc gram emits k(k-1)/2 pairs either way, and both key
-    by gram, so a hot gram lands in one task regardless); a stop-gram
-    over _MAX_PAIR_GROUP postings is refused by in_row_pairs."""
+    Postings-group form, not the gram self-join (bucket_pairs gives
+    the reason; a statistics-blind self-join would also broadcast the
+    whole exploded gram table). It counts shared grams rather than
+    deduplicating pairs, so it expands the sorted per-gram postings
+    with in_row_pairs directly (src < dst by construction) and folds
+    (src, dst) count >= _X2E2_MIN_SHARED; a stop-gram over
+    _MAX_PAIR_GROUP postings is refused."""
     grams = _gram3_table(docs)
     posts = (
         grams.groupBy("gram")
@@ -1381,8 +1405,8 @@ FROM (
 @register("x2f_embedding_neardup_lsh", tags=("X2",))
 def x2f_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SCALE path for embedding near-dup that x2d's docstring promises:
-    candidate pairs come from random-hyperplane LSH buckets (bucket
-    equi-join per table — never an all-pairs join), then the exact-cosine
+    candidate pairs come from random-hyperplane LSH buckets (bucket_pairs
+    per table — never an all-pairs join), then the exact-cosine
     scorer and the >= 0.95 verdict are identical to x2d's. Approximate
     candidate generation (engine-side hyperplane hashing) -> rows-only;
     tests assert every emitted pair truly clears the exact-cosine bar and
@@ -1408,17 +1432,9 @@ def x2f_embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tbl", "bucket"),
     )
-    a = tagged.select(
-        F.col("vec_id").alias("id_a"), F.col("emb").alias("emb_a"), "tbl", "bucket"
-    )
-    b = tagged.select(
-        F.col("vec_id").alias("id_b"), F.col("emb").alias("emb_b"), "tbl", "bucket"
-    )
-    pairs = (
-        a.join(b, ["tbl", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        # a pair colliding in several tables scores once
-        .dropDuplicates(["id_a", "id_b"])
+    # a pair colliding in several tables scores once
+    pairs = bucket_pairs(
+        tagged, "vec_id", ["tbl", "bucket"], "x2f", payload=("emb",)
     )
     # The synthetic fixture has no >=0.95 pairs (max pairwise cosine is
     # ~0.51), so emit every scored candidate with its verdict instead of
@@ -1471,7 +1487,7 @@ def x2d_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The flagship x2_minhash_near_dedup uses xxhash64, which DuckDB cannot
 # reproduce, so it is rows-only by design. This variant runs the SAME
 # relational pipeline — shingle-explode -> map-side partial min-agg ->
-# band-hash bucket self-join -> signature-overlap estimate — with every
+# band-hash bucket pairs -> signature-overlap estimate — with every
 # hash derived from md5 (identical in both engines: Spark
 # conv(substr(md5(x),1,15),16,10) == DuckDB CAST('0x'||substr(md5(x),1,15)
 # AS BIGINT), a 60-bit positive value), so the ENTIRE MinHash+LSH dataflow
@@ -1579,10 +1595,10 @@ def _md5_shingle_signatures(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 
 def _md5_banded(sigs: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_hash) rows from md5 signature columns —
-    THE single banding law shared by the x2g self-join and the x2n
-    batch-vs-corpus index probe, so the two sides of an incremental
-    probe can never band differently."""
+    """(doc_id, minhash, band_idx, band_hash) rows from md5 signature
+    columns — THE single banding law shared by x2g's bucket pairs and
+    the x2n batch-vs-corpus index probe, so the two sides of an
+    incremental probe can never band differently."""
     rows_per_band = _X2G_HASHES // _X2G_BANDS
     band_hashes = F.array(
         *[
@@ -1599,7 +1615,26 @@ def _md5_banded(sigs: DataFrame) -> DataFrame:
         ]
     )
     return sigs.select(
-        "doc_id", F.posexplode(band_hashes).alias("band_idx", "band_hash")
+        "doc_id",
+        F.array(*[f"mh_{s}" for s in range(_X2G_HASHES)]).alias("minhash"),
+        F.posexplode(band_hashes).alias("band_idx", "band_hash"),
+    )
+
+
+def _md5_band_pairs(
+    sigs: DataFrame, op: str, where: Column | None = None
+) -> DataFrame:
+    """(id_a, id_b, est_jaccard) for every md5-banded candidate pair —
+    THE candidate stage of x2g, shared by x2p (``where`` keeps its
+    cross-document pairs above the threshold) and x2z's audit."""
+    return bucket_pairs(
+        _md5_banded(sigs),
+        "doc_id",
+        ["band_idx", "band_hash"],
+        op,
+        payload=("minhash",),
+        fields=_est_jaccard_field(_X2G_HASHES),
+        where=where,
     )
 
 
@@ -1608,48 +1643,14 @@ def x2g_minhash_full_oracle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH near-dedup with EVERY stage exact-value oracle-checked
     (8 md5-derived permutation hashes, 4 bands of 2). Same physical shape
     as the xxhash64 flagship: shingle explode + map-side partial min-agg
-    (shuffle carries 8 longs per doc, never shingles), band-hash bucket
-    self-join (never all-pairs). Restricted to doc_id < 200 so the DuckDB
-    twin (which must brute-force the same 8 md5s per shingle) stays cheap;
-    the Spark side's shape is the 100 TB one."""
+    (shuffle carries 8 longs per doc, never shingles), band-hash
+    bucket_pairs scored in the row (never all-pairs). Restricted to
+    doc_id < 200 so the DuckDB twin (which must brute-force the same 8
+    md5s per shingle) stays cheap; the Spark side's shape is the 100 TB
+    one."""
     docs = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") < 200)
     _, sigs = _md5_shingle_signatures(docs)
-    banded = _md5_banded(sigs)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"mh_{s}").alias(f"a_{s}") for s in range(_X2G_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"mh_{s}").alias(f"b_{s}") for s in range(_X2G_HASHES)],
-    )
-    matches = sum(
-        (F.col(f"a_{s}") == F.col(f"b_{s}")).cast("int")
-        for s in range(_X2G_HASHES)
-    )
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.round(matches / F.lit(float(_X2G_HASHES)), 4).alias("est_jaccard"),
-        )
-    )
+    return _md5_band_pairs(sigs, "x2g")
 
 
 # X2h — short-document robustness gate (full oracle) --------------------------
@@ -1985,11 +1986,9 @@ def semantic_dup_candidates(
     cosine and emit the closest ``top_per_cell`` with the
     ``is_semantic_dup`` verdict at ``tau``.
 
-    Cell-grouped pair expansion deliberately, NOT a cell self-join: a
-    self-join of the assignment subtree plans the whole assignment
-    TWICE (two corpus scans — same pathology minhash_candidate_pairs
-    documents for band buckets), while groupBy(cell) + in-cell HOF
-    expansion computes the assignment ONCE and does pairwise cosine,
+    Cell-grouped pair expansion, not a cell self-join (bucket_pairs
+    gives the reason): groupBy(cell) + in-cell HOF expansion computes
+    the assignment ONCE and does pairwise cosine,
     the top-k sort, and the slice inside the aggregation row — one
     corpus shuffle (on the cell id), no window anywhere: the
     assignment itself is a per-row argmax fold over the broadcast
@@ -2437,9 +2436,7 @@ def x2k_quality_dedup_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 # candidate threshold capture? Computed over the same restricted slice
 # and token-set Jaccard as x2c, but as a CURVE — one row per threshold —
 # so the cutoff is picked from data, not folklore. One corpus scan:
-# pair_overlap over the (token, lang) posting lists yields every doc
-# pair's shared-token count and each doc's distinct-token count in one
-# aggregate — no posting self-join, no second scan for sizes.
+# token_jaccard_pairs, x2c's pair stage.
 
 _X2M_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
@@ -2505,25 +2502,7 @@ def x2m_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs. Thresholds with zero qualifying pairs are absent
     by convention on both sides."""
     docs = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") < 40)
-    # array_distinct already makes (doc_id, lang, tok) unique — a
-    # .distinct() here would add a full shuffle of the exploded tokens,
-    # the largest intermediate, for nothing
-    toks = docs.select(
-        "doc_id",
-        "lang",
-        F.explode(F.array_distinct(F.split("text", " "))).alias("tok"),
-    )
-    post = toks.groupBy("tok", "lang").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("ids")
-    )
-    pairs = pair_overlap(post, "ids", "x2m").select(
-        F.col("a").alias("id_a"),
-        F.col("b").alias("id_b"),
-        (
-            F.col("n_shared").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_shared"))
-        ).alias("jac"),
-    )
+    pairs = token_jaccard_pairs(docs)
     sweep = pairs.select(
         "id_a",
         "id_b",
@@ -2688,9 +2667,9 @@ def x2n_incremental_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 16-token boilerplate header prepended to every 10th document (the
 # planted cross-document duplicate — exactly the nav-header shape).
 # Scale shape: identical to x2 — signatures via map-side partial min-agg
-# (the shuffle carries 8 longs per paragraph, never shingles), banding
-# equi-join never all-pairs (plan-gated), and the dup roster joins back
-# by paragraph id. Paragraph count is ~docs x 5, so every stage scales
+# (the shuffle carries 8 longs per paragraph, never shingles), band
+# bucket pairs never all-pairs (plan-gated), and the dup roster joins
+# back by paragraph id. Paragraph count is ~docs x 5, so every stage scales
 # linearly with corpus size.
 
 _X2P_WIDTH = 16
@@ -2807,48 +2786,22 @@ def _x2p_paragraphs(docs: DataFrame) -> DataFrame:
 @register("x2p_paragraph_near_dedup", oracle=_X2P_ORACLE, tags=("X2",))
 def x2p_paragraph_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated-paragraph mass per source (boilerplate
-    screen): paragraph MinHash signatures -> LSH banding (equi-join,
-    never all-pairs) -> signature-estimate filter at 0.5 -> token-mass
-    rollup. Doc_id < 200 keeps the DuckDB twin's brute-force md5 cost
-    bounded; the Spark shape is the 100 TB one."""
+    screen): paragraph MinHash signatures -> x2g's LSH bucket pairs
+    (never all-pairs), cross-document and at signature estimate >= 0.5
+    -> token-mass rollup. Doc_id < 200 keeps the DuckDB twin's
+    brute-force md5 cost bounded; the Spark shape is the 100 TB one."""
     docs = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") < 200)
     paras = _x2p_paragraphs(docs)
     _, sigs = _md5_shingle_signatures(
         paras.select(F.col("para_id").alias("doc_id"), "text")
     )
-    banded = _md5_banded(sigs)
-    a = banded.alias("a")
-    b = banded.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id"))
-            & (
-                F.floor(F.col("a.doc_id") / _X2P_IDMUL)
-                != F.floor(F.col("b.doc_id") / _X2P_IDMUL)
-            ),
+    scored = _md5_band_pairs(
+        sigs,
+        "x2p",
+        where=(
+            F.floor(F.col("id_a") / _X2P_IDMUL) != F.floor(F.col("id_b") / _X2P_IDMUL)
         )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = sigs.select(
-        F.col("doc_id").alias("id_a"),
-        *[F.col(f"mh_{s}").alias(f"a_{s}") for s in range(_X2G_HASHES)],
-    )
-    sb = sigs.select(
-        F.col("doc_id").alias("id_b"),
-        *[F.col(f"mh_{s}").alias(f"b_{s}") for s in range(_X2G_HASHES)],
-    )
-    matches = sum(
-        (F.col(f"a_{s}") == F.col(f"b_{s}")).cast("int")
-        for s in range(_X2G_HASHES)
-    )
-    scored = (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .filter(matches / F.lit(float(_X2G_HASHES)) >= _X2P_THRESHOLD)
+        & (F.col("est_jaccard") >= _X2P_THRESHOLD),
     )
     # one select exploding both endpoints — a union of two selects of
     # the scored subtree would plan (and run) the whole LSH chain twice
@@ -3521,8 +3474,8 @@ def x2v_containment_rescore(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the NAIVE all-pairs join: equality of the two result sets IS the
 # completeness theorem, checked cross-engine.
 #
-# Scale shape: candidates come from an equi-join on single shingle
-# hashes (rarest-first prefixes keep posting lists short — the whole
+# Scale shape: candidates are bucket_pairs on single shingle hashes
+# (rarest-first prefixes keep posting lists short — the whole
 # point of the frequency order), the verify joins full sets only for
 # the candidate pairs, and the corpus never crosses a cartesian. The
 # fixture is x2v's absorbed corpus (even docs embedded in their odd
@@ -3576,14 +3529,17 @@ def _hashed_shingle_sets(docs: DataFrame) -> DataFrame:
 
 def _prefix_filter_pairs(sh: DataFrame, t: float) -> DataFrame:
     """AllPairs/PPJoin core over a fingerprint table ``sh`` (doc_id,
-    s: array<long>): frequency-ordered prefix extraction, candidate
-    equi-join on single shingle hashes, exact set verify — every pair
-    with Jaccard >= ``t``, never all-pairs."""
+    s: array<long>): frequency-ordered prefix extraction, bucket_pairs
+    on single prefix shingle hashes, exact set verify — every pair with
+    Jaccard >= ``t``, never all-pairs. The candidates carry no payload:
+    a doc's full set riding each of its ~|s|/2 prefix postings would
+    grow the pair stage's shuffle with the square of the document
+    length, so the verify joins the sets for the candidates instead."""
     occ = sh.select("doc_id", F.explode("s").alias("gh"))
     df_counts = occ.groupBy("gh").agg(F.count(F.lit(1)).alias("n_docs"))
     # per-doc shingles in canonical (doc-frequency asc, gh asc) order;
     # the prefix keeps the RAREST shingles, which is what keeps the
-    # candidate equi-join's posting lists short
+    # candidate posting lists short
     ranked = (
         occ.join(df_counts, "gh")
         .groupBy("doc_id")
@@ -3603,15 +3559,7 @@ def _prefix_filter_pairs(sh: DataFrame, t: float) -> DataFrame:
             )
         ).alias("gh"),
     )
-    cand = (
-        prefix.alias("a")
-        .join(prefix.alias("b"), "gh")
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .distinct()
-    )
+    cand = bucket_pairs(prefix, "doc_id", ["gh"], "x2w")
     sa = sh.select(F.col("doc_id").alias("id_a"), F.col("s").alias("sa"))
     sb = sh.select(F.col("doc_id").alias("id_b"), F.col("s").alias("sb"))
     ni = F.size(F.array_intersect("sa", "sb"))
@@ -5488,21 +5436,22 @@ def x3z3_post_split_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # how many of the banded candidate pairs are REAL near-dups (precision,
 # the verify-stage cost), and how many real near-dups the bands catch
 # (recall, the miss risk)? Truth is the exact 3-shingle Jaccard — the
-# very quantity MinHash estimates — computed by the inverted-index
-# join (never all-pairs); candidates are x2g's md5-banded pairs via the
-# SAME shared signature/banding sites, so the audited pipeline is the
-# registered one, not a reimplementation. Every threshold verdict is a
-# BIGINT cross-multiplication (den*n_common >= num*union) and the two
-# rates are floored micro-ratios — bitwise cross-engine.
+# very quantity MinHash estimates — computed by pair_overlap over the
+# shingle posting lists (never all-pairs); candidates are x2g's
+# _md5_band_pairs over the SAME shared signature sites, so the audited
+# pipeline is the registered one, not a reimplementation. Every
+# threshold verdict is a BIGINT cross-multiplication
+# (den*n_common >= num*union) and the two rates are floored
+# micro-ratios — bitwise cross-engine.
 #
 # A band collision implies a shared shingle (equal min-hash values name
 # the same argmin shingle, md5 collisions aside), so every candidate
 # pair appears in the shared-shingle join and the left join loses
 # nothing — the structural fact that makes the audit exact.
 #
-# Scale shape: shingle explode -> inverted-index join (gram -> doc
-# postings) for truth; the x2g band join for candidates; both collapse
-# to pair-keyed aggregates before the tiny 3-row threshold cross-join.
+# Scale shape: shingle explode -> posting-list pair_overlap for truth;
+# x2g's band bucket pairs for candidates; both collapse to pair-keyed
+# aggregates before the tiny 3-row threshold cross-join.
 
 _X2Z_TAUS = ((30, 3, 10), (50, 5, 10), (70, 7, 10))  # (pct, num, den)
 
@@ -5565,51 +5514,19 @@ def x2z_lsh_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision/recall of the x2g MinHash-LSH candidate pairs against
     the exact 3-shingle Jaccard truth, at three thresholds. Candidates
     and signatures come from the SAME shared sites x2g registers, truth
-    from the shingle inverted index; threshold verdicts are integer
+    from the shingle posting lists; threshold verdicts are integer
     cross-multiplications and the rates floored micro-ratios."""
     docs = Catalog(spark, sf_dir).documents.filter(F.col("doc_id") < 200)
     sh, sigs = _md5_shingle_signatures(docs)
-    banded = _md5_banded(sigs)
-    a, b = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cand = _md5_band_pairs(sigs, "x2z").select("id_a", "id_b")
+    post = sh.groupBy("shingle").agg(
+        F.sort_array(F.collect_list("doc_id")).alias("ids")
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    ga, gb = sh.alias("ga"), sh.alias("gb")
-    inter = (
-        ga.join(
-            gb,
-            (F.col("ga.shingle") == F.col("gb.shingle"))
-            & (F.col("ga.doc_id") < F.col("gb.doc_id")),
-        )
-        .groupBy(
-            F.col("ga.doc_id").alias("id_a"),
-            F.col("gb.doc_id").alias("id_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    j = (
-        inter.join(
-            sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na")),
-            "id_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("nb")),
-            "id_b",
-        )
-        .select(
-            "id_a", "id_b", "n_common",
-            (F.col("na") + F.col("nb") - F.col("n_common")).alias("u"),
-        )
+    j = pair_overlap(post, "ids", "x2z").select(
+        F.col("a").alias("id_a"),
+        F.col("b").alias("id_b"),
+        F.col("n_shared").alias("n_common"),
+        (F.col("n_a") + F.col("n_b") - F.col("n_shared")).alias("u"),
     )
     jc = j.join(
         cand.withColumn("is_cand", F.lit(1)), ["id_a", "id_b"], "left"

@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import Catalog
 from ..registry import register
+from .dedup import bucket_pairs
 
 try:  # optional real-codec path: present in production images, not here
     from PIL import Image as _PILImage  # type: ignore
@@ -1519,10 +1520,11 @@ def x5m_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Hamming distance <= d. The scale idiom is multi-index hashing — the
 # same banding trick the text LSH family uses (dedup.py x2b2): split
 # the 64-bit dhash into 4 x 16-bit bands; by pigeonhole, two hashes
-# within distance <= 3 share at least one identical band, so a
-# band-keyed equi-join finds every candidate and ``bit_count(xor)``
-# verifies the exact distance — every step integer-exact, hence fully
-# oracle-checkable (unlike MinHash's probabilistic recall).
+# within distance <= 3 share at least one identical band, so
+# dedup.bucket_pairs on the band key finds every candidate and
+# ``bit_count(xor)`` verifies the exact distance — every step
+# integer-exact, hence fully oracle-checkable (unlike MinHash's
+# probabilistic recall).
 #
 # The corpus plants TRUE near-duplicates at the IMAGE level: for every
 # doc whose 9x8 resample is collision-free (h >= 8 so the 8 sampled
@@ -1536,11 +1538,11 @@ def x5m_image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: exact-duplicate collapse FIRST (5000 images -> ~500
 # distinct hashes here; at corpus scale this is the x5m hash-agg), then
-# the band join runs over DISTINCT hashes only — candidate expansion is
-# bounded per band bucket and no all-pairs stage exists (plan-gated).
-# NB the formulaic fixture images make hashes far denser than natural
-# photos (band buckets of ~400 at sf0.1); on real corpora 16-bit bands
-# over 2^64-spread hashes prune to near-singleton buckets.
+# bucket_pairs runs over DISTINCT hashes only, under its group bound;
+# no all-pairs stage exists (plan-gated). NB the formulaic fixture
+# images make hashes far denser than natural photos (largest band
+# bucket 855 at sf0.1); on real corpora 16-bit bands over 2^64-spread
+# hashes prune to near-singleton buckets.
 
 _X5M2_OFFSET = 1_000_000_000  # variant img_id = doc_id + offset
 _X5M2_DELTA = 128             # channel-0 perturbation, mod 256
@@ -1691,7 +1693,7 @@ def x5m2_hamming_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-ball near-duplicate image pairs over real decoded PPM
     payloads + planted one-pixel-perturbed variants: collapse exact
     dhash duplicates, band the 64-bit hash into 4 x 16-bit pieces,
-    equi-join on (band_idx, band_val) — pigeonhole-complete for
+    pair by (band_idx, band_val) bucket — pigeonhole-complete for
     distance <= 3 — and keep the verified pairs within distance
     _X5M2_MAX_DIST (= 2, the planted-variant displacement bound)."""
     docs = Catalog(spark, sf_dir).documents.select("doc_id")
@@ -1743,43 +1745,33 @@ def x5m2_hamming_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("band.band_idx").alias("band_idx"),
         F.col("band.band_val").alias("band_val"),
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    hd = sum(
-        F.bit_count(
-            F.col(f"a.b{i}").bitwiseXOR(F.col(f"b.b{i}"))
-        ).cast("long")
-        for i in range(_X5M2_BANDS)
-    )
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.dhash") < F.col("b.dhash"),
-            ],
+    def hd(a: str, b: str) -> str:
+        return " + ".join(
+            f"CAST(bit_count({a}.b{i} ^ {b}.b{i}) AS BIGINT)"
+            for i in range(_X5M2_BANDS)
         )
-        .select(
-            F.col("a.dhash").alias("a_hash"),
-            F.col("b.dhash").alias("b_hash"),
-            F.col("a.n_images").alias("a_images"),
-            F.col("b.n_images").alias("b_images"),
-            F.col("a.rep_id").alias("a_rep"),
-            F.col("b.rep_id").alias("b_rep"),
-            hd.alias("hamming_dist"),
-        )
-        # filter BEFORE distinct: a pair within the ball matches on >= 2
+
+    pairs = bucket_pairs(
+        bands,
+        "dhash",
+        ["band_idx", "band_val"],
+        "x5m2",
+        payload=("n_images", "rep_id", *[f"b{i}" for i in range(_X5M2_BANDS)]),
+        fields=lambda a, b: f"""
+            'a_images', {a}.n_images, 'b_images', {b}.n_images,
+            'a_rep', {a}.rep_id, 'b_rep', {b}.rep_id,
+            'hamming_dist', {hd(a, b)}""",
+        # filter BEFORE the dedup: a pair within the ball matches on >= 2
         # bands, but band collisions at distance 3..64 would otherwise
         # ride the dedup exchange only to be discarded — in-ball pairs
         # only keeps that shuffle minimal at scale
-        .filter(F.col("hamming_dist") <= _X5M2_MAX_DIST)
-        .distinct()
-        .select(
-            "a_hash", "b_hash", "hamming_dist",
-            "a_images", "b_images", "a_rep", "b_rep",
-        )
-        .orderBy("a_hash", "b_hash")
+        where=F.col("hamming_dist") <= _X5M2_MAX_DIST,
     )
+    return pairs.select(
+        F.col("id_a").alias("a_hash"),
+        F.col("id_b").alias("b_hash"),
+        "hamming_dist", "a_images", "b_images", "a_rep", "b_rep",
+    ).orderBy("a_hash", "b_hash")
 
 
 # X5n — gain-invariant audio fingerprint dedup --------------------------------
@@ -2246,10 +2238,10 @@ def x5q_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # near-dedup matches within Hamming distance <= d over the energy-shape
 # fingerprint. x5n fingerprints are VARIABLE length (n//80 windows ->
 # 29..39 comparison bits -> 4..5 bytes), so the multi-index bands are
-# the fingerprint's BYTES and the byte length joins as part of the band
+# the fingerprint's BYTES and the byte length is part of the band
 # key — clips with different window counts are different-duration
 # content and are never near-duplicates by construction. Pigeonhole:
-# 4 (resp. 5) byte-bands make the band join complete for distance <= 3
+# 4 (resp. 5) byte-bands make the band pairs complete for distance <= 3
 # (resp. <= 4); d = 2 sits strictly inside both.
 #
 # True positives planted at the AUDIO level: for each gain-1 group
@@ -2261,9 +2253,9 @@ def x5q_image_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 # every plant that does not collapse into its base's exact cluster.
 #
 # Scale shape: exact-duplicate collapse FIRST (the x5n hash-agg — the
-# 5 gain-variants per seed collapse before any pairing), then the band
-# join runs over distinct fingerprints only; hamming is an integer
-# fold over the zipped byte arrays (exact under any order). No
+# 5 gain-variants per seed collapse before any pairing), then
+# bucket_pairs runs over distinct fingerprints only; hamming is an
+# integer fold over the zipped byte arrays (exact under any order). No
 # all-pairs stage (plan-gated).
 
 _X5N2_OFFSET = 1_000_000_000
@@ -2423,41 +2415,27 @@ def x5n2_hamming_audio_near_dedup(
         "fp_len",
         F.posexplode("fp_bytes").alias("band_idx0", "band_val"),
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    hd = F.expr(
-        "aggregate(zip_with(a.fp_bytes, b.fp_bytes,"
-        " (x, y) -> CAST(bit_count(x ^ y) AS BIGINT)),"
-        " CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    )
-    return (
-        a.join(
-            b,
-            on=[
-                F.col("a.fp_len") == F.col("b.fp_len"),
-                F.col("a.band_idx0") == F.col("b.band_idx0"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.fingerprint") < F.col("b.fingerprint"),
-            ],
-        )
-        .select(
-            F.col("a.fingerprint").alias("a_fp"),
-            F.col("b.fingerprint").alias("b_fp"),
-            F.col("a.n_clips").alias("a_clips"),
-            F.col("b.n_clips").alias("b_clips"),
-            F.col("a.rep_id").alias("a_rep"),
-            F.col("b.rep_id").alias("b_rep"),
-            hd.alias("hamming_dist"),
-        )
-        # filter before distinct (same rationale as x5m2): the dedup
+    pairs = bucket_pairs(
+        bands,
+        "fingerprint",
+        ["fp_len", "band_idx0", "band_val"],
+        "x5n2",
+        payload=("n_clips", "rep_id", "fp_bytes"),
+        fields=lambda a, b: f"""
+            'a_clips', {a}.n_clips, 'b_clips', {b}.n_clips,
+            'a_rep', {a}.rep_id, 'b_rep', {b}.rep_id,
+            'hamming_dist', aggregate(zip_with({a}.fp_bytes, {b}.fp_bytes,
+                                (x, y) -> CAST(bit_count(x ^ y) AS BIGINT)),
+                            CAST(0 AS BIGINT), (acc, v) -> acc + v)""",
+        # filter before the dedup (same rationale as x5m2): the dedup
         # exchange carries only in-ball pairs
-        .filter(F.col("hamming_dist") <= _X5N2_MAX_DIST)
-        .distinct()
-        .select(
-            "a_fp", "b_fp", "hamming_dist",
-            "a_clips", "b_clips", "a_rep", "b_rep",
-        )
-        .orderBy("a_fp", "b_fp")
+        where=F.col("hamming_dist") <= _X5N2_MAX_DIST,
     )
+    return pairs.select(
+        F.col("id_a").alias("a_fp"),
+        F.col("id_b").alias("b_fp"),
+        "hamming_dist", "a_clips", "b_clips", "a_rep", "b_rep",
+    ).orderBy("a_fp", "b_fp")
 
 
 # X5r — video near-dedup: Hamming over per-frame dHashes -----------------------
@@ -2478,11 +2456,11 @@ def x5n2_hamming_audio_near_dedup(
 #
 # Scale shape: demux + per-frame hashing is one Arrow map pass per clip
 # (bytes never leave the kernel); exact-fingerprint collapse FIRST
-# (the x5m2 posture), then the band join runs over DISTINCT clip
+# (the x5m2 posture), then dedup.bucket_pairs runs over DISTINCT clip
 # fingerprints keyed (n_sampled, frame pos, band_idx, band_val) — by
 # pigeonhole a frame pair within d <= 3 shares a band, so ANY matching
-# position surfaces the candidate; verification re-joins the two
-# fingerprints' per-position bands and demands EVERY position within
+# position surfaces the candidate; the verify zips the two distinct
+# fingerprints' frame dhashes and demands EVERY position within
 # _X5R_MAX_DIST. No all-pairs stage exists (plan-gated).
 
 _X5R_OFFSET = _X5M2_OFFSET
@@ -2632,10 +2610,10 @@ ORDER BY agg.a_fp, agg.b_fp
 def x5r_video_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Clip-level video near-duplicate pairs: demux each (base +
     planted re-encoded) clip, dHash every 2nd frame, collapse exact
-    clip fingerprints, band-join per (n_sampled, frame pos, band) over
-    distinct fingerprints, and keep pairs where EVERY frame position is
-    within Hamming distance _X5R_MAX_DIST (= 2, the per-frame x5m2
-    displacement theorem). Restricted to genuinely multi-frame clips
+    clip fingerprints, pair them by bucket per (n_sampled, frame pos,
+    band) over distinct fingerprints, and keep pairs where EVERY frame
+    position is within Hamming distance _X5R_MAX_DIST (= 2, the
+    per-frame x5m2 displacement theorem). Restricted to genuinely multi-frame clips
     (doc_id % 4 >= 1 -> >= 3 frames -> >= 2 sampled positions): a
     single-sampled-frame "clip" degenerates to x5m2's image matching
     and its band buckets pair-explode on this formulaic fixture — and
@@ -2647,14 +2625,7 @@ def x5r_video_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .documents.filter((F.col("doc_id") % 4 >= 1) & (F.col("doc_id") < 500))
         .select("doc_id")
     )
-    # materialize the demux+hash pass ONCE (localCheckpoint is eager —
-    # the x2b2 fingerprint-table idiom): `rows` feeds both the fp
-    # groupBy and the pp rep join, and pp fans out again into bands and
-    # the pa/pb verify self-join — lazily the kernel would re-run for
-    # every consumer subtree (8 MapInPandas nodes in the executed plan)
-    rows = docs.mapInPandas(
-        _x5r_clip_frame_hash_batch, X5R_FRAME_SCHEMA
-    ).localCheckpoint()
+    rows = docs.mapInPandas(_x5r_clip_frame_hash_batch, X5R_FRAME_SCHEMA)
     fp = rows.groupBy("clip_id", "n_sampled").agg(
         F.array_join(
             F.transform(
@@ -2668,114 +2639,49 @@ def x5r_video_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_clips"),
         F.min("clip_id").alias("rep_id"),
     )
-    pp = grp.join(
-        rows.select("clip_id", "pos", "dhash"),
-        grp["rep_id"] == F.col("clip_id"),
-    ).select(
+    # a fingerprint spells out its frames' dhashes in position order, so
+    # the per-position bands come from it, and so does the verify
+    band_vals = [
+        F.conv(F.substring("dhash", 1 + 4 * i, 4), 16, 10).cast("long")
+        for i in range(_X5M2_BANDS)
+    ]
+    bands = grp.select(
         "fp",
         "n_sampled",
         "n_clips",
         "rep_id",
-        "pos",
-        *[
-            F.conv(F.substring("dhash", 1 + 4 * i, 4), 16, 10)
-            .cast("long")
-            .alias(f"b{i}")
-            for i in range(_X5M2_BANDS)
-        ],
-    ).localCheckpoint()  # consumed by bands AND both verify-join sides
-    bands = pp.select(
-        "fp",
-        "n_sampled",
-        "n_clips",
-        "rep_id",
-        "pos",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band_idx"),
-                        F.col(f"b{i}").alias("band_val"),
-                    )
-                    for i in range(_X5M2_BANDS)
-                ]
-            )
-        ).alias("band"),
+        F.posexplode(F.split("fp", "[|]")).alias("pos", "dhash"),
     ).select(
         "fp", "n_sampled", "n_clips", "rep_id", "pos",
-        F.col("band.band_idx").alias("band_idx"),
-        F.col("band.band_val").alias("band_val"),
+        F.posexplode(F.array(*band_vals)).alias("band_idx", "band_val"),
     )
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            on=[
-                F.col("a.n_sampled") == F.col("b.n_sampled"),
-                F.col("a.pos") == F.col("b.pos"),
-                F.col("a.band_idx") == F.col("b.band_idx"),
-                F.col("a.band_val") == F.col("b.band_val"),
-                F.col("a.fp") < F.col("b.fp"),
-            ],
-        )
-        .select(
-            F.col("a.fp").alias("a_fp"),
-            F.col("b.fp").alias("b_fp"),
-            F.col("a.n_sampled").alias("n_sampled"),
-            F.col("a.n_clips").alias("a_clips"),
-            F.col("b.n_clips").alias("b_clips"),
-            F.col("a.rep_id").alias("a_rep"),
-            F.col("b.rep_id").alias("b_rep"),
-        )
-        .distinct()
+
+    pairs = bucket_pairs(
+        bands,
+        "fp",
+        ["n_sampled", "pos", "band_idx", "band_val"],
+        "x5r",
+        payload=("n_sampled", "n_clips", "rep_id"),
     )
-    c, pa, pb = cand.alias("c"), pp.alias("pa"), pp.alias("pb")
-    hd = sum(
-        F.bit_count(
-            F.col(f"pa.b{i}").bitwiseXOR(F.col(f"pb.b{i}"))
-        ).cast("long")
+    frame_hd = " + ".join(
+        f"CAST(bit_count(CAST(conv(substring(x, {1 + 4 * i}, 4), 16, 10) AS BIGINT)"
+        f" ^ CAST(conv(substring(y, {1 + 4 * i}, 4), 16, 10) AS BIGINT)) AS BIGINT)"
         for i in range(_X5M2_BANDS)
     )
-    perpos = (
-        c.join(
-            pa,
-            (F.col("pa.fp") == F.col("c.a_fp"))
-            & (F.col("pa.n_sampled") == F.col("c.n_sampled")),
-        )
-        .join(
-            pb,
-            (F.col("pb.fp") == F.col("c.b_fp"))
-            & (F.col("pb.n_sampled") == F.col("c.n_sampled"))
-            & (F.col("pb.pos") == F.col("pa.pos")),
-        )
-        .select(
-            F.col("c.a_fp").alias("a_fp"),
-            F.col("c.b_fp").alias("b_fp"),
-            F.col("c.n_sampled").alias("n_sampled"),
-            F.col("c.a_clips").alias("a_clips"),
-            F.col("c.b_clips").alias("b_clips"),
-            F.col("c.a_rep").alias("a_rep"),
-            F.col("c.b_rep").alias("b_rep"),
-            hd.alias("hd"),
-        )
+    max_hd = F.expr(
+        "array_max(zip_with(split(id_a, '[|]'), split(id_b, '[|]'),"
+        f" (x, y) -> {frame_hd}))"
     )
-    agg = perpos.groupBy(
-        "a_fp", "b_fp", "n_sampled", "a_clips", "b_clips", "a_rep", "b_rep"
-    ).agg(
-        F.max("hd").alias("max_frame_hd"),
-        F.sum((F.col("hd") <= _X5R_MAX_DIST).cast("int")).alias("n_within"),
-        F.count(F.lit(1)).alias("n_pos"),
-    )
-    return (
-        agg.filter(F.col("n_within") == F.col("n_pos"))
-        .select(
-            "a_fp", "b_fp",
-            F.col("n_sampled").cast("long").alias("n_frames"),
-            F.col("max_frame_hd").cast("long").alias("max_frame_hd"),
-            "a_clips", "a_rep", "b_clips", "b_rep",
-        )
-        .orderBy("a_fp", "b_fp")
-    )
+    return pairs.select(
+        F.col("id_a").alias("a_fp"),
+        F.col("id_b").alias("b_fp"),
+        F.col("n_sampled_a").cast("long").alias("n_frames"),
+        max_hd.alias("max_frame_hd"),
+        F.col("n_clips_a").alias("a_clips"),
+        F.col("rep_id_a").alias("a_rep"),
+        F.col("n_clips_b").alias("b_clips"),
+        F.col("rep_id_b").alias("b_rep"),
+    ).filter(F.col("max_frame_hd") <= _X5R_MAX_DIST).orderBy("a_fp", "b_fp")
 
 
 # X5s — keyframe selection over the x5k scene-change profile -------------------

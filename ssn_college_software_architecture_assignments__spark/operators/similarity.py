@@ -1416,6 +1416,50 @@ FROM (
 """
 
 
+def _pq_ingest_fold(vec: str) -> Column:
+    """x3m's fused ingest over the broadcast codebook ``cents``: one
+    struct with the coarse cell (``cell``) and the four PQ codes
+    (``a0``..``a3``) of the array column ``vec``, each a (bid, bd)
+    struct like :func:`_pq_argmin_sql`'s."""
+    # One fold computes cell AND codes: the transform materializes each
+    # codebook entry's 4 block distances ONCE, and the fold's five
+    # argmins read those fields — five separate argmin expressions would
+    # each re-evaluate the 16x4 block folds (Catalyst cannot CSE across
+    # lambda scopes), doubling the distance math in the ingest hot path.
+    # That is also why the cell pick here is not a nearest_cells call.
+    # The cell distance is d0+d1+d2+d3, the same block grouping as
+    # _pq_full_sqdist / the oracle, and the same (d, cent_id) tie law.
+    dists = ", ".join(
+        f"'d{b}', {_pq_block_sqdist_sql(vec, 'c.cemb', b)}"
+        for b in range(_PQ_BLOCKS)
+    )
+    full = " + ".join(f"s.d{b}" for b in range(_PQ_BLOCKS))
+    init = ", ".join(
+        f"'{k}', named_struct('bid', CAST(-1 AS BIGINT), "
+        f"'bd', CAST('Infinity' AS DOUBLE))"
+        for k in ["cell"] + [f"a{b}" for b in range(_PQ_BLOCKS)]
+    )
+
+    def pick(key: str, d: str) -> str:
+        return (
+            f"'{key}', IF({d} < acc.{key}.bd OR ({d} = acc.{key}.bd "
+            f"AND s.cid < acc.{key}.bid), "
+            f"named_struct('bid', s.cid, 'bd', {d}), acc.{key})"
+        )
+
+    steps = ", ".join(
+        [pick("cell", full)] + [pick(f"a{b}", f"s.d{b}") for b in range(_PQ_BLOCKS)]
+    )
+    return F.expr(
+        f"""
+        aggregate(
+          transform(cents, c -> named_struct('cid', c.cent_id, {dists})),
+          named_struct({init}),
+          (acc, s) -> named_struct({steps}))
+        """
+    )
+
+
 @register("x3m_pq_ivf_search", oracle=_X3M_ORACLE, tags=("X3",))
 def x3m_pq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ: each query ADC-scores only the PQ codes inside its
@@ -1437,47 +1481,10 @@ def x3m_pq_ivf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = emb.select("vec_id", _dvec("embedding").alias("emb"))
     cent_arr = _pq_codebook(vecs)
 
-    # One fold computes cell AND codes: the transform materializes each
-    # codebook entry's 4 block distances ONCE, and the fold's five
-    # argmins read those fields — five separate argmin expressions would
-    # each re-evaluate the 16x4 block folds (Catalyst cannot CSE across
-    # lambda scopes), doubling the distance math in the ingest hot path.
-    # That is also why the cell pick here is not a nearest_cells call.
-    # The cell distance is d0+d1+d2+d3, the same block grouping as
-    # _pq_full_sqdist / the oracle, and the same (d, cent_id) tie law.
-    dists = ", ".join(
-        f"'d{b}', {_pq_block_sqdist_sql('emb', 'c.cemb', b)}"
-        for b in range(_PQ_BLOCKS)
-    )
-    full = " + ".join(f"s.d{b}" for b in range(_PQ_BLOCKS))
-    init = ", ".join(
-        f"'{k}', named_struct('bid', CAST(-1 AS BIGINT), "
-        f"'bd', CAST('Infinity' AS DOUBLE))"
-        for k in ["cell"] + [f"a{b}" for b in range(_PQ_BLOCKS)]
-    )
-
-    def pick(key: str, d: str) -> str:
-        return (
-            f"'{key}', IF({d} < acc.{key}.bd OR ({d} = acc.{key}.bd "
-            f"AND s.cid < acc.{key}.bid), "
-            f"named_struct('bid', s.cid, 'bd', {d}), acc.{key})"
-        )
-
-    steps = ", ".join(
-        [pick("cell", full)] + [pick(f"a{b}", f"s.d{b}") for b in range(_PQ_BLOCKS)]
-    )
-    ingest_expr = F.expr(
-        f"""
-        aggregate(
-          transform(cents, c -> named_struct('cid', c.cent_id, {dists})),
-          named_struct({init}),
-          (acc, s) -> named_struct({steps}))
-        """
-    )
     assigned = (
         ensure_min_partitions(vecs)
         .crossJoin(F.broadcast(cent_arr))
-        .select("vec_id", ingest_expr.alias("_r"))
+        .select("vec_id", _pq_ingest_fold("emb").alias("_r"))
         .select(
             "vec_id",
             F.col("_r.cell.bid").alias("cell"),

@@ -75,6 +75,23 @@ _loaded = False
 # test_check_priority_is_complete_and_duplicate_free pins it as a
 # permutation of the registry.
 _CHECK_PRIORITY = (
+    "x2w2_prefix_filter_full_corpus",
+    "x2i_lsh_exact_rescore",
+    "x2_minhash_near_dedup",
+    "x2b2_simhash_pairs",
+    "x2c_ngram_jaccard",
+    "x2e_dedup_clusters",
+    "x2f_embedding_neardup_lsh",
+    "x2g_minhash_full_oracle",
+    "x2m_threshold_sweep",
+    "x2n_incremental_near_dedup",
+    "x2p_paragraph_near_dedup",
+    "x2z_lsh_quality_audit",
+    "x5m2_hamming_near_dedup",
+    "x5n2_hamming_audio_near_dedup",
+    "x5r_video_near_dedup",
+    "x2v_containment_rescore",
+    "x2w_prefix_filter_join",
     "x3x6_maintenance_plan",
     "x3z6_post_merge_ivf_topk",
     "x3z7_post_merge_recall",
@@ -120,7 +137,6 @@ _CHECK_PRIORITY = (
     "u4_union_schema_drift",
     "w7_funnel_detect",
     "x2b3_simhash_full_oracle",
-    "x2w2_prefix_filter_full_corpus",
     "x2y_lsh_parameter_planner",
     "x3b2_similarity_lsh_oracle",
     "x3c_vector_features",
@@ -151,7 +167,6 @@ _CHECK_PRIORITY = (
     "x1c_dedup_rate_by_source",
     "x1d_url_dedup_report",
     "x1e_bloom_prescreen",
-    "x2i_lsh_exact_rescore",
     "x2k_quality_dedup_manifest",
     "x3f_embedding_quantize",
     "x3g_similarity_quantized",
@@ -199,18 +214,9 @@ _CHECK_PRIORITY = (
     "w4b_quartile_cutpoints",
     "w9_rolling_zscore_anomaly",
     "x1b_incremental_dedup",
-    "x2_minhash_near_dedup",
-    "x2b2_simhash_pairs",
     "x2b_simhash",
-    "x2c_ngram_jaccard",
     "x2d_embedding_neardup",
-    "x2e_dedup_clusters",
-    "x2f_embedding_neardup_lsh",
-    "x2g_minhash_full_oracle",
     "x2h_short_docs",
-    "x2m_threshold_sweep",
-    "x2n_incremental_near_dedup",
-    "x2p_paragraph_near_dedup",
     "x3b_similarity_lsh",
     "x4e2_lang_confusion",
     "x4u_bm25_retrieval",
@@ -227,7 +233,6 @@ _CHECK_PRIORITY = (
     "x2e2_global_dedup_clusters",
     "x2q_duplicated_gram_mass",
     "x2r_cross_source_gram_flow",
-    "x2z_lsh_quality_audit",
     "x3y_mips_matmul_topk",
     "x4a2_bpe_token_count",
     "x4a_token_count",
@@ -248,11 +253,8 @@ _CHECK_PRIORITY = (
     "x5g_ppm_resize",
     "x5h_ppm_frame_sample",
     "x5l_audio_silence_trim",
-    "x5m2_hamming_near_dedup",
     "x5m_image_phash_dedup",
-    "x5n2_hamming_audio_near_dedup",
     "x5n_audio_fingerprint_dedup",
-    "x5r_video_near_dedup",
     "x5s_keyframe_select",
     "x5t_audio_gain_normalize",
     "x6b_sequence_packing",
@@ -304,7 +306,6 @@ _CHECK_PRIORITY = (
     "x2e3_incremental_closure",
     "x2s2_span_dedup_by_source",
     "x2s_substring_span_dedup",
-    "x2v_containment_rescore",
     "x3q_mrl_refine_topk",
     "x4z2_chunk_mmr_rerank",
     "x4z_mmr_diversified_retrieval",
@@ -389,7 +390,6 @@ _CHECK_PRIORITY = (
     "w6_sessionize",
     "x1_exact_dedup",
     "x2s3_span_dedup_mapcombine",
-    "x2w_prefix_filter_join",
     "x3_similarity_bruteforce",
     "x3s_radius_search",
     "x3t_filtered_search",

@@ -1429,11 +1429,24 @@ ORDER BY o_orderkey
 """
 
 
+def read_generations(spark: SparkSession, lake_dir: str) -> DataFrame:
+    """Every generation directory (base, delta_1, ...) of a local
+    base+deltas lake, read by name. A ``{lake_dir}/*`` glob would read
+    the same files, but Spark's streaming-sink metadata probe takes the
+    glob as a literal directory and logs a FileNotFoundException stack
+    trace on every read."""
+    gens = sorted(
+        e.path for e in os.scandir(lake_dir)
+        if e.is_dir() and not e.name.startswith((".", "_"))
+    )
+    return spark.read.parquet(*gens)
+
+
 def merge_on_read_view(spark: SparkSession, lake_dir: str, key_cols: list[str],
                        version_col: str) -> DataFrame:
     """Resolve a base+deltas lake directory to latest-per-key rows at
     read time (no base rewrite), by :func:`latest_per_key`."""
-    all_rows = spark.read.parquet(f"{lake_dir}/*")
+    all_rows = read_generations(spark, lake_dir)
     return latest_per_key(all_rows, key_cols, [F.col(version_col).desc()])
 
 
@@ -2157,7 +2170,7 @@ def s26_time_travel_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_dir = scratch_dir(prefix="ssn_tt_")
     lake = f"{base_dir}/orders_mor"
     s21_land_generations(orders, lake)
-    rows = spark.read.parquet(f"{lake}/*").select(
+    rows = read_generations(spark, lake).select(
         F.col("o_orderkey").alias("k"),
         F.round(F.col("totalprice") * 100, 0).cast("long").alias("cents"),
         F.col("version").alias("v"),

@@ -2716,7 +2716,7 @@ def test_x3x6_plan_verdicts_agree_with_both_executors(spark):
         assert not (r["over_split_trigger"] and r["under_merge_floor"])
 
 
-def _x2e2_hot_gram(spark, dmod):
+def _x2e2_hot_gram(spark, dmod, lake):
     # five docs sharing every 3-shingle: each gram's postings hold 5 docs,
     # and every doc pair shares all three shingles (>= MIN_SHARED 3)
     docs = spark.createDataFrame(
@@ -2727,7 +2727,7 @@ def _x2e2_hot_gram(spark, dmod):
     )
 
 
-def _x2_mega_bucket(spark, dmod):
+def _x2_mega_bucket(spark, dmod, lake):
     # five verbatim copies: identical signatures fill one bucket per band
     docs = spark.createDataFrame(
         [(i, "w x y z q") for i in range(5)], "doc_id long, text string"
@@ -2738,7 +2738,7 @@ def _x2_mega_bucket(spark, dmod):
     )
 
 
-def _x2j_single_cell(spark, dmod):
+def _x2j_single_cell(spark, dmod, lake):
     # one centroid: every (non-zero) vector lands in the same cell
     emb = spark.createDataFrame(
         [(i, [1.0, float(i)]) for i in range(5)], "vec_id long, emb array<double>"
@@ -2749,28 +2749,56 @@ def _x2j_single_cell(spark, dmod):
     )
 
 
+def _verbatim_lake(spark, lake):
+    # five verbatim same-lang copies as a one-table lake, so the planted
+    # group reaches a registered query through its own Catalog read
+    spark.createDataFrame(
+        [(i, "en", "w x y z q") for i in range(5)],
+        "doc_id long, lang string, text string",
+    ).write.mode("overwrite").parquet(str(lake / "documents.parquet"))
+    return str(lake)
+
+
+def _x2b2_one_bucket(spark, dmod, lake):
+    # verbatim copies share one simhash, so every band holds all five
+    return dmod.x2b2_simhash_pairs(spark, _verbatim_lake(spark, lake)).select(
+        F.col("id_a").alias("a"), F.col("id_b").alias("b")
+    )
+
+
+def _x2c_verbatim(spark, dmod, lake):
+    # every (token, lang) posting list holds all five docs
+    return dmod.x2c_ngram_jaccard(spark, _verbatim_lake(spark, lake)).select(
+        F.col("id_a").alias("a"), F.col("id_b").alias("b")
+    )
+
+
 @pytest.mark.parametrize(
     "planted",
-    [_x2e2_hot_gram, _x2_mega_bucket, _x2j_single_cell],
-    ids=["x2e2", "x2", "x2j"],
+    [_x2e2_hot_gram, _x2_mega_bucket, _x2j_single_cell, _x2b2_one_bucket,
+     _x2c_verbatim],
+    ids=["x2e2", "x2", "x2j", "x2b2", "x2c"],
 )
-def test_pair_group_bound_refuses_oversized_group(spark, monkeypatch, planted):
+def test_pair_group_bound_refuses_oversized_group(
+    spark, monkeypatch, planted, tmp_path
+):
     """Every in-row pair expansion carries the declared pair-group
     bound: a planted group (x2e2 hot gram, x2 LSH mega-bucket, x2j
-    single cell) over the bound must raise loudly BEFORE the quadratic
-    in-row pair buffer is built, naming the size and the remedy; a
-    group exactly AT the bound passes through untouched. The bound is
-    lowered by monkeypatch; each planted group holds five members."""
+    single cell, x2b2 simhash bucket, x2c token postings) over the
+    bound must raise loudly BEFORE the quadratic in-row pair buffer is
+    built, naming the size and the remedy; a group exactly AT the bound
+    passes through untouched. The bound is lowered by monkeypatch; each
+    planted group holds five members."""
     import ssn_college_software_architecture_assignments__spark.operators.dedup as dmod
 
     monkeypatch.setattr(dmod, "_MAX_PAIR_GROUP", 4)
     with pytest.raises(Exception) as ei:
-        planted(spark, dmod).collect()
+        planted(spark, dmod, tmp_path).collect()
     assert "pair-expansion bound" in str(ei.value)
     assert "5 members" in str(ei.value)
 
     # boundary: a group == bound is conforming and emits all C(5,2) pairs
     monkeypatch.setattr(dmod, "_MAX_PAIR_GROUP", 5)
-    rows = planted(spark, dmod).collect()
+    rows = planted(spark, dmod, tmp_path).collect()
     assert len(rows) == 10
     assert all(r["a"] < r["b"] for r in rows)

@@ -8,6 +8,7 @@ dedup/similarity family, and filter pushdown reaching the parquet scan.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from ssn_college_software_architecture_assignments__spark.plans.pipeline import (
@@ -78,6 +79,28 @@ def test_minhash_pair_expansion_scans_documents_once(spark):
     # details; the "(N) Scan parquet" detail header counts distinct nodes
     scans = re.findall(r"\(\d+\) Scan parquet", plan)
     assert len(scans) == 1, scans
+
+
+@pytest.mark.parametrize(
+    "name, node, count",
+    [
+        ("x2g_minhash_full_oracle", "Scan parquet", 1),
+        ("x2c_ngram_jaccard", "Scan parquet", 1),
+        ("x2f_embedding_neardup_lsh", "Scan parquet", 1),
+        ("x5m2_hamming_near_dedup", "MapInPandas", 3),
+        ("x5n2_hamming_audio_near_dedup", "MapInPandas", 3),
+    ],
+)
+def test_bucket_pair_stage_plans_its_input_once(spark, name, node, count):
+    """dedup.bucket_pairs groups the tagged rows instead of self-joining
+    them, so the subtree upstream of the pair stage is planned once:
+    one documents/embeddings scan for the text and vector generators,
+    and each Python kernel (decode, variant, hash) once for the image
+    and audio ones — a band self-join plans them once per join side."""
+    import re
+
+    nodes = re.findall(rf"\(\d+\) {node}\b", _plan(spark, name))
+    assert len(nodes) == count, nodes
 
 
 def test_bruteforce_ann_broadcasts_queries_not_corpus(spark):

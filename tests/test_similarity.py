@@ -1072,3 +1072,80 @@ def test_nearest_cells_tie_order_and_zero_norm_law(spark):
 
     cells = {r["vec_id"]: r["cell"] for r in assign_cells(vecs, cents).collect()}
     assert cells == {0: 1, 2: 5}
+
+
+def test_pq_argmin_folds_follow_nearest_cells_tie_law(spark):
+    """x3j's per-block encoder (_pq_argmin_sql) and x3m's fused ingest
+    fold (_pq_ingest_fold) keep their own SQL argmins for speed; on
+    handmade 64-D exact ties they pick the same code and cell as
+    nearest_cells under its (key, cent_id) law: the smallest tied
+    cent_id, whatever the codebook array's order. Centroids 9 (e0),
+    2 (-e0), 5 (3 e0) and 4 (e16); vector 0 ties cell 2/4/9, vector 1
+    ties cell 5/9, and every all-zero block ties all four codes."""
+    from pyspark.sql import functions as F
+
+    from ssn_college_software_architecture_assignments__spark.operators.similarity import (
+        _PQ_BLOCK_DIM,
+        _PQ_BLOCKS,
+        _centroid_array,
+        _pq_argmin_sql,
+        _pq_block_sqdist_sql,
+        _pq_full_sqdist,
+        _pq_ingest_fold,
+        nearest_cells,
+        sqdist,
+    )
+
+    def vec(**dims):
+        v = [0.0] * (_PQ_BLOCKS * _PQ_BLOCK_DIM)
+        for d, x in dims.items():
+            v[int(d[1:])] = x
+        return v
+
+    cents = spark.createDataFrame(
+        [(9, vec(d0=1.0)), (2, vec(d0=-1.0)), (5, vec(d0=3.0)), (4, vec(d16=1.0))],
+        "cent_id long, cemb array<double>",
+    )
+    vecs = spark.createDataFrame(
+        [(0, vec()), (1, vec(d0=2.0)), (2, vec(d16=1.0))],
+        "vec_id long, emb array<double>",
+    )
+    want_cell = {0: 2, 1: 5, 2: 4}
+    want_codes = {0: [4, 2, 2, 2], 1: [5, 2, 2, 2], 2: [4, 4, 2, 2]}
+
+    def block_l2(b):
+        lo = b * _PQ_BLOCK_DIM + 1
+        return lambda v, c: sqdist(
+            F.slice(v, lo, _PQ_BLOCK_DIM), F.slice(c, lo, _PQ_BLOCK_DIM)
+        )
+
+    arr = _centroid_array(cents)
+    for cents_col in (F.col("cents"), F.reverse("cents")):
+        frame = vecs.crossJoin(arr.select(cents_col.alias("cents")))
+        rows = frame.select(
+            "vec_id",
+            nearest_cells(F.col("emb"), F.col("cents"), _pq_full_sqdist)["cid"]
+            .alias("kernel_cell"),
+            _pq_ingest_fold("emb").alias("fused"),
+            *[
+                F.expr(
+                    _pq_argmin_sql(_pq_block_sqdist_sql("emb", "c.cemb", b))
+                )["bid"].alias(f"x3j_{b}")
+                for b in range(_PQ_BLOCKS)
+            ],
+            *[
+                nearest_cells(F.col("emb"), F.col("cents"), block_l2(b))["cid"]
+                .alias(f"kernel_{b}")
+                for b in range(_PQ_BLOCKS)
+            ],
+        ).collect()
+        for r in rows:
+            i = r["vec_id"]
+            assert r["kernel_cell"] == r["fused"]["cell"]["bid"] == want_cell[i]
+            for b in range(_PQ_BLOCKS):
+                assert (
+                    r[f"kernel_{b}"]
+                    == r[f"x3j_{b}"]
+                    == r["fused"][f"a{b}"]["bid"]
+                    == want_codes[i][b]
+                ), (i, b)
