@@ -21,9 +21,11 @@ from ..catalog import Catalog, ensure_min_partitions
 from ..registry import register
 from ..scratch import persist_scoped
 from .similarity import (
+    _IVF_K,
     _X3R2_STEPS,
     _centroid_array,
     _dvec,
+    _ivf_centroids,
     _x3r2_ctes,
     _x3r2_train,
     assign_cells,
@@ -2067,11 +2069,8 @@ def x2j_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB, K grows to ~sqrt(n) so cells stay bounded, and oversized
     cells split recursively — the dataflow is unchanged."""
     emb = Catalog(spark, sf_dir).embeddings
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
-    )
     vecs = emb.select("vec_id", _dvec("embedding").alias("emb"))
-    return semantic_dup_candidates(vecs, centroids)
+    return semantic_dup_candidates(vecs, _ivf_centroids(emb))
 
 
 # X2j2 — SemDeDup cluster-then-prune over TRAINED centroids --------------------
@@ -3534,7 +3533,13 @@ def _prefix_filter_pairs(sh: DataFrame, t: float) -> DataFrame:
     Jaccard >= ``t``, never all-pairs. The candidates carry no payload:
     a doc's full set riding each of its ~|s|/2 prefix postings would
     grow the pair stage's shuffle with the square of the document
-    length, so the verify joins the sets for the candidates instead."""
+    length, so the verify joins the sets for the candidates instead.
+
+    ``sh`` feeds four branches (the document-frequency count, the join
+    back onto it, both verify sides), so it is persisted here, lazily:
+    its producer (shingling, and x2w's absorbed-docs join) runs once,
+    in the query's first job, with no Spark job at build time."""
+    sh = persist_scoped(sh)
     occ = sh.select("doc_id", F.explode("s").alias("gh"))
     df_counts = occ.groupBy("gh").agg(F.count(F.lit(1)).alias("n_docs"))
     # per-doc shingles in canonical (doc-frequency asc, gh asc) order;
@@ -3607,11 +3612,9 @@ def x2w_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 # inverted index, checked cross-engine on the FULL corpus (500 docs at
 # sf0.01, 5000 at sf0.1; 25/256 qualifying pairs).
 #
-# Scale shape: identical to x2w (that is the point), plus the
-# fingerprint table is localCheckpoint-materialized ONCE — it feeds
-# the ranking pass AND both verify sides, and Catalyst would otherwise
-# re-run the shingle HOF three times (the x2 minhash lesson: persist
-# the signature table, measured not assumed).
+# Scale shape: identical to x2w (that is the point) — the shared
+# _prefix_filter_pairs persists the fingerprint table once for its
+# four consumers.
 
 _X2W2_ORACLE = f"""
 WITH sh AS (
@@ -3647,8 +3650,7 @@ def x2w2_prefix_filter_full_corpus(spark: SparkSession, sf_dir: str) -> DataFram
     cross-engine equality proves prefix-filter completeness at corpus
     scale, where the naive all-pairs oracle stopped being affordable."""
     docs = ensure_min_partitions(Catalog(spark, sf_dir).documents)
-    # materialize the fingerprint table once — three consumers
-    sh = _hashed_shingle_sets(docs.select("doc_id", "text")).localCheckpoint()
+    sh = _hashed_shingle_sets(docs.select("doc_id", "text"))
     return _prefix_filter_pairs(sh, _X2W_T)
 
 
@@ -3881,16 +3883,16 @@ def x2y_lsh_parameter_planner(spark: SparkSession, sf_dir: str) -> DataFrame:
 # cross-cell true neighbors are missed, which is why production runs
 # multi-probe; the dataflow is identical.
 #
-# r19 shape: an i<j cell-keyed SELF-JOIN scored by the codegen'd
-# dot fold, both edge directions exploded from the one
-# score, then a per-vector top-k window. The r12-r18 form did the
-# pairwise work inside the cell aggregation row (collect_list + HOF
-# expansion); that evaluated n*(n-1) interpreted multiply-add folds
-# per cell AND buffered a whole cell plus its pair expansion in ONE
-# row's memory (the §5 hazard). The pair join halves the dots via
-# i<j symmetry (each a[k]*b[k] term is an IEEE product — bitwise
-# commutative — so one cos serves both directions), compiles the
-# scorer into whole-stage codegen, and the window partitions on
+# Shape: an i<j cell-keyed SELF-JOIN scored by the codegen'd dot
+# fold, both edge directions exploded from the one score, then a
+# per-vector top-k window. Doing the pairwise work inside the cell
+# aggregation row (collect_list + HOF expansion) would evaluate
+# n*(n-1) interpreted multiply-add folds per cell AND buffer a whole
+# cell plus its pair expansion in ONE row's memory (the §5 hazard).
+# The pair join halves the dots via i<j symmetry (each a[k]*b[k]
+# term is an IEEE product — bitwise commutative — so one cos serves
+# both directions), compiles the scorer into whole-stage codegen, and
+# the window partitions on
 # vec_id, whose partitions are bounded by cell size and spill
 # gracefully. The join carries a merge hint so the planner can never
 # BROADCAST a corpus-sized side; the only rows crossing the window
@@ -3930,10 +3932,10 @@ def knn_graph_from_cells(cells: DataFrame) -> DataFrame:
     ``assign_cells`` frame — THE x3u law site, shared with its
     property test and x3w's home-graph leg (one scoring site).
 
-    r19 (guide §4.1/§2.3): i<j cell self-join + one dot per pair +
-    per-vector top-k window, replacing the collect_list + HOF in-row
-    expansion. Half the dots (one IEEE-commutative score serves both
-    edge directions bit-identically), and only the narrow
+    An i<j cell self-join + one dot per pair + per-vector top-k
+    window, not a collect_list + HOF in-row expansion. Half the dots
+    (one IEEE-commutative score serves both edge directions
+    bit-identically), and only the narrow
     (cell, vid, nid, cos) proxy crosses the window exchange. The
     merge hint keeps the statistics-blind planner from broadcasting
     a corpus-sized join side; per-key SMJ groups spill gracefully
@@ -4003,11 +4005,8 @@ def x3u_ivf_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     narrow edge proxy — the kNN-graph primitive without an all-pairs
     stage."""
     emb = Catalog(spark, sf_dir).embeddings
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
-    )
     vecs = emb.select("vec_id", _dvec("embedding").alias("emb"))
-    cells = assign_cells(vecs, centroids)
+    cells = assign_cells(vecs, _ivf_centroids(emb))
     return knn_graph_from_cells(cells).orderBy("vec_id", "rank")
 
 
@@ -4142,13 +4141,9 @@ def x3v_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     audited against the exact brute-force neighbors for a 32-vector
     probe subset — the measured answer to x3u's cross-cell recall
     trade."""
-    from .similarity import _dvec as dvec
-
     emb = Catalog(spark, sf_dir).embeddings
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cent_id"), dvec("embedding").alias("cemb")
-    )
-    vecs = emb.select("vec_id", dvec("embedding").alias("emb"))
+    centroids = _ivf_centroids(emb)
+    vecs = emb.select("vec_id", _dvec("embedding").alias("emb"))
     # four consumers (probe emb lookup, member join, both truth sides):
     # persist, not eager checkpoint — lazy and the scan stays in the plan
     cells = persist_scoped(assign_cells(vecs, centroids))
@@ -4253,16 +4248,17 @@ def x3v_knn_graph_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # asserts exactly that law on random corpora (plus equality with a
 # naive Python recomputation).
 #
-# Scale shape (r19): the only corpus-sized operations are the
+# Scale shape: the only corpus-sized operations are the
 # assign_cells argmax (map-side), a cell-keyed merge join (probe side
 # exactly 2x corpus rows; merge-hinted so no corpus side is ever
 # broadcast), the per-candidate dot projected map-side after
 # the join, and one window exchange that carries only the narrow
 # (q_id, nid, cos) proxy — never embeddings. Window partitions are
 # per-vector (bounded by its probed cells' occupancy) and spill
-# gracefully; no single row ever buffers a cell (the pre-r19 HOF
-# expansion held a whole cell + its pair expansion in one aggregation
-# row, and the planner broadcast a collect_list side). Plan-gated.
+# gracefully; no single row ever buffers a cell (an in-row HOF
+# expansion would hold a whole cell + its pair expansion in one
+# aggregation row, and the planner would broadcast a collect_list
+# side). Plan-gated.
 
 _X3W_NPROBE = 2
 _X3W_PROBES = _X3V_PROBES  # the x3v truth convention
@@ -4404,18 +4400,14 @@ def x3w_knn_graph_multiprobe_repair(spark: SparkSession, sf_dir: str) -> DataFra
     changed (new vs the home-cell graph), and recall home vs repaired
     under x3v's 32-probe brute-force truth — the measured close of
     x3u's cross-cell recall trade."""
-    from .similarity import _dvec as dvec
-
     emb = Catalog(spark, sf_dir).embeddings
-    centroids = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cent_id"), dvec("embedding").alias("cemb")
-    )
-    vecs = emb.select("vec_id", dvec("embedding").alias("emb"))
+    centroids = _ivf_centroids(emb)
+    vecs = emb.select("vec_id", _dvec("embedding").alias("emb"))
     # consumers: queriers, members, home graph, truth leg -> persist
     cells = persist_scoped(assign_cells(vecs, centroids))
 
-    # single consumer since the r19 report collapse below — the
-    # multiprobe subtree executes exactly once, no persist needed
+    # single consumer (the one-pass report below) — the multiprobe
+    # subtree executes exactly once, no persist needed
     repaired = multiprobe_knn_graph(cells, centroids).select(
         "q_id", "neighbor_id"
     )
@@ -4430,15 +4422,15 @@ def x3w_knn_graph_multiprobe_repair(spark: SparkSession, sf_dir: str) -> DataFra
     # brute leg runs twice
     truth = persist_scoped(brute_truth_edges(cells, _X3W_PROBES, _X3U_K))
 
-    # r19 report collapse (guide §1.2 — one pass where one pass
-    # suffices): the six independent count legs (each its own scheduled
-    # aggregation + 1-row broadcast) become three single-pass
-    # aggregates. Edge sets are unique on (q_id, neighbor_id) — top-k
-    # graphs emit each edge once, truth is a top-k graph too — so the
-    # left joins flag membership without multiplying rows, and every
-    # count below equals its old dedicated-leg twin by definition:
-    # n_edges_new = rows with no home match (the old left_anti count),
-    # n_hits_* = rows with a truth match (the old inner-join counts).
+    # one pass where one pass suffices: the report's six counts come
+    # from three single-pass aggregates, not six independent count legs
+    # (each its own scheduled aggregation + 1-row broadcast). Edge sets
+    # are unique on (q_id, neighbor_id) — top-k graphs emit each edge
+    # once, truth is a top-k graph too — so the left joins flag
+    # membership without multiplying rows, and every count below equals
+    # its dedicated-leg twin by definition:
+    # n_edges_new = rows with no home match (a left_anti count),
+    # n_hits_* = rows with a truth match (inner-join counts).
     base = cells.agg(
         F.count(F.lit(1)).cast("long").alias("n_vectors"),
         F.count(F.when(F.col("vec_id") < _X3W_PROBES, F.lit(1)))
@@ -4734,9 +4726,78 @@ def x1e_bloom_prescreen(spark: SparkSession, sf_dir: str) -> DataFrame:
 # arithmetic with a 1-row broadcast total. No Window, no pairwise
 # stage, no retraining I/O.
 
-_X3X_K = 16            # the x3d index's centroid count (vec_id < K)
+_X3X_K = _IVF_K        # the standing index's centroid count (vec_id < K)
 _X3X_BATCH_MOD = 5     # arrivals: vec_id % 5 == 0 (~20% of the corpus)
-_X3X_SCALE = 1_000_000 # drift cosine floored to 1e-6 units
+_X3X_SCALE = 1_000_000 # drift cosine and exported centroids in 1e-6 units
+
+
+# The maintenance loop's shared laws -------------------------------------------
+#
+# The loop reads measure (x3x) -> plan (x3x6) -> execute (x3x2 split /
+# x3x4 merge) -> re-serve (x3z2 / x3z6) -> audit (x3z3 / x3z7). Every
+# law in it has one Spark site, and the split and merge tails differ
+# only in their trigger and their reassignment policy:
+#
+#   - standing_ivf_index: the codebook, the core-spread corpus vectors
+#     and their assign_cells cells — the index every query measures;
+#   - cell_occupancy + load_vs_average: one K-row occupancy-and-total
+#     aggregate and one integer load trigger, DEN * n * K <op> NUM *
+#     total (load <op> NUM/DEN x the average, no float anywhere). x3x
+#     reads it at 2/1, x3x2 and x3x6 at the split ratio, x3x4 and x3x6
+#     at the merge ratio;
+#   - flagged_slice + maintenance_frames: the flagged cells' members,
+#     reached by an equi-join against the <= K-row broadcast flagged
+#     set, handed to a policy (Gonzalez split or nearest survivor);
+#     every other cell passes through with cell_after = cell_before;
+#   - post_maintenance_table: the one post-maintenance centroid table
+#     x3x3/x3x5 export and x3z2/x3z6 serve from.
+
+
+def standing_ivf_index(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(cent, vecs, assigned): the standing IVF index the maintenance
+    loop measures and maintains — the fixed codebook
+    (:func:`_ivf_centroids`), the corpus vectors spread over the
+    cores, and their cosine-nearest cell (:func:`assign_cells`: cell,
+    vec_id, emb, nrm; zero-norm vectors have no cell)."""
+    emb = Catalog(spark, sf_dir).embeddings
+    cent = _ivf_centroids(emb)
+    vecs = ensure_min_partitions(emb).select(
+        "vec_id", _dvec("embedding").alias("emb")
+    )
+    return cent, vecs, assign_cells(vecs, cent)
+
+
+def cell_occupancy(assigned: DataFrame) -> DataFrame:
+    """(cell, n, total): each cell's member count with the corpus total
+    alongside — a K-row aggregate and a 1-row broadcast, the input of
+    every load verdict."""
+    occ = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
+    return occ.crossJoin(F.broadcast(occ.agg(F.sum("n").alias("total"))))
+
+
+def load_vs_average(
+    op: str, num: int, den: int, n: Column | None = None, total: Column | None = None
+) -> Column:
+    """THE integer load law: ``den * n * K <op> num * total``, i.e. the
+    cell's load ``>`` or ``<`` num/den x the average load. Integer
+    cross-multiplication, so the verdict is exact in both engines."""
+    n = F.col("n") if n is None else n
+    total = F.col("total") if total is None else total
+    lhs, rhs = F.lit(den) * n * _X3X_K, num * total
+    return lhs > rhs if op == ">" else lhs < rhs
+
+
+def _split_trigger() -> Column:
+    # x3x2 splits cells over the declared ratio that can split (n >= 2)
+    return load_vs_average(">", _X3X2_NUM, _X3X2_DEN) & (F.col("n") >= 2)
+
+
+def _merge_trigger() -> Column:
+    # x3x4 dissolves cells under the declared floor
+    return load_vs_average("<", _X3X4_NUM, _X3X4_DEN)
+
 
 _X3X_ORACLE = f"""{_IVF_CELLS_SQL},
 flagged AS (
@@ -4801,14 +4862,8 @@ def x3x_incremental_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     before/added/after, the cosine drift of the member mean (floored
     1e-6; exactly 1e6 when nothing was admitted), and the integer
     needs_split trigger at 2x the average load."""
-    emb = Catalog(spark, sf_dir).embeddings
-    cent = emb.filter(F.col("vec_id") < _X3X_K).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
-    )
-    vecs = ensure_min_partitions(emb).select(
-        "vec_id", _dvec("embedding").alias("emb")
-    )
-    assigned = assign_cells(vecs, cent).withColumn(
+    _cent, vecs, assigned = standing_ivf_index(spark, sf_dir)
+    assigned = assigned.withColumn(
         "is_batch", F.col("vec_id") % _X3X_BATCH_MOD == 0
     )
     d = (
@@ -4857,9 +4912,8 @@ def x3x_incremental_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("n1").cast("long").alias("n_added"),
             (F.col("n0") + F.col("n1")).cast("long").alias("n_after"),
             drift.alias("drift_cos_1e6"),
-            (
-                (F.col("n0") + F.col("n1")) * _X3X_K
-                > 2 * F.col("total_after")
+            load_vs_average(
+                ">", 2, 1, F.col("n0") + F.col("n1"), F.col("total_after")
             ).alias("needs_split"),
         )
         .orderBy("cell")
@@ -4891,23 +4945,24 @@ def x3x_incremental_ivf_admission(spark: SparkSession, sf_dir: str) -> DataFrame
 # cell_after = cell_before, bit-identical — the s20 untouched-
 # partitions idiom, provable because the oracle hash covers every row.
 #
-# The overload trigger is x3x's integer load law with the multiplier a
-# DECLARED ratio: a cell splits when DEN * n * K > NUM * total, i.e.
-# load > NUM/DEN x the average. x3x's production default is 2x — but
+# The overload trigger is the shared load_vs_average law with the
+# multiplier a DECLARED ratio: a cell splits when DEN * n * K > NUM *
+# total, i.e. load > NUM/DEN x the average. x3x reads it at 2/1 — but
 # the fixture cells are near-uniform (max load 1.34x average at sf0.01,
 # 1.18x at sf0.1), so a registered 2x trigger would be a dead branch at
 # every test scale. The registered query therefore declares 9/8
 # (1.125x), which fires on 4 cells at sf0.01 and 2 at sf0.1 — the
 # doc_id < 200 oracle-cap precedent: pick the fixture-visible parameter
 # so the interesting branch is actually proven; production swaps the
-# ratio, not the dataflow (2/1 reproduces x3x's trigger bit-exactly,
-# planted pytest included). Flagged cells holding < 2 members cannot
-# split and pass through unchanged.
+# ratio, not the dataflow (at 2/1 it is x3x's needs_split, the same
+# Column, planted pytest included). Flagged cells holding < 2 members
+# cannot split and pass through unchanged.
 #
-# Scale shape: ONE corpus argmax scan (assign_cells, persisted for its
-# multiple consumers), a K-row occupancy aggregate, then THREE more
-# passes all confined to flagged-cell members by an equi-join against
-# the <= K-row broadcast flagged set (plan-gated): seed_a election,
+# Scale shape: ONE corpus argmax scan (standing_ivf_index, persisted
+# by flagged_slice for its multiple consumers), a K-row occupancy
+# aggregate, then THREE more passes (_gonzalez_split) all confined to
+# flagged-cell members by an equi-join against the <= K-row broadcast
+# flagged set (plan-gated): seed_a election,
 # seed_b election, and the 2-way Lloyd assignment — each a broadcast
 # join plus a cell-keyed min_by aggregate. No window over corpus-sized
 # partitions, no pairwise stage anywhere. This closes the IVF
@@ -4982,50 +5037,69 @@ ORDER BY vec_id
 """
 
 
-def x3x2_flagged_members(
-    spark: SparkSession, sf_dir: str
+def flagged_slice(
+    spark: SparkSession, sf_dir: str, trigger: Column
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
-    """(assigned, flagged, members, centroids): the standing x3d
-    assignment (persisted — consumed by the occupancy count, the
-    untouched pass-through branch, and three flagged-member passes),
-    the <= K-row overloaded-cell set under the declared
-    _X3X2_NUM/_X3X2_DEN load trigger, and the flagged-cell member
-    slice — an equi-join against the broadcast flagged set, THE
-    plan-gated claim that all split work is keyed on flagged cells
-    only. Factored out (the x2e4_surviving_docs precedent) because the
-    final query's persist() hides this stage from its printed plan."""
-    emb = Catalog(spark, sf_dir).embeddings
-    cent = emb.filter(F.col("vec_id") < _X3X_K).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
-    )
-    vecs = ensure_min_partitions(emb).select(
-        "vec_id", _dvec("embedding").alias("emb")
-    )
-    assigned = persist_scoped(assign_cells(vecs, cent))
-    occ = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-    tot = occ.agg(F.sum("n").alias("total"))
-    flagged = (
-        occ.crossJoin(F.broadcast(tot))
-        .filter(
-            (F.lit(_X3X2_DEN) * F.col("n") * _X3X_K > _X3X2_NUM * F.col("total"))
-            & (F.col("n") >= 2)
-        )
-        .select("cell")
-    )
+    """(assigned, flagged, members, cent): the standing assignment
+    (persisted — the occupancy count, the untouched pass-through and
+    the member slice all read it), the <= K-row set of cells
+    ``trigger`` flags over :func:`cell_occupancy`, and their members —
+    an equi-join against the broadcast flagged set, THE plan-gated
+    claim that maintenance work touches flagged cells only."""
+    cent, _vecs, assigned = standing_ivf_index(spark, sf_dir)
+    assigned = persist_scoped(assigned)
+    flagged = cell_occupancy(assigned).filter(trigger).select("cell")
     members = assigned.join(F.broadcast(flagged), "cell")
     return assigned, flagged, members, cent
 
 
-def x3x2_assignment_frames(
-    spark: SparkSession, sf_dir: str
+def maintenance_frames(
+    sliced: tuple[DataFrame, DataFrame, DataFrame, DataFrame],
+    policy: Callable[[DataFrame, DataFrame, DataFrame], DataFrame],
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(untouched, re_assigned, centroids): the per-vector post-split
-    assignment rows with the member VECTOR retained (vec_id,
-    cell_before, cell_after, was_split, emb) — the shared dataflow
-    behind x3x2's reassignment manifest (which drops emb) and x3x3's
-    post-split centroid table (which aggregates it). Factored r17 so
-    the split law has exactly one Spark site."""
-    assigned, flagged, members, cent = x3x2_flagged_members(spark, sf_dir)
+    """(untouched, re_assigned, cent) over a :func:`flagged_slice`: one
+    row per nonzero vector (vec_id, cell_before, cell_after, moved,
+    emb, nrm). Unflagged cells pass through with cell_after =
+    cell_before, bit-identical (the s20 idiom); the flagged members
+    move to the cell_after that ``policy(members, flagged, cent)``
+    adds as a column."""
+    assigned, flagged, members, cent = sliced
+
+    def rows(df: DataFrame, cell_after: Column, moved: bool) -> DataFrame:
+        return df.select(
+            "vec_id",
+            F.col("cell").cast("long").alias("cell_before"),
+            cell_after.cast("long").alias("cell_after"),
+            F.lit(moved).alias("moved"),
+            "emb",
+            "nrm",
+        )
+
+    untouched = assigned.join(F.broadcast(flagged), "cell", "left_anti")
+    re_assigned = policy(members, flagged, cent)
+    return (
+        rows(untouched, F.col("cell"), False),
+        rows(re_assigned, F.col("cell_after"), True),
+        cent,
+    )
+
+
+def x3x2_flagged_members(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
+    """:func:`flagged_slice` under x3x2's split trigger."""
+    return flagged_slice(spark, sf_dir, _split_trigger())
+
+
+def _gonzalez_split(
+    members: DataFrame, _flagged: DataFrame, cent: DataFrame
+) -> DataFrame:
+    """x3x2's policy: per flagged cell, seed_a = the member farthest
+    from the standing centroid, seed_b = the member farthest from
+    seed_a (min cosine, vec_id tiebreak), then one Lloyd step to the
+    higher-cosine seed (ties: the lower seed id), as cell_after =
+    _X3X2_BASE + seed id. Each pass is a broadcast join plus a
+    cell-keyed min_by aggregate over the member slice."""
     centk = cent.select(
         F.col("cent_id").alias("cell"),
         "cemb",
@@ -5073,42 +5147,38 @@ def x3x2_assignment_frames(
     cos_b = dot(F.col("emb"), F.col("sb_emb")) / (
         F.col("nrm") * F.col("sb_nrm")
     )
-    re_assigned = (
+    return (
         cb.join(F.broadcast(sb), "cell")
         .withColumn("cos_b", cos_b)
-        .select(
-            "vec_id",
-            F.col("cell").cast("long").alias("cell_before"),
-            (
-                F.lit(_X3X2_BASE)
-                + F.when(F.col("cos_a") > F.col("cos_b"), F.col("sa_id"))
-                .when(F.col("cos_b") > F.col("cos_a"), F.col("sb_id"))
-                .otherwise(F.least("sa_id", "sb_id"))
-            )
-            .cast("long")
-            .alias("cell_after"),
-            F.lit(True).alias("was_split"),
-            "emb",
+        .withColumn(
+            "cell_after",
+            F.lit(_X3X2_BASE)
+            + F.when(F.col("cos_a") > F.col("cos_b"), F.col("sa_id"))
+            .when(F.col("cos_b") > F.col("cos_a"), F.col("sb_id"))
+            .otherwise(F.least("sa_id", "sb_id")),
         )
-        # Lazy checkpoint (r18, guide §3.3/§7.3): every downstream
-        # consumer (x3x3's per-dim means, x3z2's corpus + new-centroid
-        # branches, x2j2b's prune) references this frame 2+ times, and
-        # without truncation each reference re-expands the whole
-        # seed-election chain (three broadcast-join passes over the
-        # member slice) — x3z2's printed plan reached 106 parquet
-        # scans / 150 exchanges from the replays. The frame is small
-        # (flagged-cell members only) and the split-work plan gates
-        # witness the un-truncated shape at x3x2_flagged_members.
-        .localCheckpoint(eager=False)
     )
-    untouched = assigned.join(F.broadcast(flagged), "cell", "left_anti").select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell_before"),
-        F.col("cell").cast("long").alias("cell_after"),
-        F.lit(False).alias("was_split"),
-        "emb",
+
+
+def x3x2_assignment_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """:func:`maintenance_frames` under x3x2's trigger and split
+    policy."""
+    return maintenance_frames(x3x2_flagged_members(spark, sf_dir), _gonzalez_split)
+
+
+def _reassignment_manifest(
+    untouched: DataFrame, re_assigned: DataFrame, _cent: DataFrame, flag: str
+) -> DataFrame:
+    """x3x2's and x3x4's output: (vec_id, cell_before, cell_after,
+    ``flag``) per nonzero vector, the moved flag named ``flag``."""
+    cols = ["vec_id", "cell_before", "cell_after", F.col("moved").alias(flag)]
+    return (
+        untouched.select(*cols)
+        .unionByName(re_assigned.select(*cols))
+        .orderBy("vec_id")
     )
-    return untouched, re_assigned, cent
 
 
 @register("x3x2_ivf_cell_split", oracle=_X3X2_ORACLE, tags=("X3",))
@@ -5121,34 +5191,27 @@ def x3x2_ivf_cell_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower seed id), new sub-cell ids _X3X2_BASE + seed vec_id. One row
     per nonzero vector: cell_before, cell_after (identical for
     untouched cells — bit-identical pass-through), was_split."""
-    untouched, re_assigned, _cent = x3x2_assignment_frames(spark, sf_dir)
-    cols = ["vec_id", "cell_before", "cell_after", "was_split"]
-    return (
-        untouched.select(*cols)
-        .unionByName(re_assigned.select(*cols))
-        .orderBy("vec_id")
-    )
+    return _reassignment_manifest(*x3x2_assignment_frames(spark, sf_dir), "was_split")
 
 
-# X3x3 — the post-split centroid table (the artifact x3z serves from) ----------
+# X3x3 — the post-split centroid table (the artifact x3z2 serves from) ---------
 #
 # x3x2 emits WHO moves; the serving layer also needs the centroid table
-# that results. One row per (occupied final cell, dimension): for a new
-# sub-cell the centroid is its member MEAN under the x3x rounding law
-# (per-(cell, dim) sums rounded at 4dp first — the only place summation
-# order exists — so both engines divide bit-identical doubles); for an
-# untouched cell the STANDING centroid vector carries through
-# bit-identically (the s20 idiom — its components are the raw stored
-# doubles, not a recomputed mean). Components ship as floor(x * 1e6)
-# BIGINTs so no float crosses the hash boundary. Cells with zero
-# members (a standing centroid nothing assigned to) do not appear —
-# the table mirrors the occupancy view, matching x3x's report.
+# that results: post_maintenance_table over the split frames, exported
+# one row per (occupied cell, dimension). A new sub-cell's centroid is
+# its member MEAN under the x3x rounding law; an untouched cell's
+# STANDING centroid vector carries through bit-identically (the s20
+# idiom — its components are the raw stored doubles, not a recomputed
+# mean). Components ship as floor(x * 1e6) BIGINTs so no float crosses
+# the hash boundary. Cells with zero members (a standing centroid
+# nothing assigned to) do not appear — the table mirrors the occupancy
+# view, matching x3x's report.
 #
 # Scale shape: x3x2's dataflow plus ONE (cell, dim)-keyed hash
-# aggregate over split members only (K x dims rows out) and a <= K-row
-# join for the untouched centroids. Nothing new touches the corpus.
-
-_X3X3_SCALE = 1_000_000
+# aggregate over the changed cells' members (a semi-join against the
+# broadcast moved rows), its per-cell collect into the centroid array,
+# a post-split occupancy count and a <= K-row broadcast join for the
+# standing centroids. Nothing new reads the parquet corpus.
 
 _X3X3_ORACLE = f"""{_X3X2_CTES},
 fasg AS (
@@ -5172,14 +5235,14 @@ uc AS (
 )
 SELECT CAST(cell AS BIGINT)                              AS cell,
        CAST(dim_idx AS BIGINT)                           AS dim_idx,
-       CAST(floor(s / n * {_X3X3_SCALE}) AS BIGINT)      AS centroid_1e6,
+       CAST(floor(s / n * {_X3X_SCALE}) AS BIGINT)      AS centroid_1e6,
        CAST(n AS BIGINT)                                 AS n_members,
        TRUE                                              AS is_new
 FROM nc
 UNION ALL
 SELECT CAST(uc.cell AS BIGINT),
        CAST(cu.u.i AS BIGINT),
-       CAST(floor(cu.u.val * {_X3X3_SCALE}) AS BIGINT),
+       CAST(floor(cu.u.val * {_X3X_SCALE}) AS BIGINT),
        CAST(uc.n AS BIGINT),
        FALSE
 FROM uc JOIN (
@@ -5191,54 +5254,91 @@ ORDER BY cell, dim_idx
 """
 
 
+def post_maintenance_table(
+    untouched: DataFrame, re_assigned: DataFrame, cent: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(table, corpus) after a split or a merge (:func:`maintenance_frames`).
+
+    corpus is (vec_id, cid, emb, nrm), keyed on cell_after. table is
+    (cid, cemb, n_members, changed), one row per occupied
+    post-maintenance cell. A cell is changed when a reassigned member
+    lands in it; its centroid is the member mean over ALL its
+    post-maintenance members under the x3x rounding law (per-(cell,
+    dim) sums rounded at 4dp first — the only place summation order
+    exists — then divided, so both engines divide bit-identical
+    doubles). Every other cell carries its standing centroid through
+    bit-identically. Dissolved cells and memberless centroids have no
+    row. x3x3/x3x5 export the table as floor(1e6) components; x3z2/
+    x3z6 serve from it.
+
+    The post-maintenance members, the reassigned ones included, are
+    checkpointed lazily here, the family's one truncation point: the
+    corpus, the moved rows, the occupancy and every consumer's own
+    reuse (x3z2's queries and members, x2j2b's guard and fold) read
+    them, and each reference would otherwise replay the policy's
+    passes over the member slice."""
+    cols = ["vec_id", F.col("cell_after").alias("cid"), "emb", "nrm", "moved"]
+    full = (
+        untouched.select(*cols)
+        .unionByName(re_assigned.select(*cols))
+        .localCheckpoint(eager=False)
+    )
+    corpus = full.drop("moved")
+    # semi/anti joins against the broadcast moved rows: duplicates are
+    # harmless in a hash set, so no distinct (and no shuffle) is needed
+    moved = F.broadcast(full.filter("moved").select("cid"))
+    means = (
+        corpus.join(moved, "cid", "left_semi")
+        .select("cid", F.posexplode("emb").alias("dim_idx", "val"))
+        .groupBy("cid", "dim_idx")
+        .agg(F.round(F.sum("val"), 4).alias("s"), F.count(F.lit(1)).alias("n"))
+        .groupBy("cid")
+        .agg(F.sort_array(F.collect_list(F.struct("dim_idx", "s", "n"))).alias("ds"))
+        .select(
+            "cid",
+            F.transform("ds", lambda x: x["s"] / x["n"]).alias("cemb"),
+            F.lit(True).alias("changed"),
+        )
+    )
+    standing = (
+        cent.select(F.col("cent_id").alias("cid"), "cemb")
+        .join(moved, "cid", "left_anti")
+        .withColumn("changed", F.lit(False))
+    )
+    occ = corpus.groupBy("cid").agg(F.count(F.lit(1)).alias("n_members"))
+    table = occ.join(F.broadcast(means.unionByName(standing)), "cid")
+    return table, corpus
+
+
+def _centroids_1e6(table: DataFrame, flag: str) -> DataFrame:
+    """A :func:`post_maintenance_table` as hash-safe rows: one per
+    (cell, dim), components floor(x * 1e6) BIGINTs, ``changed`` named
+    ``flag``."""
+    return (
+        table.select(
+            "cid", "n_members", "changed",
+            F.posexplode("cemb").alias("dim_idx", "val"),
+        )
+        .select(
+            F.col("cid").cast("long").alias("cell"),
+            F.col("dim_idx").cast("long").alias("dim_idx"),
+            F.floor(F.col("val") * _X3X_SCALE).cast("long").alias("centroid_1e6"),
+            F.col("n_members").cast("long").alias("n_members"),
+            F.col("changed").alias(flag),
+        )
+        .orderBy("cell", "dim_idx")
+    )
+
+
 @register("x3x3_post_split_centroids", oracle=_X3X3_ORACLE, tags=("X3",))
 def x3x3_post_split_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The centroid table after the x3x2 split — what x3z serves from
-    next: new sub-cells get their member mean (x3x rounding law: per-
-    dim sums rounded at 4dp, then divided), untouched cells carry
-    their standing centroid through bit-identically; components as
+    """The centroid table after the x3x2 split — what x3z2 serves from:
+    new sub-cells get their member mean (x3x rounding law: per-dim
+    sums rounded at 4dp, then divided), untouched cells carry their
+    standing centroid through bit-identically; components as
     floor(x*1e6) BIGINTs, one row per (occupied cell, dim)."""
-    untouched, re_assigned, cent = x3x2_assignment_frames(spark, sf_dir)
-    nc = (
-        re_assigned.select(
-            F.col("cell_after").alias("cell"),
-            F.posexplode("emb").alias("dim_idx", "val"),
-        )
-        .groupBy("cell", "dim_idx")
-        .agg(
-            F.round(F.sum("val"), 4).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            F.col("dim_idx").cast("long").alias("dim_idx"),
-            F.floor(F.col("s") / F.col("n") * _X3X3_SCALE)
-            .cast("long")
-            .alias("centroid_1e6"),
-            F.col("n").cast("long").alias("n_members"),
-            F.lit(True).alias("is_new"),
-        )
-    )
-    ucnt = untouched.groupBy(
-        F.col("cell_after").alias("cell")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    uc = (
-        ucnt.join(
-            F.broadcast(cent.select(F.col("cent_id").alias("cell"), "cemb")),
-            "cell",
-        )
-        .select("cell", "n", F.posexplode("cemb").alias("dim_idx", "val"))
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            F.col("dim_idx").cast("long").alias("dim_idx"),
-            F.floor(F.col("val") * _X3X3_SCALE)
-            .cast("long")
-            .alias("centroid_1e6"),
-            F.col("n").cast("long").alias("n_members"),
-            F.lit(False).alias("is_new"),
-        )
-    )
-    return nc.unionByName(uc).orderBy("cell", "dim_idx")
+    table, _corpus = post_maintenance_table(*x3x2_assignment_frames(spark, sf_dir))
+    return _centroids_1e6(table, "is_new")
 
 
 # X3z2 — IVF top-k over the POST-SPLIT partition (the loop, re-served) ----------
@@ -5247,13 +5347,15 @@ def x3x3_post_split_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # maintenance loop actually improves the index IN SERVICE: the same
 # top-5 cosine search, but probing the post-x3x2 partition — standing
 # cells carry their standing centroid, split cells are replaced by
-# their two sub-cells under the member-mean centroid (the EXACT
-# rounded-sum/n doubles, not the 1e6-floored export — both engines
-# divide bit-identical values, the x3x law). Same x3z ranking laws:
+# their two sub-cells under the member-mean centroid — the same
+# post_maintenance_table x3x3 exports, served as its EXACT
+# rounded-sum/n doubles rather than the 1e6-floored export (both
+# engines divide bit-identical values, the x3x law). Same x3z ranking
+# laws:
 # per-query 2 L2-nearest cells (cid tiebreak), exact cosine against
 # only their members, round(cos,4) DESC + vec_id.
 #
-# Scale shape: x3x2's dataflow for the partition, a (K + splits)-row
+# Scale shape: x3x3's dataflow for the partition, its (K + splits)-row
 # centroid table collapsed to ONE broadcast array row (probe selection
 # is a per-row sort/slice fold — no window over the corpus), and the
 # scoring join is a cell EQUI-join of queries x nprobe probe rows
@@ -5332,55 +5434,10 @@ def x3z2_post_split_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     against only their members (self excluded). The x3z ranking laws
     throughout — this is the serve leg of train -> admit -> split ->
     re-serve."""
-    untouched, re_assigned, cent = x3x2_assignment_frames(spark, sf_dir)
-    cols = ["vec_id", "cell_after", "emb"]
-    corpus = (
-        untouched.select(*cols)
-        .unionByName(re_assigned.select(*cols))
-        .select(
-            "vec_id",
-            F.col("cell_after").alias("cid"),
-            "emb",
-            l2_norm(F.col("emb")).alias("nrm"),
-        )
-    )
-    newc = (
-        re_assigned.select(
-            F.col("cell_after").alias("cid"),
-            F.posexplode("emb").alias("dim_idx", "val"),
-        )
-        .groupBy("cid", "dim_idx")
-        .agg(F.round(F.sum("val"), 4).alias("s"), F.count(F.lit(1)).alias("n"))
-        .groupBy("cid")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("dim_idx", "s", "n"))).alias(
-                "ds"
-            )
-        )
-        .select(
-            "cid",
-            F.transform("ds", lambda x: x["s"] / x["n"]).alias("cvec"),
-        )
-    )
-    untc = (
-        untouched.select("cell_after")
-        .distinct()
-        .join(
-            F.broadcast(
-                cent.select(
-                    F.col("cent_id").alias("cell_after"),
-                    F.col("cemb").alias("cvec"),
-                )
-            ),
-            "cell_after",
-        )
-        .select(F.col("cell_after").alias("cid"), "cvec")
-    )
+    table, corpus = post_maintenance_table(*x3x2_assignment_frames(spark, sf_dir))
     return serve_ivf_topk(
         corpus,
-        newc.unionByName(untc).select(
-            F.col("cid").alias("cent_id"), F.col("cvec").alias("cemb")
-        ),
+        table.select(F.col("cid").alias("cent_id"), "cemb"),
         _X3Z2_NPROBE,
         _X3Z2_TOPK,
     )
@@ -5572,8 +5629,9 @@ def x2z_lsh_quality_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # so the greedy fold's per-cluster state is bounded by construction
 # wherever one split suffices (recursive splitting is the same
 # dataflow re-run on the new partition). Assignment rows come from the
-# registered x3x2 law sites (one Spark site: x3x2_assignment_frames;
-# one oracle site: _X3X2_CTES + _X3X2_FINAL), the prune from the
+# registered x3x2 law sites (Spark: the post_maintenance_table corpus
+# over x3x2_assignment_frames; oracle: _X3X2_CTES + _X3X2_FINAL), the
+# prune from the
 # registered x2j2 law sites (_semdedup_prune / _x2j2_prune_sql) — this
 # entry is pure composition, so it can never drift from either parent.
 # The guard itself is CARRIED (a post-split cell could still exceed
@@ -5610,17 +5668,8 @@ def x2j2b_semdedup_prune_post_split(
     prescribes, composed from both registered law sites. Cluster ids
     are post-split cell ids (standing cells unchanged, sub-cells
     _X3X2_BASE + seed id); the lowest-id copy survives per cluster."""
-    untouched, re_assigned, _cent = x3x2_assignment_frames(spark, sf_dir)
-    cols = ["vec_id", "cell_after", "emb"]
-    assigned = (
-        untouched.select(*cols)
-        .unionByName(re_assigned.select(*cols))
-        .select(F.col("cell_after").alias("cid"), "vec_id", "emb")
-        # the prune references its input twice (guard pre-aggregate +
-        # member fold); truncate so the x3x2 frames replay once (§7.3)
-        .localCheckpoint(eager=False)
-    )
-    return _semdedup_prune(assigned)
+    _table, corpus = post_maintenance_table(*x3x2_assignment_frames(spark, sf_dir))
+    return _semdedup_prune(corpus.select("cid", "vec_id", "emb"))
 
 
 # X3x4 — merge underloaded IVF cells (the dual of x3x2) ------------------------
@@ -5629,10 +5678,11 @@ def x2j2b_semdedup_prune_post_split(
 # (x2e4) or admission drift (x3x), near-empty cells waste probes and
 # skew recall — each probe visits nprobe cells, so a cell holding a
 # handful of members buys almost no candidates for its probe slot.
-# x3x4 mirrors the x3x2 contract on the other tail: flag every cell
-# whose load falls UNDER the declared integer floor (the x3x load
-# law's dual — a cell merges when DEN * n * K < NUM * total, i.e.
-# load < NUM/DEN x the average), dissolve it, and reassign its
+# x3x4 is the x3x2 dataflow (flagged_slice + maintenance_frames) on
+# the other tail: flag every cell whose load falls UNDER the declared
+# integer floor (load_vs_average with "<" — a cell merges when
+# DEN * n * K < NUM * total, i.e. load < NUM/DEN x the average),
+# dissolve it, and reassign its
 # members to the nearest SURVIVING standing centroid — the
 # nearest_cells cosine law verbatim over the broadcast survivor
 # array, applied to flagged members only, keeping cell_before in the
@@ -5650,9 +5700,9 @@ def x2j2b_semdedup_prune_post_split(
 # average load, and the flag is strict <, so that cell never flags —
 # no degenerate-corpus guard is needed.
 #
-# Scale shape: ONE corpus argmax scan (assign_cells, persisted for
-# its multiple consumers), a K-row occupancy aggregate, then the
-# reassignment confined to flagged-cell members by an equi-join
+# Scale shape: ONE corpus argmax scan (standing_ivf_index, persisted
+# for its multiple consumers), a K-row occupancy aggregate, then the
+# reassignment (_nearest_survivor) confined to flagged-cell members by an equi-join
 # against the <= K-row broadcast flagged set (plan-gated) followed by
 # a map-side argmax over the <= K-row broadcast survivor array. No
 # window, no pairwise stage, O(merged members) beyond the standing
@@ -5707,62 +5757,34 @@ ORDER BY vec_id
 """
 
 
-def x3x4_merge_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(untouched, re_assigned, centroids): the per-vector post-merge
-    assignment rows with the member VECTOR retained (vec_id,
-    cell_before, cell_after, was_merged, emb) — the shared dataflow
-    behind x3x4's merge manifest (drops emb) and x3x5's post-merge
-    centroid table (aggregates it). The member slice is an equi-join
-    against the <= K-row broadcast flagged set (THE plan-gated claim
-    that all merge work is keyed on flagged cells only); reassignment
-    applies :func:`nearest_cells` over the broadcast survivor array in
-    the same map-side projection, so cell_before rides along without
-    a join-back."""
-    emb = Catalog(spark, sf_dir).embeddings
-    cent = emb.filter(F.col("vec_id") < _X3X_K).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
-    )
-    vecs = ensure_min_partitions(emb).select(
-        "vec_id", _dvec("embedding").alias("emb")
-    )
-    assigned = persist_scoped(assign_cells(vecs, cent))
-    occ = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-    tot = occ.agg(F.sum("n").alias("total"))
-    flagged = (
-        occ.crossJoin(F.broadcast(tot))
-        .filter(
-            F.lit(_X3X4_DEN) * F.col("n") * _X3X_K < _X3X4_NUM * F.col("total")
-        )
-        .select("cell")
-    )
-    members = assigned.join(F.broadcast(flagged), "cell")
+def _nearest_survivor(
+    members: DataFrame, flagged: DataFrame, cent: DataFrame
+) -> DataFrame:
+    """x3x4's policy: each flagged member moves to its nearest
+    surviving standing centroid by :func:`nearest_cells` (cos desc,
+    cent_id) over the broadcast survivor array, in the same map-side
+    projection as its cell — no join-back."""
     surv = cent.join(
         F.broadcast(flagged.select(F.col("cell").alias("cent_id"))),
         "cent_id",
         "left_anti",
     )
     near = nearest_cells(F.col("emb"), F.col("cents"), nrm=F.col("nrm"))
-    re_assigned = (
+    return (
         members.crossJoin(F.broadcast(_centroid_array(surv)))
-        .select(
-            "vec_id",
-            F.col("cell").cast("long").alias("cell_before"),
-            near["cid"].cast("long").alias("cell_after"),
-            F.lit(True).alias("was_merged"),
-            "emb",
-        )
+        .withColumn("cell_after", near["cid"])
         .filter(F.col("cell_after").isNotNull())
     )
-    untouched = assigned.join(F.broadcast(flagged), "cell", "left_anti").select(
-        "vec_id",
-        F.col("cell").cast("long").alias("cell_before"),
-        F.col("cell").cast("long").alias("cell_after"),
-        F.lit(False).alias("was_merged"),
-        "emb",
+
+
+def x3x4_merge_frames(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """:func:`maintenance_frames` under x3x4's merge trigger and
+    nearest-survivor policy."""
+    return maintenance_frames(
+        flagged_slice(spark, sf_dir, _merge_trigger()), _nearest_survivor
     )
-    return untouched, re_assigned, cent
 
 
 @register("x3x4_ivf_cell_merge", oracle=_X3X4_ORACLE, tags=("X3",))
@@ -5774,20 +5796,16 @@ def x3x4_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     One row per nonzero vector: cell_before, cell_after (identical
     for untouched cells — bit-identical pass-through), was_merged.
     Survivors are nonempty by pigeonhole for any floor <= 1x."""
-    untouched, re_assigned, _cent = x3x4_merge_frames(spark, sf_dir)
-    cols = ["vec_id", "cell_before", "cell_after", "was_merged"]
-    return (
-        untouched.select(*cols)
-        .unionByName(re_assigned.select(*cols))
-        .orderBy("vec_id")
-    )
+    return _reassignment_manifest(*x3x4_merge_frames(spark, sf_dir), "was_merged")
 
 
 # X3x5 — the post-merge centroid table (the x3x3 dual) -------------------------
 #
 # x3x4 emits WHO moves; the serving layer needs the centroid table
-# that results. One row per (occupied post-merge cell, dimension):
-# a RECEIVER cell (one that absorbed merged members) gets its member
+# that results: post_maintenance_table over the merge frames (the
+# x3x3 law), exported one row per (occupied post-merge cell,
+# dimension). A RECEIVER cell (one that absorbed merged members) — a
+# changed cell in the table's terms — gets its member
 # MEAN over ALL its post-merge members under the x3x rounding law
 # (per-(cell, dim) sums rounded at 4dp, then divided — the only place
 # summation order exists, so both engines divide bit-identical
@@ -5798,12 +5816,11 @@ def x3x4_ivf_cell_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 # appear — the table mirrors the post-merge occupancy view, matching
 # x3x3's convention.
 #
-# Scale shape: x3x4's dataflow plus ONE (cell, dim)-keyed hash
-# aggregate confined to receiver-cell members (an equi-join against
-# the broadcast <= K-row receiver set) and a <= K-row join for the
-# untouched centroids. Nothing new touches the corpus.
-
-_X3X5_SCALE = 1_000_000
+# Scale shape: x3x3's, over x3x4's dataflow — ONE (cell, dim)-keyed
+# hash aggregate confined to receiver-cell members (a semi-join
+# against the broadcast moved rows), its per-cell collect, a
+# post-merge occupancy count and a <= K-row broadcast join for the
+# standing centroids. Nothing new reads the parquet corpus.
 
 _X3X5_ORACLE = f"""{_X3X4_CTES},
 fasg AS (
@@ -5830,14 +5847,14 @@ uc AS (
 )
 SELECT CAST(cell AS BIGINT)                              AS cell,
        CAST(dim_idx AS BIGINT)                           AS dim_idx,
-       CAST(floor(s / n * {_X3X5_SCALE}) AS BIGINT)      AS centroid_1e6,
+       CAST(floor(s / n * {_X3X_SCALE}) AS BIGINT)      AS centroid_1e6,
        CAST(n AS BIGINT)                                 AS n_members,
        TRUE                                              AS is_receiver
 FROM rc
 UNION ALL
 SELECT CAST(uc.cell AS BIGINT),
        CAST(cu.u.i AS BIGINT),
-       CAST(floor(cu.u.val * {_X3X5_SCALE}) AS BIGINT),
+       CAST(floor(cu.u.val * {_X3X_SCALE}) AS BIGINT),
        CAST(uc.n AS BIGINT),
        FALSE
 FROM uc JOIN (
@@ -5857,57 +5874,8 @@ def x3x5_post_merge_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     divided), surviving non-receiver cells carry their standing
     centroid through bit-identically; components as floor(x*1e6)
     BIGINTs, one row per (occupied post-merge cell, dim)."""
-    untouched, re_assigned, cent = x3x4_merge_frames(spark, sf_dir)
-    # lazy checkpoint at the CONSUMER (not in x3x4_merge_frames, whose
-    # un-truncated plan the merge-work gate witnesses): re_assigned
-    # feeds both the member union and the receiver-cell set, and each
-    # reference would replay the flagged-member reassignment (§7.3)
-    re_assigned = re_assigned.localCheckpoint(eager=False)
-    cols = ["vec_id", "cell_after", "emb"]
-    allm = untouched.select(*cols).unionByName(re_assigned.select(*cols))
-    recv = re_assigned.select(
-        F.col("cell_after").alias("cell")
-    ).distinct()
-    rc = (
-        allm.join(F.broadcast(recv), allm.cell_after == recv.cell)
-        .select(F.col("cell"), F.posexplode("emb").alias("dim_idx", "val"))
-        .groupBy("cell", "dim_idx")
-        .agg(
-            F.round(F.sum("val"), 4).alias("s"),
-            F.count(F.lit(1)).alias("n"),
-        )
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            F.col("dim_idx").cast("long").alias("dim_idx"),
-            F.floor(F.col("s") / F.col("n") * _X3X5_SCALE)
-            .cast("long")
-            .alias("centroid_1e6"),
-            F.col("n").cast("long").alias("n_members"),
-            F.lit(True).alias("is_receiver"),
-        )
-    )
-    ucnt = (
-        allm.join(F.broadcast(recv), allm.cell_after == recv.cell, "left_anti")
-        .groupBy(F.col("cell_after").alias("cell"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    uc = (
-        ucnt.join(
-            F.broadcast(cent.select(F.col("cent_id").alias("cell"), "cemb")),
-            "cell",
-        )
-        .select("cell", "n", F.posexplode("cemb").alias("dim_idx", "val"))
-        .select(
-            F.col("cell").cast("long").alias("cell"),
-            F.col("dim_idx").cast("long").alias("dim_idx"),
-            F.floor(F.col("val") * _X3X5_SCALE)
-            .cast("long")
-            .alias("centroid_1e6"),
-            F.col("n").cast("long").alias("n_members"),
-            F.lit(False).alias("is_receiver"),
-        )
-    )
-    return rc.unionByName(uc).orderBy("cell", "dim_idx")
+    table, _corpus = post_maintenance_table(*x3x4_merge_frames(spark, sf_dir))
+    return _centroids_1e6(table, "is_receiver")
 
 
 # X3z4 — trained-IVF serving over a RETRACTED corpus ---------------------------
@@ -6022,16 +5990,17 @@ def x3z5_tombstone_occupancy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same proof for the merge leg: the x3z top-5 cosine search probing
 # the post-x3x4 partition — non-receiver survivors carry their
 # standing centroid, receiver cells are scored under their member-mean
-# centroid over ALL post-merge members (the EXACT x3x5 rounded-sum/n
-# doubles, not the 1e6-floored export — both engines divide
-# bit-identical values), dissolved cells are gone from both the probe
+# centroid over ALL post-merge members (the post_maintenance_table
+# x3x5 exports, as its EXACT rounded-sum/n doubles rather than the
+# 1e6-floored export — both engines divide bit-identical values),
+# dissolved cells are gone from both the probe
 # table and the corpus keying. Same x3z ranking laws: per-query
 # _X3Z6_NPROBE L2-nearest cells (cid tiebreak), exact cosine against
 # only their members, round(cos,4) DESC + vec_id. With fewer, fuller
 # cells each probe slot buys more candidates — the recall-per-probe
 # argument for merging, which x3z7 then measures.
 #
-# Scale shape: x3x4's dataflow for the partition, a <= K-row centroid
+# Scale shape: x3x5's dataflow for the partition, its <= K-row centroid
 # table collapsed to ONE broadcast array row (probe selection is a
 # per-row sort/slice fold — no window over the corpus), and the
 # scoring join is a BROADCAST cell equi-join of queries x nprobe
@@ -6116,58 +6085,10 @@ def x3z6_post_merge_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     against only their members (self excluded). The x3z ranking laws
     throughout — the serve leg of retract/drift -> measure -> merge ->
     re-serve."""
-    untouched, re_assigned, cent = x3x4_merge_frames(spark, sf_dir)
-    # lazy checkpoint at the consumer (the x3x5 rationale): re_assigned
-    # feeds the member union AND the receiver-cell set here (§7.3)
-    re_assigned = re_assigned.localCheckpoint(eager=False)
-    cols = ["vec_id", "cell_after", "emb"]
-    allm = untouched.select(*cols).unionByName(re_assigned.select(*cols))
-    corpus = allm.select(
-        "vec_id",
-        F.col("cell_after").alias("cid"),
-        "emb",
-        l2_norm(F.col("emb")).alias("nrm"),
-    )
-    recv = re_assigned.select(F.col("cell_after").alias("cell")).distinct()
-    newc = (
-        allm.join(F.broadcast(recv), allm.cell_after == recv.cell)
-        .select(
-            F.col("cell").alias("cid"),
-            F.posexplode("emb").alias("dim_idx", "val"),
-        )
-        .groupBy("cid", "dim_idx")
-        .agg(F.round(F.sum("val"), 4).alias("s"), F.count(F.lit(1)).alias("n"))
-        .groupBy("cid")
-        .agg(
-            F.sort_array(F.collect_list(F.struct("dim_idx", "s", "n"))).alias(
-                "ds"
-            )
-        )
-        .select(
-            "cid",
-            F.transform("ds", lambda x: x["s"] / x["n"]).alias("cvec"),
-        )
-    )
-    untc = (
-        allm.join(F.broadcast(recv), allm.cell_after == recv.cell, "left_anti")
-        .select("cell_after")
-        .distinct()
-        .join(
-            F.broadcast(
-                cent.select(
-                    F.col("cent_id").alias("cell_after"),
-                    F.col("cemb").alias("cvec"),
-                )
-            ),
-            "cell_after",
-        )
-        .select(F.col("cell_after").alias("cid"), "cvec")
-    )
+    table, corpus = post_maintenance_table(*x3x4_merge_frames(spark, sf_dir))
     return serve_ivf_topk(
         corpus,
-        newc.unionByName(untc).select(
-            F.col("cid").alias("cent_id"), F.col("cvec").alias("cemb")
-        ),
+        table.select(F.col("cid").alias("cent_id"), "cemb"),
         _X3Z6_NPROBE,
         _X3Z6_TOPK,
     )
@@ -6223,9 +6144,10 @@ def x3z7_post_merge_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # resulting action verdict: 'split' (x3x2 executes), 'merge' (x3x4
 # executes), or 'hold'. Load ships as an exact floored ppm of the
 # average (1e6 * n * K div total) so no float crosses the hash
-# boundary, and the verdict CASE is generated from the same integer
-# constants the executors register — the plan can never disagree with
-# what the executors would do. The two trigger bands cannot overlap
+# boundary, and both verdicts are the executors' own trigger Columns
+# (_split_trigger / _merge_trigger over the shared cell_occupancy) —
+# the plan cannot disagree with what the executors would do. The two
+# trigger bands cannot overlap
 # (9/8 > 7/8), so the CASE order is immaterial; a cell with a single
 # member still reports honestly (x3x2 skips n < 2 cells — surfaced
 # here as 'hold' via the same n >= 2 conjunct).
@@ -6234,8 +6156,9 @@ def x3z7_post_merge_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # x3z5) -> PLAN (x3x6) -> execute (x3x2 split / x3x4 merge) ->
 # re-serve (x3z2 / x3z6) -> audit (x3z3 / x3z7).
 #
-# Scale shape: the ONE standing assignment scan plus a K-row
-# occupancy aggregate and a 1-row total broadcast — nothing else
+# Scale shape: the ONE standing assignment scan (standing_ivf_index)
+# plus cell_occupancy's K-row aggregate and 1-row total broadcast —
+# nothing else
 # touches the corpus; the report is K rows.
 
 _X3X6_ORACLE = f"""{_IVF_CELLS_SQL},
@@ -6262,30 +6185,14 @@ ORDER BY cell
 def x3x6_maintenance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per standing IVF cell: member count, exact floored load ppm of
     the average, both trigger verdicts, and the split/merge/hold
-    action — generated from the SAME integer constants x3x2 and x3x4
-    register, so the plan and the executors cannot disagree. One
-    assignment scan + a K-row aggregate; the report is K rows."""
-    emb = Catalog(spark, sf_dir).embeddings
-    cent = emb.filter(F.col("vec_id") < _X3X_K).select(
-        F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
-    )
-    vecs = ensure_min_partitions(emb).select(
-        "vec_id", _dvec("embedding").alias("emb")
-    )
-    occ = (
-        assign_cells(vecs, cent)
-        .groupBy("cell")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    tot = occ.agg(F.sum("n").alias("total"))
-    over = (
-        F.lit(_X3X2_DEN) * F.col("n") * _X3X_K > _X3X2_NUM * F.col("total")
-    ) & (F.col("n") >= 2)
-    under = (
-        F.lit(_X3X4_DEN) * F.col("n") * _X3X_K < _X3X4_NUM * F.col("total")
-    )
+    action — the verdicts are x3x2's and x3x4's own trigger Columns
+    over the shared occupancy, so the plan and the executors cannot
+    disagree. One assignment scan + a K-row aggregate; the report is
+    K rows."""
+    _cent, _vecs, assigned = standing_ivf_index(spark, sf_dir)
+    over, under = _split_trigger(), _merge_trigger()
     return (
-        occ.crossJoin(F.broadcast(tot))
+        cell_occupancy(assigned)
         .select(
             F.col("cell").cast("long").alias("cell"),
             F.col("n").cast("long").alias("n_members"),

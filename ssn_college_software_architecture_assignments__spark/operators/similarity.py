@@ -438,9 +438,14 @@ def x3d_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ivf_topk(spark, sf_dir, nprobe=2)
 
 
+_IVF_K = 16  # the fixed IVF codebook's size
+
+
 def _ivf_centroids(emb: DataFrame) -> DataFrame:
-    """The fixed IVF codebook: the 16 corpus vectors vec_id < 16."""
-    return emb.filter(F.col("vec_id") < 16).select(
+    """The fixed IVF codebook: the corpus vectors vec_id < _IVF_K, as
+    (cent_id, cemb). x3d/x3h/x3p, SemDeDup's x2j cells, x3u-x3w and
+    the x3x maintenance loop all read this one codebook."""
+    return emb.filter(F.col("vec_id") < _IVF_K).select(
         F.col("vec_id").alias("cent_id"), _dvec("embedding").alias("cemb")
     )
 

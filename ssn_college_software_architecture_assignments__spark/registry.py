@@ -76,6 +76,22 @@ _loaded = False
 # permutation of the registry.
 _CHECK_PRIORITY = (
     "x2w2_prefix_filter_full_corpus",
+    "x2w_prefix_filter_join",
+    "x3x6_maintenance_plan",
+    "x3z6_post_merge_ivf_topk",
+    "x3z7_post_merge_recall",
+    "x2j2b_semdedup_prune_post_split",
+    "x3x4_ivf_cell_merge",
+    "x3x5_post_merge_centroids",
+    "x3u_ivf_knn_graph",
+    "x3v_knn_graph_recall",
+    "x2j_semantic_dedup",
+    "x3w_knn_graph_multiprobe_repair",
+    "x3x_incremental_ivf_admission",
+    "x3x2_ivf_cell_split",
+    "x3x3_post_split_centroids",
+    "x3z2_post_split_ivf_topk",
+    "x3z3_post_split_recall",
     "x2i_lsh_exact_rescore",
     "x2_minhash_near_dedup",
     "x2b2_simhash_pairs",
@@ -91,25 +107,13 @@ _CHECK_PRIORITY = (
     "x5n2_hamming_audio_near_dedup",
     "x5r_video_near_dedup",
     "x2v_containment_rescore",
-    "x2w_prefix_filter_join",
-    "x3x6_maintenance_plan",
-    "x3z6_post_merge_ivf_topk",
-    "x3z7_post_merge_recall",
-    "x2j2b_semdedup_prune_post_split",
-    "x3x4_ivf_cell_merge",
-    "x3x5_post_merge_centroids",
     "x3z4_tombstone_ivf_topk",
     "x3z5_tombstone_occupancy",
     "x2j2_semdedup_prune",
-    "x3u_ivf_knn_graph",
-    "x3v_knn_graph_recall",
-    "x2j_semantic_dedup",
     "x3h_ann_recall_eval",
     "x3j_pq_codes",
     "x3k_pq_adc_topk",
     "x3l_pq_recall",
-    "x3w_knn_graph_multiprobe_repair",
-    "x3x_incremental_ivf_admission",
     "x3m_pq_ivf_search",
     "s26_time_travel_read",
     "x3d_similarity_ivf",
@@ -118,10 +122,6 @@ _CHECK_PRIORITY = (
     "x3r_kmeans_step",
     "x3z_trained_ivf_topk",
     "s21_merge_on_read",
-    "x3x2_ivf_cell_split",
-    "x3x3_post_split_centroids",
-    "x3z2_post_split_ivf_topk",
-    "x3z3_post_split_recall",
     "s10_upsert_latest_wins",
     "x3r2_kmeans_train",
     "a19b_trimmed_mean_scalable",

@@ -1398,6 +1398,15 @@ def test_x3x_admission_laws_planted_skewed_batch(spark, tmp_path):
     assert out[3]["needs_split"]
     assert out[1]["needs_split"] and out[1]["n_after"] == 8
     assert sum(bool(r["needs_split"]) for r in out.values()) == 2
+    # ... and needs_split IS the maintenance loop's shared load law at
+    # ratio 2/1 (the Column x3x2/x3x4/x3x6 read at their own ratios)
+    from ssn_college_software_architecture_assignments__spark.operators.dedup import (
+        load_vs_average,
+    )
+
+    law = load_vs_average(">", 2, 1, F.col("n_after"), F.lit(total_after))
+    report = x3x_incremental_ivf_admission(spark, str(tmp_path))
+    assert report.filter(F.col("needs_split") != law).count() == 0
     # (d) drifted cell: strictly below 1e6 and equal to the python
     # mirror of the rounded-sum law
     members0 = [
@@ -2468,6 +2477,94 @@ def test_x3x4_planted_underloaded_cells_merge_to_nearest_survivor(spark):
         k: (int(r["centroid_1e6"]), int(r["n_members"]), bool(r["is_receiver"]))
         for k, r in cents.items()
     }
+
+
+def _planted_merge_rows():
+    # the x3x4 planted fixture: 16 standing centroids 22.5 degrees
+    # apart, 4 extras in cell 0, one extra in each of cells 1..13, so
+    # cells 14/15 are singletons under the 7/8 floor
+    import math
+
+    import numpy as np
+
+    def unit(deg):
+        r = math.radians(deg)
+        return [float(np.float32(math.cos(r))), float(np.float32(math.sin(r)))]
+
+    rows = [(i, unit(i * 22.5)) for i in range(16)]
+    rows += [(16, unit(-9.0)), (17, unit(-5.0)),
+             (18, unit(4.0)), (19, unit(8.0))]
+    rows += [(20 + i, unit((1 + i) * 22.5 + 2.0)) for i in range(13)]
+    return rows, "vec_id long, embedding array<float>"
+
+
+def _mini_split_rows():
+    # the x3x3/x3z2 mini split fixture: cell 2 splits into {2} and {20}
+    rows = [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [0.0, 1.0, 0.0, 0.0]),
+        (2, [0.0, 0.0, 1.0, 0.0]),
+        (3, [0.0, 0.0, 0.0, 1.0]),
+        (20, [0.1, 0.0, 1.0, 0.0]),
+    ]
+    return rows, "vec_id long, embedding array<double>"
+
+
+@pytest.mark.parametrize(
+    "fixture, export, served, flag, changed",
+    [
+        (_mini_split_rows, "x3x3_post_split_centroids",
+         "x3z2_post_split_ivf_topk", "is_new", {1_000_002, 1_000_020}),
+        (_planted_merge_rows, "x3x5_post_merge_centroids",
+         "x3z6_post_merge_ivf_topk", "is_receiver", {0, 13}),
+    ],
+    ids=["split", "merge"],
+)
+def test_exported_centroids_are_the_served_table(
+    spark, monkeypatch, fixture, export, served, flag, changed
+):
+    """One post-maintenance law: the rows x3x3/x3x5 export are exactly
+    floor(1e6 x component) of the centroid table x3z2/x3z6 hand to
+    serve_ivf_topk — same cells, same dims, same doubles — on the
+    planted split fixture (cell 2 -> sub-cells BASE+2, BASE+20) and the
+    planted merge fixture (cells 14/15 dissolve into receivers 13, 0).
+    Only the changed cells carry the changed flag."""
+    import math
+
+    import ssn_college_software_architecture_assignments__spark.operators.dedup as dmod
+
+    assert dmod._X3X2_BASE == 1_000_000  # the split case's sub-cell ids
+    rows, schema = fixture()
+    df = spark.createDataFrame(rows, schema)
+
+    class _Cat:
+        def __init__(self, spark, sf_dir):
+            self.embeddings = df
+
+    probed = []
+    serve = dmod.serve_ivf_topk
+
+    def spy(corpus, centroids, *args):
+        probed.append(centroids)
+        return serve(corpus, centroids, *args)
+
+    monkeypatch.setattr(dmod, "Catalog", _Cat)
+    monkeypatch.setattr(dmod, "serve_ivf_topk", spy)
+    try:
+        out = getattr(dmod, export)(spark, "x").collect()
+        assert getattr(dmod, served)(spark, "x").collect()
+        table = probed[0].collect()
+    finally:
+        spark.catalog.clearCache()
+
+    exported = {(r["cell"], r["dim_idx"]): r["centroid_1e6"] for r in out}
+    served_1e6 = {
+        (r["cent_id"], i): math.floor(v * 1e6)
+        for r in table
+        for i, v in enumerate(r["cemb"])
+    }
+    assert exported == served_1e6
+    assert {r["cell"] for r in out if r[flag]} == changed
 
 
 def test_x3z4_oracle_and_helper_compose_registered_x3z():

@@ -544,6 +544,26 @@ def test_prefix_filter_join_is_never_all_pairs(spark):
         assert "BroadcastNestedLoopJoin" not in plan, name
 
 
+def test_prefix_filter_plans_its_fingerprint_table_once(spark):
+    """x2w/x2w2: the prefix filter reads its fingerprint table in four
+    branches (document-frequency count, join back, both verify sides).
+    The table is persisted lazily, so its producer is planned ONCE —
+    x2w's absorbed-docs self-join scans documents twice, x2w2 scans
+    them once — and it is not hidden behind an eager build-time
+    checkpoint (which would leave no scan in the printed plan)."""
+    import re
+
+    for name, n_scans in (
+        ("x2w_prefix_filter_join", 2),
+        ("x2w2_prefix_filter_full_corpus", 1),
+    ):
+        plan = _plan(spark, name)
+        scans = re.findall(r"\(\d+\) Scan parquet", plan)
+        assert len(scans) == n_scans, (name, scans)
+        assert "InMemoryRelation" in plan, name
+    spark.catalog.clearCache()
+
+
 def test_mode_and_mor_windows_run_as_group_limit(spark):
     """a15 / s21: the per-group top-1 windows must execute as
     WindowGroupLimit (rank pushed into the shuffle — each map task
