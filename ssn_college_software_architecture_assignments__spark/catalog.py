@@ -9,6 +9,10 @@ tables in this catalog; analytics queries address them by name.
 
 from __future__ import annotations
 
+import os
+import stat
+import threading
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -29,12 +33,72 @@ TABLE_NAMES = (
 )
 
 
+# Fixture footer schemas: (applicationId, path, st_mtime_ns, st_size,
+# inference confs) -> schema. One SparkContext runs in a process at a
+# time, so the first read of a new application drops the previous one's
+# entries.
+_footer_schemas: dict[tuple, T.StructType] = {}
+_footer_lock = threading.Lock()
+# Session confs that change the schema a parquet footer infers to (ts as
+# raw nanos or as a timestamp, binary as string): part of the key, so a
+# session that sets them otherwise infers its own schema.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+
+def _file_identity(path: str) -> tuple | None:
+    """(path, mtime, length) of a local regular file; None for anything
+    else: directories, globs and non-local URIs are never cached."""
+    if any(c in path for c in "*?[{"):
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    return (os.path.abspath(path), st.st_mtime_ns, st.st_size)
+
+
+def read_fixture(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that reads a fixture file's footer
+    once per application.
+
+    Without a declared schema every parquet read runs a one-task Spark
+    job that reads the file's footer, before any data is read. A fixture
+    file does not change under a running application, so the schema of
+    a single file is kept under its identity (path, mtime and length)
+    and later reads declare it: the same plan, and no job. A rewritten
+    file has a new identity and is read again. Directories and globs
+    are read plainly."""
+    ident = _file_identity(path)
+    if ident is None:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(c) for c in _INFERENCE_CONFS)
+    key = (spark.sparkContext.applicationId, *ident, confs)
+    with _footer_lock:
+        schema = _footer_schemas.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _footer_lock:
+        for stale in [k for k in _footer_schemas if k[0] != key[0]]:
+            del _footer_schemas[stale]
+        _footer_schemas[key] = df.schema
+    return df
+
+
 class Catalog:
     """Lazy accessor for the per-scale-factor parquet tables.
 
     ``Catalog(spark, sf_dir).lineitem`` returns the lineitem DataFrame;
-    reads are plain ``spark.read.parquet`` so Catalyst retains full
-    predicate pushdown / column pruning / partition pruning on every scan.
+    reads are plain parquet scans (:func:`read_fixture`) so Catalyst
+    retains full predicate pushdown / column pruning / partition pruning
+    on every scan.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):
@@ -49,7 +113,7 @@ class Catalog:
         if name not in TABLE_NAMES:
             raise KeyError(f"unknown fixture table: {name!r}")
         if name not in self._frames:
-            df = self.spark.read.parquet(f"{self.sf_dir}/{name}.parquet")
+            df = read_fixture(self.spark, f"{self.sf_dir}/{name}.parquet")
             self._frames[name] = self._normalize(df)
         return self._frames[name]
 
@@ -98,7 +162,14 @@ def ensure_min_partitions(df: DataFrame, min_partitions: int | None = None) -> D
     per-row work (hashing, shingling, decode UDFs) would run on one core.
     On a real lake the input arrives in thousands of splits and this is a
     no-op; we only repartition when the scan gives fewer splits than
-    requested, so no shuffle is ever added to an already-parallel input."""
+    requested, so no shuffle is ever added to an already-parallel input.
+
+    It is for per-row JVM work. A Python kernel (``mapInPandas``, pandas
+    UDF) runs on the scan's own splits instead: each Python task costs
+    ~0.15-0.25 s of worker CPU (importing pyspark from its zip, with no
+    bytecode cache) before it does any numpy work, more than a
+    vectorized kernel spends on a fixture-sized split (x3y's 2,000 rows
+    cost more in 4 tasks than in 1)."""
     from .session import default_parallelism
 
     target = min_partitions or default_parallelism()

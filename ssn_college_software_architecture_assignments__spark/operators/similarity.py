@@ -2384,8 +2384,9 @@ def x3t_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Scale shape: quantization is the registered map-only x3f site; the Q
 # query code rows ship inside the kernel closure (Q x 64 ints — the
 # x3r-documented small-collect exception); the corpus streams through
-# mapInPandas without shuffling, and the only exchange carries
-# batches x Q x k candidate rows into the final tiny window.
+# mapInPandas on the scan's own splits, never repartitioned (one Python
+# task per split), and the only exchange carries batches x Q x k
+# candidate rows into the final tiny window.
 
 _X3Y_TOPK = 5
 
@@ -2473,7 +2474,8 @@ def x3y_mips_matmul_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_mat = np.stack(
         [np.asarray(r["_q"], dtype=np.int64) for r in qrows]
     )
-    cand = ensure_min_partitions(codes).mapInPandas(
+    # the kernel runs on the scan's own splits: see ensure_min_partitions
+    cand = codes.mapInPandas(
         mips_matmul_kernel(q_ids, q_mat, _X3Y_TOPK),
         "q_id long, vec_id long, idot long",
     )

@@ -85,10 +85,9 @@ def _register_e1() -> None:
         REST API through the ``restapi`` DataSource, Transform (drop
         empty text, normalize fields), Load through the audited +
         batch-validated sink, then read the ``<name>_raw`` table back.
-        The insert-consistency report is asserted inline; the oracle
-        replays the same E->T->L on the source table."""
-        import os
-
+        The insert-consistency report is asserted inline and the
+        read-back declares the schema the load wrote; the oracle replays
+        the same E->T->L on the source table."""
         from ..catalog import Catalog
         from ..sources.mock_api import MockApiServer
         from ..sources.rest import read_rest
@@ -132,7 +131,7 @@ def _register_e1() -> None:
                 f"insert validation failed: {report.n_transformed} transformed "
                 f"!= {report.n_written} written"
             )
-        back = spark.read.parquet(os.path.join(base, "docs_api_raw"))
+        back = spark.read.schema(report.schema).parquet(report.path)
         return back.select("doc_id", "lang_norm", "n_chars")
 
 

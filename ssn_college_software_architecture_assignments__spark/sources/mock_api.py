@@ -232,7 +232,13 @@ class MockApiServer:
                 self.wfile.write(body)
 
         self._server = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
-        self._thread = threading.Thread(target=self._server.serve_forever, daemon=True)
+        # shutdown() waits for serve_forever's next poll; its default
+        # 0.5 s interval made every exit take half a second
+        self._thread = threading.Thread(
+            target=self._server.serve_forever,
+            kwargs={"poll_interval": 0.02},
+            daemon=True,
+        )
 
     @property
     def base_url(self) -> str:

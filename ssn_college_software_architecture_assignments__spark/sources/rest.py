@@ -518,8 +518,17 @@ class RestDataSource(DataSource):
         return RestStreamReader(schema, dict(self.options))
 
 
+# sessionUUID -> the RestDataSource class registered on that session.
+# Registrations live in each session's own data source manager, so a
+# new session registers again.
+_registered: dict[str, type] = {}
+
+
 def register_rest_source(spark) -> None:
-    """Register the ``restapi`` format on ``spark``.
+    """Register the ``restapi`` format on ``spark``, once per session.
+
+    Registering again would only replace the session's entry with the
+    same class, and Spark logs a warning each time it does.
 
     This module is pickled BY VALUE. The streaming source is unpickled in
     a driver-side Python process that ``addPyFile`` does not reach, so
@@ -530,7 +539,11 @@ def register_rest_source(spark) -> None:
     from pyspark import cloudpickle
 
     cloudpickle.register_pickle_by_value(sys.modules[__name__])
+    session = spark._jsparkSession.sessionUUID()
+    if _registered.get(session) is RestDataSource:
+        return
     spark.dataSource.register(RestDataSource)
+    _registered[session] = RestDataSource
 
 
 def infer_rest_schema(

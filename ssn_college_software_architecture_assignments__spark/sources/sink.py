@@ -23,6 +23,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..catalog import Catalog
 from ..registry import register
@@ -35,12 +36,22 @@ def raw_table_path(base_dir: str, connector: str) -> str:
     return os.path.join(base_dir, f"{connector}_raw")
 
 
+@dataclass(frozen=True)
+class RawTable:
+    """A written raw table: its path and the schema it was written with.
+    A read-back declares that schema (``spark.read.schema(t.schema)``),
+    so it runs no footer job to infer what the writer already knew."""
+
+    path: str
+    schema: StructType
+
+
 def raw_sink(
     df: DataFrame,
     connector: str,
     base_dir: str,
     mode: str = "append",
-) -> str:
+) -> RawTable:
     """Write ``df`` to the connector's raw table with the audit column.
 
     Append mode by default: re-runs accumulate and are distinguishable by
@@ -52,7 +63,7 @@ def raw_sink(
         "_ingest_date", F.current_date()
     )
     audited.write.mode(mode).partitionBy("_ingest_date").parquet(path)
-    return path
+    return RawTable(path, audited.schema)
 
 
 @dataclass(frozen=True)
@@ -61,6 +72,8 @@ class InsertReport:
     path: str
     n_transformed: int
     n_written: int
+    # the table's schema as written: read-backs declare it
+    schema: StructType
 
     @property
     def consistent(self) -> bool:
@@ -79,9 +92,10 @@ def validated_insert(
     DURING the write job (no extra scan of the input); the written count
     is a read-back of the sink filtered to THIS batch's ``_batch_id`` —
     an end-to-end check that catches sink-side loss even under append
-    mode with concurrent historical batches. The read-back prunes to
-    today's ``_ingest_date`` partitions before filtering, so at 100 TB
-    it scans one day, not the table."""
+    mode with concurrent historical batches. The read-back declares the
+    schema it wrote (no footer job) and prunes to today's
+    ``_ingest_date`` partitions before filtering, so at 100 TB it scans
+    one day, not the table."""
     import uuid
 
     obs = Observation(f"{connector}_insert")
@@ -96,12 +110,13 @@ def validated_insert(
     audited.write.mode(mode).partitionBy("_ingest_date").parquet(path)
     n_transformed = int(obs.get["n_rows"])
     n_written = (
-        df.sparkSession.read.parquet(path)
+        df.sparkSession.read.schema(audited.schema)
+        .parquet(path)
         .filter(F.col("_ingest_date") == F.current_date())
         .filter(F.col("_batch_id") == batch_id)
         .count()
     )
-    return InsertReport(connector, path, n_transformed, n_written)
+    return InsertReport(connector, path, n_transformed, n_written, audited.schema)
 
 
 # Registry entries -------------------------------------------------------------
@@ -119,8 +134,8 @@ def s7_raw_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     nondeterministic so it stays out of the oracle projection)."""
     docs = Catalog(spark, sf_dir).documents
     base = scratch_dir(prefix="ssn_raw_sink_")
-    raw_sink(docs, "docs", base, mode="overwrite")
-    back = spark.read.parquet(raw_table_path(base, "docs"))
+    table = raw_sink(docs, "docs", base, mode="overwrite")
+    back = spark.read.schema(table.schema).parquet(table.path)
     return back.select("doc_id", "text", "lang", "source", "n_chars")
 
 

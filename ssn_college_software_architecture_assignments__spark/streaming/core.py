@@ -14,6 +14,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_fixture
 from ..scratch import scratch_dir
 from ..session import tune_session
 
@@ -26,15 +27,16 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     others only through nanosAsLong as a raw-nanos BIGINT — and declaring
     the wrong one silently delivers values off by 1000x (a hardcoded
     BIGINT schema on a native-nanos build yielded 1970-era timestamps and
-    a 320x overcount in the t9 range join). So: probe the BATCH schema
-    from the parquet footer — one driver-side metadata read — declare
-    exactly that for the stream, and rebuild the µs timestamp only when
-    ts really arrives as a long (matching Catalog._normalize)."""
+    a 320x overcount in the t9 range join). So: take the BATCH schema
+    from the parquet footer — read once per application
+    (``catalog.read_fixture``) — declare exactly that for the stream, and
+    rebuild the µs timestamp only when ts really arrives as a long
+    (matching Catalog._normalize)."""
     tune_session(spark)
     from pyspark.sql import types as T
 
     base = sf_dir.rstrip("/")
-    schema = spark.read.parquet(f"{base}/events.parquet").schema
+    schema = read_fixture(spark, f"{base}/events.parquet").schema
     # The fixture is a single file, not a directory; FileStreamSource
     # derives basePath from the non-glob path prefix and requires it to be
     # a directory, so address the file through a glob ("events.parque*")
@@ -100,9 +102,9 @@ def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the documents fixture — the 'new documents arriving'
     source of the incremental curation operators (t12). Single-file
     fixture, so the glob trick from ``stream_events`` applies; schema
-    probed from the batch footer (no timestamp normalization needed —
-    documents carries no temporal column)."""
+    from the batch footer, read once per application (no timestamp
+    normalization needed — documents carries no temporal column)."""
     tune_session(spark)
     base = sf_dir.rstrip("/")
-    schema = spark.read.parquet(f"{base}/documents.parquet").schema
+    schema = read_fixture(spark, f"{base}/documents.parquet").schema
     return spark.readStream.schema(schema).parquet(f"{base}/documents.parque*")

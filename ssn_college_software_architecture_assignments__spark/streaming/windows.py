@@ -18,6 +18,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_fixture
 from ..operators.curation import _X6D_ORACLE as _X6D_ORACLE_REF
 from ..registry import register
 from ..scratch import scratch_dir
@@ -224,7 +225,8 @@ def t7_incremental_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    back = spark.read.parquet(out_dir)
+    # the sink's schema is the stream's: declaring it skips a footer job
+    back = spark.read.schema(transformed.schema).parquet(out_dir)
     return back.groupBy("event_type").agg(
         F.count("*").alias("n"),
         F.sum("value_cents").alias("total_cents"),
@@ -568,7 +570,7 @@ def foreachbatch_contamination(bench_docs_path: str, out_base: str):
 
     def probe(batch_df: DataFrame, batch_id: int) -> None:
         s = batch_df.sparkSession
-        bench_docs = s.read.parquet(bench_docs_path).filter(
+        bench_docs = read_fixture(s, bench_docs_path).filter(
             F.col("doc_id") % 50 == 0
         )
         bench = (

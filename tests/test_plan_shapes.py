@@ -938,12 +938,16 @@ def test_x3y_mips_corpus_never_shuffles_before_kernel(spark):
     """x3y: the corpus streams into the matmul kernel map-side — no
     join of any kind in the plan (queries ride the kernel closure), and
     the only exchange feeds the tiny candidate window (batches x Q x k
-    rows), never the corpus."""
+    rows), never the corpus. The kernel runs on the scan's own splits:
+    no round-robin repartition feeds MapInPandas (each extra Python
+    task costs more than the kernel's work on a fixture split)."""
     plan = _plan(spark, "x3y_mips_matmul_topk")
     assert "CartesianProduct" not in plan
     for node in ("SortMergeJoin", "BroadcastHashJoin", "ShuffledHashJoin",
                  "BroadcastNestedLoopJoin"):
         assert node not in plan
+    assert "MapInPandas" in plan
+    assert "RoundRobinPartitioning" not in plan
 
 
 def test_x2z_audit_builds_pairs_from_indexes_only(spark):
